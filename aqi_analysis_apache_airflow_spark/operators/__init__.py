@@ -9,10 +9,11 @@ from .project import (
     with_source_id,
 )
 from .skew import salted_join
-from .surrogate import next_key_offset, with_surrogate_keys
+from .surrogate import assign_missing_keys
 
 __all__ = [
     "anti_join",
+    "assign_missing_keys",
     "cdc_window",
     "derive_measured_date",
     "dim_join",
@@ -20,12 +21,10 @@ __all__ = [
     "full_outer_union_keys",
     "keep_first",
     "merge_upsert",
-    "next_key_offset",
     "not_in",
     "null_normalize",
     "rename_columns",
     "salted_join",
     "with_audit_columns",
     "with_source_id",
-    "with_surrogate_keys",
 ]

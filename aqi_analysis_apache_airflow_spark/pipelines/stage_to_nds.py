@@ -20,25 +20,30 @@ Update semantics are replicated exactly: a matched state updates ONLY
 ``last_updated`` to now (not the source's value) — ``:151-154``.
 
 Surrogate keys: existing rows keep theirs; new rows get
-``current_max + row_number`` over a deterministic order (dense
-strategy — fine for dim tables; see operators/surrogate.py for the
-100 TB fact-table variant).
+``current_max + row_number`` over a deterministic order
+(``operators.surrogate.assign_missing_keys``). ``current_max``
+is a broadcast one-row aggregate of the table the rows are merged
+into, so each MERGE stays one lazy plan that runs once, in its write,
+instead of a second time for an eager max.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.filters import anti_join, not_in
 from ..operators.dedupe import keep_first
 from ..operators.merge import merge_upsert
+from ..operators.surrogate import assign_missing_keys
 from ..schemas import (
     COUNTY_NDS_SCHEMA,
     MEASUREMENT_NDS_SCHEMA,
+    STATE_AQI_STAGE_SCHEMA,
     STATE_NDS_SCHEMA,
+    US_COUNTIES_STAGE_SCHEMA,
 )
 from .source_to_stage import AQI_STAGE, COUNTIES_STAGE
 from .warehouse import Warehouse
@@ -50,20 +55,6 @@ MEASUREMENT_NDS = "measurement_nds"
 
 def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
-
-
-def _assign_missing_sks(df: DataFrame, sk_col: str, order_by: list[Column | str]) -> DataFrame:
-    """Give rows with a NULL surrogate key ``max(existing)+row_number``
-    over a deterministic order (the distributed analog of the Postgres
-    identity column the reference leans on)."""
-    max_sk = (df.agg(F.max(sk_col).alias("m")).first() or {"m": None})["m"] or 0
-    w = Window.partitionBy(F.col(sk_col).isNull()).orderBy(*order_by)
-    return df.withColumn(
-        sk_col,
-        F.when(
-            F.col(sk_col).isNull(), F.row_number().over(w) + F.lit(max_sk)
-        ).otherwise(F.col(sk_col)),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -82,7 +73,10 @@ def merged_state_source(aqi_stage: DataFrame, counties_stage: DataFrame) -> Data
 def upsert_states(wh: Warehouse, now: datetime | None = None) -> None:
     now = now or _now()
     target = wh.read(STATE_NDS, STATE_NDS_SCHEMA)
-    source = merged_state_source(wh.read(AQI_STAGE), wh.read(COUNTIES_STAGE))
+    source = merged_state_source(
+        wh.read(AQI_STAGE, STATE_AQI_STAGE_SCHEMA),
+        wh.read(COUNTIES_STAGE, US_COUNTIES_STAGE_SCHEMA),
+    )
     merged = merge_upsert(
         target,
         source,
@@ -96,7 +90,7 @@ def upsert_states(wh: Warehouse, now: datetime | None = None) -> None:
             "source_id": 1,
         },
     )
-    merged = _assign_missing_sks(merged, "state_id_sk", ["state_name"])
+    merged = assign_missing_keys(merged, "state_id_sk", ["state_name"], target)
     wh.overwrite(merged, STATE_NDS)
 
 
@@ -124,7 +118,10 @@ def merged_county_source(counties_stage: DataFrame, state_nds: DataFrame) -> Dat
 def upsert_counties(wh: Warehouse, now: datetime | None = None) -> None:
     now = now or _now()
     target = wh.read(COUNTY_NDS, COUNTY_NDS_SCHEMA)
-    source = merged_county_source(wh.read(COUNTIES_STAGE), wh.read(STATE_NDS))
+    source = merged_county_source(
+        wh.read(COUNTIES_STAGE, US_COUNTIES_STAGE_SCHEMA),
+        wh.read(STATE_NDS, STATE_NDS_SCHEMA),
+    )
     merged = merge_upsert(
         target,
         source,
@@ -138,7 +135,9 @@ def upsert_counties(wh: Warehouse, now: datetime | None = None) -> None:
             "source_id": 1,
         },
     )
-    merged = _assign_missing_sks(merged, "county_id_sk", ["county_fips", "county_name"])
+    merged = assign_missing_keys(
+        merged, "county_id_sk", ["county_fips", "county_name"], target
+    )
     wh.overwrite(merged, COUNTY_NDS)
     backfill_counties_from_measurements(wh, now)
     patch_windham(wh, now)
@@ -152,7 +151,7 @@ def backfill_counties_from_measurements(wh: Warehouse, now: datetime | None = No
     insert, exactly like the reference's SQL."""
     now = now or _now()
     county = wh.read(COUNTY_NDS, COUNTY_NDS_SCHEMA)
-    aqi = wh.read(AQI_STAGE)
+    aqi = wh.read(AQI_STAGE, STATE_AQI_STAGE_SCHEMA)
     state = wh.read(STATE_NDS, STATE_NDS_SCHEMA)
     src = (
         not_in(aqi.select("county_name", "state_name"), "county_name", county, "county_name")
@@ -179,9 +178,9 @@ def patch_windham(wh: Warehouse, now: datetime | None = None) -> None:
     the patch idempotent; first-run output is identical."""
     now = now or _now()
     county = wh.read(COUNTY_NDS, COUNTY_NDS_SCHEMA)
-    aqi = wh.read(AQI_STAGE)
+    aqi = wh.read(AQI_STAGE, STATE_AQI_STAGE_SCHEMA)
     state = wh.read(STATE_NDS, STATE_NDS_SCHEMA)
-    counties_stage = wh.read(COUNTIES_STAGE)
+    counties_stage = wh.read(COUNTIES_STAGE, US_COUNTIES_STAGE_SCHEMA)
     src = (
         anti_join(
             aqi.filter(F.col("county_name") == "Windham").select(
@@ -208,8 +207,8 @@ def _append_partial_counties(wh: Warehouse, county: DataFrame, src: DataFrame) -
         if f.name not in src.columns:
             src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
     src = src.select(*[f.name for f in COUNTY_NDS_SCHEMA.fields])
-    merged = _assign_missing_sks(
-        county.unionByName(src), "county_id_sk", ["county_name", "state_id_sk"]
+    merged = assign_missing_keys(
+        county.unionByName(src), "county_id_sk", ["county_name", "state_id_sk"], county
     )
     wh.overwrite(merged, COUNTY_NDS)
 
@@ -227,7 +226,8 @@ def merged_measurement_source(
     then AQI ⋈ on (state_name, county_name), then keep-first dedup on
     the measurement natural key. The reference's keep-first depends on
     pandas row order; we order deterministically by (created,
-    last_updated, county_id_sk)."""
+    last_updated, county_id_sk). Keep-first also drops exact duplicate
+    AQI rows, so no DISTINCT (and no extra exchange) precedes it."""
     s = state_nds.select("state_id_sk", "state_name").distinct()
     c = county_nds.select("county_id_sk", "state_id_sk", "county_name").distinct()
     dims = s.join(c, on="state_id_sk", how="inner")
@@ -242,7 +242,7 @@ def merged_measurement_source(
         "num_of_sites_reporting",
         "created",
         "last_updated",
-    ).distinct()
+    )
     joined = a.join(F.broadcast(dims), on=["state_name", "county_name"], how="inner")
     return keep_first(
         joined,
@@ -255,7 +255,7 @@ def upsert_measurements(wh: Warehouse, now: datetime | None = None) -> None:
     now = now or _now()
     target = wh.read(MEASUREMENT_NDS, MEASUREMENT_NDS_SCHEMA)
     source = merged_measurement_source(
-        wh.read(AQI_STAGE),
+        wh.read(AQI_STAGE, STATE_AQI_STAGE_SCHEMA),
         wh.read(STATE_NDS, STATE_NDS_SCHEMA),
         wh.read(COUNTY_NDS, COUNTY_NDS_SCHEMA),
     )
@@ -274,10 +274,11 @@ def upsert_measurements(wh: Warehouse, now: datetime | None = None) -> None:
             "source_id": 1,
         },
     )
-    merged = _assign_missing_sks(
+    merged = assign_missing_keys(
         merged,
         "measurement_id_sk",
         ["measured_date", "defining_site", "defining_parameter"],
+        target,
     )
     wh.overwrite(merged, MEASUREMENT_NDS)
 

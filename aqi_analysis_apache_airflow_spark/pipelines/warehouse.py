@@ -41,12 +41,19 @@ class Warehouse:
 
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
         """Read a table; a missing table with a known schema reads as
-        empty (the reference's freshly-created Postgres tables)."""
+        empty (the reference's freshly-created Postgres tables).
+
+        With ``schema`` the read is schema-on-read: the declared
+        StructType is trusted and no job runs to infer it from the
+        parquet footers (Spark runs one per bare ``read.parquet``). The
+        declaration must match what the pipelines write — a drifted
+        column reads as NULL."""
         if not self.exists(table):
             if schema is None:
                 raise FileNotFoundError(self.path(table))
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(self.path(table))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(table))
 
     def overwrite(self, df: DataFrame, table: str) -> None:
         """Stage-and-swap overwrite (safe even when ``df`` reads from
