@@ -21,10 +21,11 @@ Update semantics are replicated exactly: a matched state updates ONLY
 
 Surrogate keys: existing rows keep theirs; new rows get
 ``current_max + row_number`` over a deterministic order
-(``operators.surrogate.assign_missing_keys``). ``current_max``
-is a broadcast one-row aggregate of the table the rows are merged
-into, so each MERGE stays one lazy plan that runs once, in its write,
-instead of a second time for an eager max.
+(``operators.surrogate.assign_missing_keys``). Both come from one
+window over the merged rows — one exchange, one task, and Spark's
+``No Partition Defined for Window operation!`` WARN — so each MERGE
+stays one lazy plan that runs once, in its write, instead of a second
+time for an eager max.
 """
 
 from __future__ import annotations
@@ -90,7 +91,7 @@ def upsert_states(wh: Warehouse, now: datetime | None = None) -> None:
             "source_id": 1,
         },
     )
-    merged = assign_missing_keys(merged, "state_id_sk", ["state_name"], target)
+    merged = assign_missing_keys(merged, "state_id_sk", ["state_name"])
     wh.overwrite(merged, STATE_NDS)
 
 
@@ -101,7 +102,8 @@ def upsert_states(wh: Warehouse, now: datetime | None = None) -> None:
 
 def merged_county_source(counties_stage: DataFrame, state_nds: DataFrame) -> DataFrame:
     """``get_merged_county_data`` source (``stage_to_nds.py:87-106``):
-    distinct counties ⋈ state_nds (broadcast dim) for FK resolution."""
+    distinct counties ⋈ state_nds (broadcast dim) for FK resolution.
+    state_id_sk is unique, so the dim projection needs no DISTINCT."""
     c = counties_stage.select(
         "county_name",
         "county_fips",
@@ -111,7 +113,7 @@ def merged_county_source(counties_stage: DataFrame, state_nds: DataFrame) -> Dat
         "longitude",
         "county_population",
     ).distinct()
-    s = state_nds.select("state_id_sk", "state_name").distinct()
+    s = state_nds.select("state_id_sk", "state_name")
     return c.join(F.broadcast(s), on="state_name", how="inner").drop("state_name")
 
 
@@ -135,9 +137,7 @@ def upsert_counties(wh: Warehouse, now: datetime | None = None) -> None:
             "source_id": 1,
         },
     )
-    merged = assign_missing_keys(
-        merged, "county_id_sk", ["county_fips", "county_name"], target
-    )
+    merged = assign_missing_keys(merged, "county_id_sk", ["county_fips", "county_name"])
     wh.overwrite(merged, COUNTY_NDS)
     backfill_counties_from_measurements(wh, now)
     patch_windham(wh, now)
@@ -208,7 +208,7 @@ def _append_partial_counties(wh: Warehouse, county: DataFrame, src: DataFrame) -
             src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
     src = src.select(*[f.name for f in COUNTY_NDS_SCHEMA.fields])
     merged = assign_missing_keys(
-        county.unionByName(src), "county_id_sk", ["county_name", "state_id_sk"], county
+        county.unionByName(src), "county_id_sk", ["county_name", "state_id_sk"]
     )
     wh.overwrite(merged, COUNTY_NDS)
 
@@ -227,9 +227,10 @@ def merged_measurement_source(
     the measurement natural key. The reference's keep-first depends on
     pandas row order; we order deterministically by (created,
     last_updated, county_id_sk). Keep-first also drops exact duplicate
-    AQI rows, so no DISTINCT (and no extra exchange) precedes it."""
-    s = state_nds.select("state_id_sk", "state_name").distinct()
-    c = county_nds.select("county_id_sk", "state_id_sk", "county_name").distinct()
+    AQI rows, and the dim projections carry their unique surrogate
+    keys, so no DISTINCT (and no extra exchange) precedes either join."""
+    s = state_nds.select("state_id_sk", "state_name")
+    c = county_nds.select("county_id_sk", "state_id_sk", "county_name")
     dims = s.join(c, on="state_id_sk", how="inner")
     a = aqi_stage.select(
         "county_name",
@@ -278,7 +279,6 @@ def upsert_measurements(wh: Warehouse, now: datetime | None = None) -> None:
         merged,
         "measurement_id_sk",
         ["measured_date", "defining_site", "defining_parameter"],
-        target,
     )
     wh.overwrite(merged, MEASUREMENT_NDS)
 

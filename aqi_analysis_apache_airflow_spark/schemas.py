@@ -140,15 +140,6 @@ MEASUREMENT_NDS_SCHEMA = T.StructType(
     ]
 )
 
-#: CET/LSET control table (``dags/etl/source_to_stage.py:12,22,40-42``).
-METADATA_SCHEMA = T.StructType(
-    [
-        T.StructField("table_name", T.StringType(), False),
-        T.StructField("cet", T.TimestampType()),
-        T.StructField("lset", T.TimestampType()),
-    ]
-)
-
 #: Natural (upsert) keys per NDS table (``dags/etl/stage_to_nds.py:16,61,145-149``).
 NDS_NATURAL_KEYS = {
     "state_nds": ["state_name"],

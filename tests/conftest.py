@@ -3,6 +3,8 @@ from __future__ import annotations
 import importlib.util
 import os
 import sys
+import time
+from contextlib import contextmanager
 
 import pytest
 
@@ -34,3 +36,26 @@ from aqi_analysis_apache_airflow_spark.session import get_spark
 def spark():
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
+
+
+@contextmanager
+def jobs_started(sc):
+    """Yield a list that holds, after the block, the ids of the Spark
+    jobs the block started. Listener events arrive asynchronously, so a
+    sentinel job in its own group is run after the block and awaited:
+    events are delivered in order, so once it shows up every earlier
+    job does too."""
+    tag = f"jobs-started-{time.monotonic_ns()}"
+    ids: list[int] = []
+    sc.setJobGroup(tag, tag)
+    try:
+        yield ids
+    finally:
+        sc.setJobGroup(tag + "-sentinel", tag)
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not st.getJobIdsForGroup(tag + "-sentinel") and time.monotonic() < deadline:
+            time.sleep(0.05)
+        ids.extend(st.getJobIdsForGroup(tag))

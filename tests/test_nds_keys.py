@@ -19,11 +19,10 @@ from __future__ import annotations
 
 import csv
 import os
-import time
-from contextlib import contextmanager
 from datetime import date, datetime
 
 import pytest
+from conftest import jobs_started
 
 from aqi_analysis_apache_airflow_spark.pipelines import stage_to_nds as s2n
 from aqi_analysis_apache_airflow_spark.pipelines.metadata import set_cet, set_lset
@@ -212,29 +211,6 @@ def test_dp1_numbered_after_master_inserts(loaded):
         ("York", "23031"): top + 2,
         ("Phantom", None): top + 3,
     }
-
-
-@contextmanager
-def jobs_started(sc):
-    """Yield a list that holds, after the block, the ids of the Spark
-    jobs the block started. Listener events arrive asynchronously, so a
-    sentinel job in its own group is run after the block and awaited:
-    events are delivered in order, so once it shows up every earlier
-    job does too."""
-    tag = f"nds-keys-{time.monotonic_ns()}"
-    ids: list[int] = []
-    sc.setJobGroup(tag, tag)
-    try:
-        yield ids
-    finally:
-        sc.setJobGroup(tag + "-sentinel", tag)
-        sc.parallelize([0], 1).count()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        st = sc.statusTracker()
-        deadline = time.monotonic() + 30
-        while not st.getJobIdsForGroup(tag + "-sentinel") and time.monotonic() < deadline:
-            time.sleep(0.05)
-        ids.extend(st.getJobIdsForGroup(tag))
 
 
 @pytest.fixture
