@@ -1,3 +1,3 @@
-from .scalar import aqi_category, bucketize
+from .scalar import aqi_category
 
-__all__ = ["aqi_category", "bucketize"]
+__all__ = ["aqi_category"]

@@ -4,81 +4,24 @@ guide §3.3 "materialising an intermediate truncates the plan" / §5
 
 Spark plans are trees: a DataFrame referenced by k downstream
 consumers appears k times in the final plan, and everything below it
-— including corpus-sized scans, explodes and windows — re-executes
-once per consumer unless an identical Exchange happens to be reused.
-Round 13 measured this mechanism directly: the scan-spread A/Bs lost
-on exactly the multi-consumer queries (kn1, lm2, bpe2/3, drm1, cp2,
-…) because the un-reused spread exchange re-executed per consumer.
-The fix for those plans is not more parallelism but computing the
-shared intermediate ONCE.
+— corpus-sized scans, explodes and windows — re-executes once per
+consumer unless an identical Exchange happens to be reused. An
+unrolled greedy/BFS loop also re-analyzes the whole duplicated tree
+every round; persist materializes but keeps that lineage alive.
 
 ``pin`` localCheckpoints a BOUNDED intermediate (k-row aggregate,
-calendar/vocab/edge-bounded relation — never the raw corpus): the
-lineage is truncated, so every consumer reads the materialized
-partitions instead of replaying the corpus subtree, and the unrolled
-round/consumer plans stop duplicating it at explain level (the
-mmr1/kcore "plans are trees" lesson, applied with a measurement per
-site). Lazy by default (``eager=False``): the first action
-materializes it, later consumers reuse — no extra blocking job at
-construction time (the hits1 precedent).
-
-``pin_wide`` persists (MEMORY_AND_DISK) an UNBOUNDED but
-expensive-to-recompute intermediate (token/shingle explodes) that
-feeds several differently-keyed aggregations, where no Exchange reuse
-can fire — the mem1 precedent. Persist, not checkpoint: at production
-scale the store may spill and partial recompute of a lost partition
-replays only its own lineage slice.
-
-``PIN_ENABLED`` exists for same-JVM interleaved A/Bs
-(``tools/ab_toggle.py``): with the flag off, both helpers are exact
-identities and every call site reproduces its pre-change plan
-bit-for-bit.
+calendar/vocab/edge-bounded relation, one round of a greedy or BFS
+loop — never the raw corpus): every consumer reads the materialized
+partitions and the lineage is cut. It is lazy: the first action
+materializes it and later consumers reuse it, so construction runs no
+extra blocking job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: A/B switch — tools/ab_toggle.py monkeypatches this to False to
-#: reproduce the pre-r14 plans in arm B. Always True in shipped code.
-PIN_ENABLED = True
 
-
-def pin(df: DataFrame, eager: bool = False) -> DataFrame:
-    """localCheckpoint a bounded multi-consumer intermediate; identity
-    when ``PIN_ENABLED`` is off (the A/B arm)."""
-    if not PIN_ENABLED:
-        return df
-    return df.localCheckpoint(eager=eager)
-
-
-#: separate A/B switch for the persist→checkpoint SWAPS (arm B = the
-#: pre-r14 persist, not identity — the sites were already materialized)
-PIN_SWAP_ENABLED = True
-
-
-def pin_over_persist(df: DataFrame) -> DataFrame:
-    """localCheckpoint where the pre-r14 code PERSISTED a bounded
-    per-round relation. Persist materializes but does NOT truncate the
-    logical plan, so an unrolled greedy/BFS loop still grows a
-    duplicated-subtree tree that is re-analyzed every round (mmr1's
-    explain carried 404 scans / 5639 lines with persists in place).
-    The checkpoint keeps the materialization and also cuts the
-    lineage. With the flag off this IS the old persist — the A/B arm.
-    """
-    if not PIN_SWAP_ENABLED:
-        from pyspark.storagelevel import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
+def pin(df: DataFrame) -> DataFrame:
+    """Lazy localCheckpoint of a bounded multi-consumer intermediate."""
     return df.localCheckpoint(eager=False)
-
-
-def pin_wide(df: DataFrame) -> DataFrame:
-    """MEMORY_AND_DISK-persist an unbounded multi-consumer
-    intermediate (mem1 precedent); identity when ``PIN_ENABLED`` is
-    off (the A/B arm)."""
-    if not PIN_ENABLED:
-        return df
-    from pyspark.storagelevel import StorageLevel
-
-    return df.persist(StorageLevel.MEMORY_AND_DISK)

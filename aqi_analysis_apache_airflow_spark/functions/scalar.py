@@ -55,11 +55,3 @@ def aqi_category_sql(col_expr: str) -> str:
         f"ELSE 'Unknown' END"
     )
 
-
-def bucketize(value: Column, bounds: list[tuple[float, float, str]], default: str) -> Column:
-    """Generalized closed-range bucketing (the X4 pattern, parameterized)."""
-    expr = None
-    for lo, hi, label in bounds:
-        cond = (value >= F.lit(lo)) & (value <= F.lit(hi))
-        expr = F.when(cond, F.lit(label)) if expr is None else expr.when(cond, F.lit(label))
-    return expr.otherwise(F.lit(default))

@@ -34,7 +34,10 @@ override no longer silently breaks the estimate.
 Inputs with no file source (in-memory test frames, post-shuffle
 relations whose lineage files cannot be sized) keep the unconditional
 spread — the conservative arm for BOTH helpers (ADVICE r13 #3), and
-the pre-r13 behavior.
+the pre-r13 behavior. Inputs on remote storage (any scheme but
+``file``) count as already split, as in the pre-r14 ``load_spread``:
+they cannot be sized locally, and remote storage is where the spread
+would be a full corpus shuffle.
 
 NOT for partition-SEMANTIC repartitions: a site where the partition
 layout is part of the query definition (mg1's per-partition
@@ -44,6 +47,7 @@ Misra-Gries summaries) must keep its unconditional form.
 from __future__ import annotations
 
 import os
+import sys
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
@@ -92,10 +96,11 @@ def _row_groups(path: str) -> int | None:
 
 
 def _natural_splits(df: DataFrame, quantum: int) -> int | None:
-    """Upper bound on the usable split count of df's file sources, or
-    None when it cannot be determined (no files / non-local / listing
-    failure). Per file: min(ceil(bytes/quantum), row_groups) — a split
-    is only non-empty when it holds a row-group midpoint. Footers are
+    """Upper bound on the usable split count of df's file sources,
+    unbounded (``sys.maxsize``) on remote storage, or None when it
+    cannot be determined (no files / listing or sizing failure). Per
+    file: min(ceil(bytes/quantum), row_groups) — a split is only
+    non-empty when it holds a row-group midpoint. Footers are
     read only when they can lower the verdict below the byte estimate
     (few files, byte estimate already >= the parallelism target is
     checked by the caller)."""
@@ -105,6 +110,8 @@ def _natural_splits(df: DataFrame, quantum: int) -> int | None:
         return None
     if not files:
         return None
+    if any(urlparse(uri).scheme not in ("", "file") for uri in files):
+        return sys.maxsize
     sizes: list[tuple[str, int]] = []
     for uri in files:
         path = urlparse(uri).path or uri

@@ -1,4 +1,4 @@
-"""Dedup / distinct (reference ops A1-A3, SURVEY.md §2.5).
+"""Deterministic keep-first dedup (reference op A3, SURVEY.md §2.5).
 
 The reference's ``drop_duplicates(subset=[...])``
 (``dags/etl/stage_to_nds.py:211``) keeps the FIRST row in pandas
@@ -12,11 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def distinct_on(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """A1/A2: projected DISTINCT (``dags/etl/stage_to_nds.py:38-39`` etc.)."""
-    return (df.select(*cols) if cols else df).distinct()
 
 
 def keep_first(

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from ..functions.scalar import aqi_category
 from ..operators.filters import cdc_window
 from ..sources.readers import read_aqi_csv_glob, read_counties_csv
-from .metadata import get_metadata, set_cet, set_lset
+from .metadata import get_metadata
 from .warehouse import Warehouse
 
 #: EPA header → stage column map (``dags/etl/source_to_stage.py:55-68``),
@@ -98,15 +98,3 @@ def transform_counties(raw: DataFrame) -> DataFrame:
 def process_counties_file(wh: Warehouse, counties_csv: str) -> None:
     wh.overwrite(transform_counties(read_counties_csv(wh.spark, counties_csv)), COUNTIES_STAGE)
 
-
-def run_source_to_stage(wh: Warehouse, source_dir: str, counties_csv: str) -> None:
-    """The two stage task-groups (``dags/etl/main.py:14-66``):
-    set_cet → truncate → get_metadata → load → set_lset, per table.
-    Truncate+load is one atomic overwrite here."""
-    set_cet(wh, AQI_STAGE)
-    process_aqi_files(wh, source_dir)
-    set_lset(wh, AQI_STAGE)
-
-    set_cet(wh, COUNTIES_STAGE)
-    process_counties_file(wh, counties_csv)
-    set_lset(wh, COUNTIES_STAGE)

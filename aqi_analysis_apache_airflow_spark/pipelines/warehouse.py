@@ -67,62 +67,6 @@ class Warehouse:
             shutil.rmtree(final)
         os.replace(staging, final)
 
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self.path(table))
-
-    def overwrite_partitioned(
-        self, df: DataFrame, table: str, partition_cols: list[str]
-    ) -> None:
-        """Hive-style partitioned layout (``.../col=value/``): a filter
-        on a partition column prunes whole directories at plan time —
-        for the NDS tables, partitioning measurements by
-        ``year(measured_date)`` matches the reference's per-year source
-        files and turns the nightly CDC re-read into a one-partition
-        scan instead of a 100 TB sweep."""
-        final = self.path(table)
-        staging = final + ".staging"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.replace(staging, final)
-
-    def overwrite_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_keys: list[str],
-        n_buckets: int,
-        sort_keys: list[str] | None = None,
-    ) -> None:
-        """Write a bucketed (and optionally sorted) table.
-
-        Two tables bucketed on the same keys into the same bucket count
-        join WITHOUT an exchange — the shuffle is paid once at write
-        time and amortized over every subsequent join/aggregation on
-        the bucket key. This is the 100 TB strategy for the NDS fact
-        tables (bucket measurement_nds by its natural key) and for
-        repeated fact-fact joins. Bucketing metadata lives in the
-        session catalog; production deployments back it with a
-        metastore (or use Delta/Iceberg clustering).
-        """
-        writer = (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .option("path", self.path(table))
-            .bucketBy(n_buckets, *bucket_keys)
-        )
-        if sort_keys:
-            writer = writer.sortBy(*sort_keys)
-        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
-        writer.saveAsTable(table)
-
-    def read_bucketed(self, table: str) -> DataFrame:
-        """Catalog read — required for the planner to see bucket spec
-        (a plain path read would discard it)."""
-        return self.spark.table(table)
-
     def truncate(self, table: str) -> None:
         """S7: the reference truncates stage tables before reload
         (``dags/etl/source_to_stage.py:28-35``). With stage-and-swap

@@ -470,7 +470,7 @@ def assort1_degree_assortativity(
     # pin the doubled edge list (edge-bounded — the gr1/hits1 persist
     # precedent): deg + the two degree joins reference it 4× and each
     # reference replays the corpus join + distinct (guide §3.3; A/B
-    # tools/ab_r14_pin.json)
+    # git show 555704a:tools/ab_r14_pin.json)
     e = pin(
         e0.unionAll(
             e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -2270,7 +2270,7 @@ def pacf1_partial_autocorrelation(
     # pin the calendar-bounded dense series: it feeds tot + num0 +
     # both lag self-join sides (~6 consumers), each of which would
     # otherwise replay the corpus-sized date-counting groupBy
-    # (guide §3.3; A/B tools/ab_r14_pin.json)
+    # (guide §3.3; A/B git show 555704a:tools/ab_r14_pin.json)
     dense = pin(
         spine.join(daily, "d", "left")
         .select(
@@ -3250,7 +3250,7 @@ def markov2_stationary_distribution(
     # (340 Exchanges) and re-plans it per consumer — guide §3.3
     # "materialising an intermediate truncates the plan". Values
     # unchanged (same floor arithmetic); A/B 2026-08-18 in
-    # tools/ab_r14_pin.json.
+    # git show 555704a:tools/ab_r14_pin.json.
     states = trans0.select(F.col("prev_type").alias("s")).distinct()
     closed = trans0.join(
         F.broadcast(states.withColumnRenamed("s", "next_type")), "next_type"

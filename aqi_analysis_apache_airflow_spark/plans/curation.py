@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.materialize import pin, pin_over_persist
+from ..functions.materialize import pin
 from ..functions.dedup import CE_HASH64_SQL, ce_hash64, tokens
 from .registry import load, load_spread, query
 
@@ -965,7 +965,8 @@ def _km1_fit(spark: SparkSession, sf_dir: str):
         if i < _KM1_ITERS:
             # pin the k×dims-row centroid table: the next round's
             # distance join re-derives the whole assignment chain
-            # otherwise (guide §3.3; A/B tools/ab_r14_km.json)
+            # otherwise (guide §3.3; A/B
+            # git show 555704a:tools/ab_r14_km.json)
             cent = pin(
                 qx.join(asg.select("vec_id", "cid"), "vec_id")
                 .groupBy("cid", "pos")
@@ -1210,23 +1211,24 @@ def sp1_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frontier = visited.select("node")
     for depth in range(1, _SP_MAX_DEPTH + 1):
-        # r14: localCheckpoint (flag-swappable to the pre-r14 persist)
-        # for the per-round handover — persist materializes but keeps
-        # the whole union-chain lineage alive (386 scans at explain),
-        # re-analyzed every round (A/B tools/ab_r14_swap.json)
-        nxt = pin_over_persist(
+        # r14: localCheckpoint for the per-round handover — persist
+        # materializes but keeps the whole union-chain lineage alive
+        # (386 scans at explain), re-analyzed every round (A/B
+        # git show 555704a:tools/ab_r14_swap.json)
+        nxt = pin(
             frontier.join(edges, frontier["node"] == edges["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
         )
         if nxt.isEmpty():
-            nxt.unpersist()
             break
-        nv = pin_over_persist(
+        nv = pin(
             visited.unionAll(nxt.withColumn("dist", F.lit(depth)))
         )
         nv.count()  # materialize before releasing the parent cache
+        # frees round 1's persisted seed (a no-op on later rounds);
+        # checkpoint blocks are left to the ContextCleaner
         visited.unpersist()
         visited = nv
         frontier = nxt.select("node")
@@ -4400,7 +4402,8 @@ def acf1_daily_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin the calendar-bounded dense series: its stats/pair consumers
     # would otherwise each replay the corpus-sized (type, date)
-    # counting groupBy — guide §3.3 (A/B tools/ab_r14_pin.json)
+    # counting groupBy — guide §3.3 (A/B
+    # git show 555704a:tools/ab_r14_pin.json)
     dense = pin(
         bounds.select(
             "event_type", F.explode(F.sequence("d0", "d1")).alias("d")
@@ -4698,7 +4701,8 @@ def mk1_trend_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin the calendar-bounded dense series: its stats/pair consumers
     # would otherwise each replay the corpus-sized (type, date)
-    # counting groupBy — guide §3.3 (A/B tools/ab_r14_pin.json)
+    # counting groupBy — guide §3.3 (A/B
+    # git show 555704a:tools/ab_r14_pin.json)
     dense = pin(
         bounds.select(
             "event_type", F.explode(F.sequence("d0", "d1")).alias("d")

@@ -2060,7 +2060,7 @@ def _bpe2_rounds(spark: SparkSession, sf_dir: str):
     # previous, so unpinned tables replay the corpus token explode and
     # the whole merge chain per consumer — the measured mechanism
     # behind bpe2/bpe3's r13 spread losses (guide §3.3; A/B
-    # tools/ab_r14_pin.json)
+    # git show 555704a:tools/ab_r14_pin.json)
     cur = pin(w0.select("freq", syms0.alias("syms")))
     rounds = [cur]
     tops = []

@@ -587,12 +587,12 @@ def lm2_bigram_predictability(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = F.arrays_zip(
         F.slice(t, 1, length).alias("w1"), F.slice(t, 2, length).alias("w2")
     )
-    # NOT persisted (r14 A/B, tools/ab_r14_pin{,2,3}.json: 0.90/1.01/
-    # 1.02 — no consistent win): c12, c1 and the scoring join DO
-    # re-run this explode (three differently-keyed consumers, no
-    # reusable Exchange), but the explode is cheap enough that
-    # materializing the token-sized intermediate returns only what it
-    # costs.
+    # NOT persisted (r14 A/B,
+    # git show 555704a:tools/ab_r14_pin{,2,3}.json: 0.90/1.01/1.02 —
+    # no consistent win): c12, c1 and the scoring join DO re-run this
+    # explode (three differently-keyed consumers, no reusable
+    # Exchange), but the explode is cheap enough that materializing
+    # the token-sized intermediate returns only what it costs.
     big = docs.select(
         "doc_id", F.explode(pairs).alias("bg")
     ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))

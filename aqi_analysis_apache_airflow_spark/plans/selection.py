@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.materialize import pin, pin_over_persist
+from ..functions.materialize import pin
 from ..functions.dedup import CE_HASH64_SQL, ce_hash64, tokens
 from ..functions.graph import (
     dim_broadcast_gate,
@@ -111,12 +111,13 @@ def _ranked_arms(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     semantic top-``_RRF_POOL`` against the vec_id=0 probe. Each arm
     reduces the corpus via TakeOrderedAndProject; the rank windows run
     on the pooled ≤50-row lists only."""
-    # NOT pinned (r14 A/B, tools/ab_r14_pin{,2}.json): checkpointing
-    # both arms measured a NET LOSS across the three consumers (rr1
-    # 1.06/1.19, rbo1 1.12/1.12, tau1 0.98/0.98) — the arms' corpus
-    # reductions are TakeOrdered heaps whose re-execution is cheaper
-    # than the per-arm checkpoint round-trip, and the single-reference
-    # consumers (rr1/rbo1) pay the checkpoint for nothing.
+    # NOT pinned (r14 A/B, git show 555704a:tools/ab_r14_pin{,2}.json):
+    # checkpointing both arms measured a NET LOSS across the three
+    # consumers (rr1 1.06/1.19, rbo1 1.12/1.12, tau1 0.98/0.98) — the
+    # arms' corpus reductions are TakeOrdered heaps whose re-execution
+    # is cheaper than the per-arm checkpoint round-trip, and the
+    # single-reference consumers (rr1/rbo1) pay the checkpoint for
+    # nothing.
     lex = (
         bm25_doc_scores(spark, sf_dir)
         .orderBy(F.col("score").desc(), "doc_id")
@@ -1001,10 +1002,11 @@ def kcen1_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         # table AND the union's left arm both consume it, and without
         # the persist the shared subtree re-executes exponentially
         # (the kcore1 lesson; measured 5.6s -> ~2s at sf0.1)
-        # persist, NOT localCheckpoint (r14 A/B tools/ab_r14_swap{,2}
-        # .json: swap measured 1.10/1.13 LOSS — the 4-round chain is
-        # shallow enough that the checkpoint round-trip costs more
-        # than the lineage re-analysis it saves)
+        # persist, NOT localCheckpoint (r14 A/B
+        # git show 555704a:tools/ab_r14_swap{,2}.json: swap measured
+        # 1.10/1.13 LOSS — the 4-round chain is shallow enough that the
+        # checkpoint round-trip costs more than the lineage re-analysis
+        # it saves)
         cset = cset.unionAll(
             qx.join(F.broadcast(win), "vec_id").select(
                 F.col("vec_id").cast("long").alias("cid"),
@@ -1159,11 +1161,11 @@ def mmr1_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("rel").desc(), "vec_id")
         .limit(_MMR_POOL)
     )
-    # r14: localCheckpoint (flag-swappable to the pre-r14 persist)
-    # instead of persist for the three materialized stages — persist
-    # kept the 404-scan/5639-line lineage alive through every greedy
-    # round's re-analysis (A/B tools/ab_r14_swap.json)
-    pool = pin_over_persist(pool)
+    # r14: localCheckpoint instead of persist for the three
+    # materialized stages — persist kept the 404-scan/5639-line
+    # lineage alive through every greedy round's re-analysis (A/B
+    # git show 555704a:tools/ab_r14_swap.json)
+    pool = pin(pool)
     pa = pool.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea")
     )
@@ -1174,7 +1176,7 @@ def mmr1_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pa.join(pb, F.col("va") != F.col("vb"))
         .select("va", "vb", cosine(F.col("ea"), F.col("eb")).alias("s"))
     )
-    pp = pin_over_persist(pp)
+    pp = pin(pp)
     sel = (
         pool.orderBy(F.col("rel").desc(), "vec_id")
         .limit(1)
@@ -1234,7 +1236,7 @@ def mmr1_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # nested lambdas at this depth. The in-plan join form stays:
         # ~1s/round scheduling floor at sf0.1, constant-bounded (pool
         # ≤20 rows) and independent of corpus size at 100 TB.
-        sel = pin_over_persist(sel.unionAll(win))
+        sel = pin(sel.unionAll(win))
     lamc = F.lit(_MMR_LAM)
     return sel.select(
         "vec_id",
@@ -2042,8 +2044,9 @@ def cp2_selection_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
         )
     )
-    # NOT pinned (r14 A/B, tools/ab_r14_pin{,2,3,4}.json: 1.04/0.98/
-    # 0.93/1.02 — no consistent win): the winnow chain, anti-join and
+    # NOT pinned (r14 A/B,
+    # git show 555704a:tools/ab_r14_pin{,2,3,4}.json: 1.04/0.98/0.93/
+    # 1.02 — no consistent win): the winnow chain, anti-join and
     # n_capped count do replay the entropy gate, but the replays are
     # cheaper than checkpointing the text-carrying capped stage.
     capped = gate.withColumn("rk", rk).filter(F.col("rk") <= _CP2_CAP).drop("rk")
@@ -5197,7 +5200,7 @@ def drm1_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin the n_sources-row CE table: m/ex/tot/q/lv/rank all derive
     # from it and each reference replays the ppx1 scoring corpus pass
-    # (guide §3.3; A/B tools/ab_r14_pin.json)
+    # (guide §3.3; A/B git show 555704a:tools/ab_r14_pin.json)
     ce = pin(
         src.select(
             "source",
@@ -5648,7 +5651,7 @@ def kn1_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final join are FIVE consumers, each otherwise replaying the
     # bigram explode + (w1,w2) aggregation — the measured mechanism
     # behind kn1's r13 spread loss (guide §3.3; A/B
-    # tools/ab_r14_pin.json)
+    # git show 555704a:tools/ab_r14_pin.json)
     c12 = pin(
         big.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c"))
     )
@@ -6196,7 +6199,8 @@ def ppmi1_sppmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p.w1", "p.w2")
     # pin the vocab²-bounded co-occurrence table: marg (×2), dd and
     # the output join all derive from it and would each replay the
-    # token-pair explode (guide §3.3; A/B tools/ab_r14_pin.json)
+    # token-pair explode (guide §3.3; A/B
+    # git show 555704a:tools/ab_r14_pin.json)
     cxy = pin(
         co.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c"))
     )

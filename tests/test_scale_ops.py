@@ -25,19 +25,32 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _bucketed(df, table: str, key: str, root):
+    """Write ``df`` as an 8-bucket table sorted on ``key`` and read it
+    back through the catalog — a plain path read would discard the
+    bucket spec the planner needs."""
+    spark = df.sparkSession
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    (
+        df.write.mode("overwrite")
+        .option("path", str(root / table))
+        .bucketBy(8, key)
+        .sortBy(key)
+        .saveAsTable(table)
+    )
+    return spark.table(table)
+
+
 def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
-    wh = Warehouse(spark, str(tmp_path_factory.mktemp("bucketed")))
+    root = tmp_path_factory.mktemp("bucketed")
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
         "l_orderkey", "l_quantity"
     )
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
     )
-    wh.overwrite_bucketed(li, "li_b", ["l_orderkey"], 8, sort_keys=["l_orderkey"])
-    wh.overwrite_bucketed(orders, "ord_b", ["o_orderkey"], 8, sort_keys=["o_orderkey"])
-
-    joined = wh.read_bucketed("li_b").join(
-        wh.read_bucketed("ord_b"),
+    joined = _bucketed(li, "li_b", "l_orderkey", root).join(
+        _bucketed(orders, "ord_b", "o_orderkey", root),
         F.col("l_orderkey") == F.col("o_orderkey"),
     )
     p = _plan(joined)
@@ -56,7 +69,7 @@ def test_bucketed_merge_upsert_no_exchange(spark, tmp_path_factory):
     of reshuffling the whole warehouse table every run."""
     from aqi_analysis_apache_airflow_spark.operators.merge import merge_upsert
 
-    wh = Warehouse(spark, str(tmp_path_factory.mktemp("bucketed_merge")))
+    root = tmp_path_factory.mktemp("bucketed_merge")
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -64,11 +77,10 @@ def test_bucketed_merge_upsert_no_exchange(spark, tmp_path_factory):
     src = orders.filter(F.col("o_orderkey") % 2 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
     )
-    wh.overwrite_bucketed(tgt, "m_tgt", ["o_orderkey"], 8, sort_keys=["o_orderkey"])
-    wh.overwrite_bucketed(src, "m_src", ["o_orderkey"], 8, sort_keys=["o_orderkey"])
-
     merged = merge_upsert(
-        wh.read_bucketed("m_tgt"), wh.read_bucketed("m_src"), ["o_orderkey"]
+        _bucketed(tgt, "m_tgt", "o_orderkey", root),
+        _bucketed(src, "m_src", "o_orderkey", root),
+        ["o_orderkey"],
     )
     assert "Exchange hashpartitioning" not in _plan(merged)
     # identical values to the unbucketed path
@@ -195,7 +207,7 @@ def test_partitioned_write_prunes(spark, tmp_path_factory):
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").withColumn(
         "order_year", F.year("o_orderdate")
     )
-    wh.overwrite_partitioned(orders, "orders_by_year", ["order_year"])
+    orders.write.partitionBy("order_year").parquet(wh.path("orders_by_year"))
 
     pruned = wh.read("orders_by_year").filter(F.col("order_year") == 1996)
     p = _plan(pruned)
@@ -216,7 +228,7 @@ def test_dynamic_partition_pruning(spark, tmp_path_factory):
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").withColumn(
         "order_year", F.year("o_orderdate")
     )
-    wh.overwrite_partitioned(orders, "orders_dpp", ["order_year"])
+    orders.write.partitionBy("order_year").parquet(wh.path("orders_dpp"))
 
     # DPP's benefit heuristic requires a SELECTIVE predicate on the
     # build side — a bare one-row dim doesn't qualify, a filtered dim

@@ -79,19 +79,26 @@ def test_rr1_fusion_join_is_bounded(spark):
 def test_mmr1_pool_is_take_ordered(spark, monkeypatch):
     """mmr1's claim: the only corpus-sized reduction is the pool's
     TakeOrderedAndProject; every greedy round joins broadcast
-    1-row/bounded sides. The r14 localCheckpoint materializations hide
+    1-row/bounded sides. The localCheckpoint materializations hide
     that shape in the FINAL explain (the returned plan is a checkpoint
     scan; the work happens in the per-round materializations), so the
-    gate pins the underlying algorithm with the swap flag off — the
-    exact pre-checkpoint plan, which the checkpoint arm executes
-    piecewise."""
-    from aqi_analysis_apache_airflow_spark.functions import materialize
+    gate records the plan of every frame handed to ``pin``: the first
+    is the pool, and each one is built over broadcast joins."""
+    from aqi_analysis_apache_airflow_spark.plans import selection
 
-    monkeypatch.setattr(materialize, "PIN_SWAP_ENABLED", False)
-    df = REGISTRY["mmr1_diversified_topk"].fn(spark, SF_DIR)
-    p = _plan(df)
-    assert "TakeOrderedAndProject" in p, p
-    assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p, p
+    plans = []
+    real_pin = selection.pin
+
+    def recording_pin(df):
+        plans.append(_plan(df))
+        return real_pin(df)
+
+    monkeypatch.setattr(selection, "pin", recording_pin)
+    REGISTRY["mmr1_diversified_topk"].fn(spark, SF_DIR)
+    assert plans
+    assert "TakeOrderedAndProject" in plans[0], plans[0]
+    for p in plans:
+        assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p, p
 
 
 def test_winnow1_density_guarantee(spark):

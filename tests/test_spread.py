@@ -78,6 +78,16 @@ def test_split_quantum_reads_session_conf(spark):
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
+def test_spread_vanishes_on_remote_storage(spark, monkeypatch):
+    # a remote URI cannot be sized locally, but its store already has
+    # the natural splits — spreading would shuffle the whole corpus
+    df = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    monkeypatch.setattr(
+        type(df), "inputFiles", lambda self: ["s3a://bucket/t/part-0.parquet"]
+    )
+    assert _n_round_robin(spread_if_narrow(df)) == 0
+
+
 def test_load_spread_unknown_size_spreads(spark, monkeypatch):
     # ADVICE r13 #3: both helpers share the CONSERVATIVE unknown arm —
     # when the input size cannot be determined, the spread stays
