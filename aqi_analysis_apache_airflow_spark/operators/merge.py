@@ -10,9 +10,14 @@ Here MERGE is ONE full-outer join on the natural key plus column-wise
 on the key; broadcast when the source is small). Semantics:
 
 - key in both      → source values win for ``update_cols``; the
-                     target's ``created``-style columns survive.
-- key only in src  → insert (all source values).
+                     target's ``created``-style columns survive;
+                     ``set_on_match`` constants are stamped.
+- key only in src  → insert (all source values), with the
+                     ``insert_only_cols`` constants stamped.
 - key only in tgt  → row kept untouched.
+
+The stamps are not a second pass: each output column is one expression
+over the join, so the merged table is one projection.
 
 This matches Delta's ``MERGE INTO ... WHEN MATCHED UPDATE SET ... WHEN
 NOT MATCHED INSERT *`` for the no-predicate case. Delta/Iceberg jars
@@ -49,7 +54,9 @@ def merge_upsert(
     ``set_on_match`` — constants applied only to matched rows (the
     reference stamps ``last_updated_nds``/``last_updated`` to *now* on
     update — ``dags/etl/stage_to_nds.py:151-154`` — rather than taking
-    the source's value).
+    the source's value). Both maps name target columns; a column in
+    either map takes its constant inside that column's one expression,
+    so the output keeps the target's column order and types.
 
     The source must be unique per key (callers dedupe first, as the
     reference does via ``drop_duplicates`` at ``stage_to_nds.py:211``);
@@ -82,13 +89,9 @@ def merge_upsert(
         tcols = set(target.columns)
         update_cols = [c for c in source.columns if c not in keys and c in tcols]
 
+    src_cols = source.columns
     src = source.select(
-        *[F.col(k).alias(f"__src_{k}") for k in keys],
-        *[
-            F.col(c).alias(f"__src_{c}")
-            for c in source.columns
-            if c not in keys
-        ],
+        *[F.col(c).alias(f"__src_{c}") for c in src_cols],
         F.lit(1).alias("__src_present"),
     )
     # presence markers, NOT key-null checks: keys may legitimately be
@@ -100,39 +103,25 @@ def merge_upsert(
 
     matched_src = F.col("__src_present").isNotNull()
     in_target = F.col("__tgt_present").isNotNull()
+    insert_only_cols = insert_only_cols or {}
+    set_on_match = set_on_match or {}
 
-    out = []
-    src_cols = {
-        c[6:] for c in src.columns if c.startswith("__src_") and c != "__src_present"
-    }
-    for c in target.columns:
+    def merged(c: str) -> Column:
         if c in keys:
-            out.append(F.coalesce(tgt[c], F.col(f"__src_{c}")).alias(c))
+            out = F.coalesce(tgt[c], F.col(f"__src_{c}"))
         elif c in update_cols and c in src_cols:
             # matched or insert → source value; target-only → target value
-            out.append(
-                F.when(matched_src, F.col(f"__src_{c}")).otherwise(tgt[c]).alias(c)
-            )
+            out = F.when(matched_src, F.col(f"__src_{c}")).otherwise(tgt[c])
         elif c in src_cols:
             # non-updatable column (e.g. created): keep target on match,
             # take source only for brand-new keys
-            out.append(
-                F.when(in_target, tgt[c]).otherwise(F.col(f"__src_{c}")).alias(c)
-            )
+            out = F.when(in_target, tgt[c]).otherwise(F.col(f"__src_{c}"))
         else:
-            out.append(tgt[c])
-    merged = joined.select(
-        *out,
-        (~in_target).alias("__is_insert"),
-        (in_target & matched_src).alias("__is_match"),
-    )
+            out = tgt[c]
+        if c in insert_only_cols:
+            out = F.when(~in_target, _as_col(insert_only_cols[c])).otherwise(out)
+        if c in set_on_match:
+            out = F.when(in_target & matched_src, _as_col(set_on_match[c])).otherwise(out)
+        return out.alias(c)
 
-    for c, v in (insert_only_cols or {}).items():
-        merged = merged.withColumn(
-            c, F.when(F.col("__is_insert"), _as_col(v)).otherwise(F.col(c))
-        )
-    for c, v in (set_on_match or {}).items():
-        merged = merged.withColumn(
-            c, F.when(F.col("__is_match"), _as_col(v)).otherwise(F.col(c))
-        )
-    return merged.drop("__is_insert", "__is_match")
+    return joined.select(*[merged(c) for c in target.columns])

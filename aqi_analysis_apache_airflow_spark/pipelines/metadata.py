@@ -13,12 +13,18 @@ Deviation: instead of a table, the driver keeps the stamps in one JSON
 file beside the warehouse tables, ``{table_name: {"cet": iso, "lset":
 iso}}`` — no Spark job. A write goes to a temp file that is fsynced and
 renamed over the old one, so a crash mid-write keeps the old stamps.
+The DAG's two stage branches stamp concurrently, so each write holds an
+exclusive lock on a file beside ``metadata.json`` from its read to its
+rename, and writes through its own temp file; otherwise one branch's
+stamp is lost.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
+import tempfile
 from datetime import datetime, timezone
 
 from .warehouse import Warehouse
@@ -39,14 +45,21 @@ def _load(wh: Warehouse) -> dict[str, dict[str, str]]:
 
 
 def _set_field(wh: Warehouse, table_name: str, field: str, value: datetime) -> None:
-    stamps = _load(wh)
-    stamps.setdefault(table_name, {})[field] = value.isoformat()
     final = os.path.join(wh.root, METADATA_FILE)
-    with open(final + ".tmp", "w") as fh:
-        json.dump(stamps, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(final + ".tmp", final)
+    with open(final + ".lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+        stamps = _load(wh)
+        stamps.setdefault(table_name, {})[field] = value.isoformat()
+        fd, tmp = tempfile.mkstemp(".tmp", METADATA_FILE + ".", wh.root)
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(stamps, fh)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(tmp, final)
+        except BaseException:
+            os.unlink(tmp)
+            raise
 
 
 def set_cet(wh: Warehouse, table_name: str, at: datetime | None = None) -> None:

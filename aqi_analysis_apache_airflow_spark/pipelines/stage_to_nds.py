@@ -13,11 +13,15 @@ MERGE (full-outer join + coalesce) per table:
 - measurement upsert (``:141-218``): keyed (measured_date,
   defining_site, defining_parameter)
 
-Update semantics are replicated exactly: a matched state updates ONLY
-``last_updated_nds``; a matched county updates ONLY ``county_name`` +
-``last_updated_nds``; a matched measurement updates ``aqi_value``,
-``aqi_category`` and stamps BOTH ``last_updated_nds`` and
-``last_updated`` to now (not the source's value) — ``:151-154``.
+The natural keys are ``schemas.NDS_NATURAL_KEYS`` and every read takes
+its schema from ``schemas.TABLE_SCHEMAS``. The audit policy is stated
+once, in ``_upsert``: an inserted row is stamped ``created_date_nds``,
+``last_updated_nds`` and ``source_id``, and a matched row
+``last_updated_nds``. The dp1/dp2 rows are inserts and take the same
+insert stamps. Beyond that, a matched state updates nothing, a matched
+county updates ``county_name``, and a matched measurement updates
+``aqi_value``, ``aqi_category`` and also stamps ``last_updated`` to now
+(not the source's value) — ``:151-154``.
 
 Surrogate keys: existing rows keep theirs; new rows get
 ``current_max + row_number`` over a deterministic order
@@ -39,13 +43,7 @@ from ..operators.filters import anti_join, not_in
 from ..operators.dedupe import keep_first
 from ..operators.merge import merge_upsert
 from ..operators.surrogate import assign_missing_keys
-from ..schemas import (
-    COUNTY_NDS_SCHEMA,
-    MEASUREMENT_NDS_SCHEMA,
-    STATE_AQI_STAGE_SCHEMA,
-    STATE_NDS_SCHEMA,
-    US_COUNTIES_STAGE_SCHEMA,
-)
+from ..schemas import NDS_NATURAL_KEYS, TABLE_SCHEMAS
 from .source_to_stage import AQI_STAGE, COUNTIES_STAGE
 from .warehouse import Warehouse
 
@@ -56,6 +54,42 @@ MEASUREMENT_NDS = "measurement_nds"
 
 def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
+
+
+def _read(wh: Warehouse, table: str) -> DataFrame:
+    return wh.read(table, TABLE_SCHEMAS[table])
+
+
+def _insert_stamps(now: datetime) -> dict[str, object]:
+    """Audit columns of an inserted NDS row (``stage_to_nds.py:21-28,66-77,156-169``)."""
+    return {"created_date_nds": now, "last_updated_nds": now, "source_id": 1}
+
+
+def _upsert(
+    wh: Warehouse,
+    table: str,
+    source: DataFrame,
+    now: datetime,
+    key_col: str,
+    update_cols: list[str],
+    key_order: list[str] | None = None,
+    set_on_match: dict[str, object] | None = None,
+) -> None:
+    """MERGE ``source`` into ``table`` on its natural key under the NDS
+    audit policy — inserts take ``_insert_stamps``, matches move
+    ``last_updated_nds`` (plus ``set_on_match``) to ``now`` — then number
+    the new rows' ``key_col`` in ``key_order`` (default: the natural
+    key) and write the table."""
+    keys = NDS_NATURAL_KEYS[table]
+    merged = merge_upsert(
+        _read(wh, table),
+        source,
+        keys=keys,
+        update_cols=update_cols,
+        insert_only_cols=_insert_stamps(now),
+        set_on_match={"last_updated_nds": now, **(set_on_match or {})},
+    )
+    wh.overwrite(assign_missing_keys(merged, key_col, key_order or keys), table)
 
 
 # --------------------------------------------------------------------------
@@ -72,27 +106,9 @@ def merged_state_source(aqi_stage: DataFrame, counties_stage: DataFrame) -> Data
 
 
 def upsert_states(wh: Warehouse, now: datetime | None = None) -> None:
-    now = now or _now()
-    target = wh.read(STATE_NDS, STATE_NDS_SCHEMA)
-    source = merged_state_source(
-        wh.read(AQI_STAGE, STATE_AQI_STAGE_SCHEMA),
-        wh.read(COUNTIES_STAGE, US_COUNTIES_STAGE_SCHEMA),
-    )
-    merged = merge_upsert(
-        target,
-        source,
-        keys=["state_name"],
-        # match: only last_updated_nds moves (``stage_to_nds.py:17-19``)
-        update_cols=[],
-        set_on_match={"last_updated_nds": now},
-        insert_only_cols={
-            "created_date_nds": now,
-            "last_updated_nds": now,
-            "source_id": 1,
-        },
-    )
-    merged = assign_missing_keys(merged, "state_id_sk", ["state_name"])
-    wh.overwrite(merged, STATE_NDS)
+    source = merged_state_source(_read(wh, AQI_STAGE), _read(wh, COUNTIES_STAGE))
+    # match: only last_updated_nds moves (``stage_to_nds.py:17-19``)
+    _upsert(wh, STATE_NDS, source, now or _now(), "state_id_sk", update_cols=[])
 
 
 # --------------------------------------------------------------------------
@@ -119,28 +135,39 @@ def merged_county_source(counties_stage: DataFrame, state_nds: DataFrame) -> Dat
 
 def upsert_counties(wh: Warehouse, now: datetime | None = None) -> None:
     now = now or _now()
-    target = wh.read(COUNTY_NDS, COUNTY_NDS_SCHEMA)
-    source = merged_county_source(
-        wh.read(COUNTIES_STAGE, US_COUNTIES_STAGE_SCHEMA),
-        wh.read(STATE_NDS, STATE_NDS_SCHEMA),
-    )
-    merged = merge_upsert(
-        target,
+    source = merged_county_source(_read(wh, COUNTIES_STAGE), _read(wh, STATE_NDS))
+    # match: only county_name + last_updated_nds (``stage_to_nds.py:63-65``)
+    _upsert(
+        wh,
+        COUNTY_NDS,
         source,
-        keys=["county_fips"],
-        # match: only county_name + last_updated_nds (``stage_to_nds.py:63-65``)
+        now,
+        "county_id_sk",
         update_cols=["county_name"],
-        set_on_match={"last_updated_nds": now},
-        insert_only_cols={
-            "created_date_nds": now,
-            "last_updated_nds": now,
-            "source_id": 1,
-        },
+        key_order=["county_fips", "county_name"],
     )
-    merged = assign_missing_keys(merged, "county_id_sk", ["county_fips", "county_name"])
-    wh.overwrite(merged, COUNTY_NDS)
     backfill_counties_from_measurements(wh, now)
     patch_windham(wh, now)
+
+
+def _name_only_counties(names: DataFrame, state: DataFrame, now: datetime) -> DataFrame:
+    """County rows carrying only ``county_name`` and ``state_id_sk``
+    (resolved from ``names``' state_name), one per pair, with the insert
+    stamps; every other county_nds column is NULL, including
+    ``county_id_sk``, which the append numbers."""
+    rows = (
+        names.join(F.broadcast(state.select("state_name", "state_id_sk")), "state_name")
+        .select("county_name", "state_id_sk")
+        .distinct()
+    )
+    cols = {c: F.lit(v) for c, v in _insert_stamps(now).items()}
+    cols.update({c: F.col(c) for c in rows.columns})
+    return rows.select(
+        *[
+            cols.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+            for f in TABLE_SCHEMAS[COUNTY_NDS].fields
+        ]
+    )
 
 
 def backfill_counties_from_measurements(wh: Warehouse, now: datetime | None = None) -> None:
@@ -149,18 +176,12 @@ def backfill_counties_from_measurements(wh: Warehouse, now: datetime | None = No
     state_id_sk (fips/geo/population stay NULL). Uses faithful NOT-IN
     semantics: a NULL county_name anywhere in county_nds empties the
     insert, exactly like the reference's SQL."""
-    now = now or _now()
-    county = wh.read(COUNTY_NDS, COUNTY_NDS_SCHEMA)
-    aqi = wh.read(AQI_STAGE, STATE_AQI_STAGE_SCHEMA)
-    state = wh.read(STATE_NDS, STATE_NDS_SCHEMA)
-    src = (
-        not_in(aqi.select("county_name", "state_name"), "county_name", county, "county_name")
-        .join(F.broadcast(state.select("state_name", "state_id_sk")), "state_name")
-        .select("county_name", "state_id_sk")
-        .distinct()
-        .withColumn("created_date_nds", F.lit(now))
-        .withColumn("last_updated_nds", F.lit(now))
-        .withColumn("source_id", F.lit(1))
+    county = _read(wh, COUNTY_NDS)
+    aqi = _read(wh, AQI_STAGE).select("county_name", "state_name")
+    src = _name_only_counties(
+        not_in(aqi, "county_name", county, "county_name"),
+        _read(wh, STATE_NDS),
+        now or _now(),
     )
     _append_partial_counties(wh, county, src)
 
@@ -176,37 +197,24 @@ def patch_windham(wh: Warehouse, now: datetime | None = None) -> None:
     Windham row on EVERY nightly run — unbounded duplicate growth. An
     anti-join against county_nds on (county_name, state_id_sk) makes
     the patch idempotent; first-run output is identical."""
-    now = now or _now()
-    county = wh.read(COUNTY_NDS, COUNTY_NDS_SCHEMA)
-    aqi = wh.read(AQI_STAGE, STATE_AQI_STAGE_SCHEMA)
-    state = wh.read(STATE_NDS, STATE_NDS_SCHEMA)
-    counties_stage = wh.read(COUNTIES_STAGE, US_COUNTIES_STAGE_SCHEMA)
-    src = (
+    county = _read(wh, COUNTY_NDS)
+    windham = _read(wh, AQI_STAGE).filter(F.col("county_name") == "Windham")
+    src = _name_only_counties(
         anti_join(
-            aqi.filter(F.col("county_name") == "Windham").select(
-                "state_name", "county_name"
-            ),
-            counties_stage,
+            windham.select("state_name", "county_name"),
+            _read(wh, COUNTIES_STAGE),
             ["state_name", "county_name"],
-        )
-        .join(F.broadcast(state.select("state_name", "state_id_sk")), "state_name")
-        .select("county_name", "state_id_sk")
-        .distinct()
-        .withColumn("created_date_nds", F.lit(now))
-        .withColumn("last_updated_nds", F.lit(now))
-        .withColumn("source_id", F.lit(1))
+        ),
+        _read(wh, STATE_NDS),
+        now or _now(),
     )
     src = anti_join(src, county, ["county_name", "state_id_sk"])
     _append_partial_counties(wh, county, src)
 
 
 def _append_partial_counties(wh: Warehouse, county: DataFrame, src: DataFrame) -> None:
-    """INSERT ... SELECT (S8): align the partial row to the full schema,
-    assign fresh surrogate keys, and append via stage-and-swap."""
-    for f in COUNTY_NDS_SCHEMA.fields:
-        if f.name not in src.columns:
-            src = src.withColumn(f.name, F.lit(None).cast(f.dataType))
-    src = src.select(*[f.name for f in COUNTY_NDS_SCHEMA.fields])
+    """INSERT ... SELECT (S8): number the appended rows' surrogate keys
+    and write county_nds via stage-and-swap."""
     merged = assign_missing_keys(
         county.unionByName(src), "county_id_sk", ["county_name", "state_id_sk"]
     )
@@ -254,33 +262,21 @@ def merged_measurement_source(
 
 def upsert_measurements(wh: Warehouse, now: datetime | None = None) -> None:
     now = now or _now()
-    target = wh.read(MEASUREMENT_NDS, MEASUREMENT_NDS_SCHEMA)
     source = merged_measurement_source(
-        wh.read(AQI_STAGE, STATE_AQI_STAGE_SCHEMA),
-        wh.read(STATE_NDS, STATE_NDS_SCHEMA),
-        wh.read(COUNTY_NDS, COUNTY_NDS_SCHEMA),
+        _read(wh, AQI_STAGE), _read(wh, STATE_NDS), _read(wh, COUNTY_NDS)
     )
-    merged = merge_upsert(
-        target,
+    # match: aqi_value + aqi_category from source, and last_updated moves
+    # to now with last_updated_nds (``stage_to_nds.py:151-154``).
+    # county_id_sk, created, num_of_sites_reporting keep their target values.
+    _upsert(
+        wh,
+        MEASUREMENT_NDS,
         source,
-        keys=["measured_date", "defining_site", "defining_parameter"],
-        # match: aqi_value + aqi_category from source; BOTH audit stamps
-        # move to now (``stage_to_nds.py:151-154``). county_id_sk,
-        # created, num_of_sites_reporting keep their target values.
-        update_cols=["aqi_value", "aqi_category"],
-        set_on_match={"last_updated_nds": now, "last_updated": now},
-        insert_only_cols={
-            "created_date_nds": now,
-            "last_updated_nds": now,
-            "source_id": 1,
-        },
-    )
-    merged = assign_missing_keys(
-        merged,
+        now,
         "measurement_id_sk",
-        ["measured_date", "defining_site", "defining_parameter"],
+        update_cols=["aqi_value", "aqi_category"],
+        set_on_match={"last_updated": now},
     )
-    wh.overwrite(merged, MEASUREMENT_NDS)
 
 
 def run_stage_to_nds(wh: Warehouse, now: datetime | None = None) -> None:

@@ -140,6 +140,17 @@ MEASUREMENT_NDS_SCHEMA = T.StructType(
     ]
 )
 
+#: Every table the pipelines write, with its declared schema. Reads
+#: trust the declaration (``Warehouse.read``) and a mispaired schema
+#: reads its columns as NULL, so a table meets its schema only here.
+TABLE_SCHEMAS = {
+    "state_aqi_stage": STATE_AQI_STAGE_SCHEMA,
+    "us_counties_stage": US_COUNTIES_STAGE_SCHEMA,
+    "state_nds": STATE_NDS_SCHEMA,
+    "county_nds": COUNTY_NDS_SCHEMA,
+    "measurement_nds": MEASUREMENT_NDS_SCHEMA,
+}
+
 #: Natural (upsert) keys per NDS table (``dags/etl/stage_to_nds.py:16,61,145-149``).
 NDS_NATURAL_KEYS = {
     "state_nds": ["state_name"],

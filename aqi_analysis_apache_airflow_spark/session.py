@@ -59,26 +59,10 @@ def get_spark(
         # 263-query registry run compiles far more distinct stages
         # than that, so every bench pass recompiles almost every
         # stage (shared-JVM pressure, measured in BENCH_PRESSURE.json)
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_for_scale(spark: SparkSession, target_bytes: int) -> None:
-    """Size shuffle parallelism for a given input volume.
-
-    At 100 TB on a 1000-executor cluster the fixed local defaults are
-    wrong; aim for ~128 MiB per shuffle partition and let AQE coalesce
-    downward. Kept as an explicit helper so jobs can call it with the
-    measured input size instead of guessing.
-    """
-    per_partition = 128 * 1024 * 1024
-    n = max(DEFAULT_SHUFFLE_PARTITIONS, target_bytes // per_partition)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))

@@ -139,8 +139,7 @@ def run_to_memory(
     partitioning never affects deterministic results). The conf is
     set only around stream start and restored after; pass ``None``
     to inherit the session value (production streams size state
-    partitions to actual volume, exactly as ``tune_for_scale`` does
-    for batch).
+    partitions to actual volume).
 
     SINGLE-THREADED ASSUMPTION (ADVICE r8): the override mutates the
     SESSION conf for the replay's duration, because a stateful stream

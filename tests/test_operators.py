@@ -93,6 +93,41 @@ def test_merge_upsert_matrix(spark):
     assert canon(merged) == canon(again)
 
 
+def test_merge_upsert_constant_maps(spark):
+    """``insert_only_cols`` and ``set_on_match`` on one column: each arm
+    takes its own value. A NULL source key matches the NULL-key target
+    row through ``eqNullSafe``; without one, that row survives intact."""
+    target = spark.createDataFrame(
+        [(1, "old-1", "t-1"), (2, "old-2", "t-2"), (None, "null-key", "t-n")],
+        "id int, upd string, stamp string",
+    )
+
+    def merge(rows):
+        source = spark.createDataFrame(rows, "id int, upd string")
+        merged = merge_upsert(
+            target,
+            source,
+            keys=["id"],
+            update_cols=["upd"],
+            insert_only_cols={"stamp": "inserted"},
+            set_on_match={"stamp": "matched"},
+        )
+        assert merged.schema == target.schema
+        return {r["id"]: (r["upd"], r["stamp"]) for r in merged.collect()}
+
+    assert merge([(2, "new-2"), (3, "new-3")]) == {
+        1: ("old-1", "t-1"),            # target-only: keeps its stamp
+        2: ("new-2", "matched"),        # matched
+        3: ("new-3", "inserted"),       # inserted
+        None: ("null-key", "t-n"),      # NULL-key target row untouched
+    }
+    assert merge([(None, "new-n")]) == {
+        1: ("old-1", "t-1"),
+        2: ("old-2", "t-2"),
+        None: ("new-n", "matched"),     # NULL source key matched, not inserted
+    }
+
+
 def test_asof_join_semantics(spark):
     from datetime import datetime
 

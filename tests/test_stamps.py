@@ -11,11 +11,14 @@ starts no Spark job.
 from __future__ import annotations
 
 import os
+import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 
 import pytest
 from conftest import jobs_started
 
+from aqi_analysis_apache_airflow_spark.pipelines import metadata
 from aqi_analysis_apache_airflow_spark.pipelines.metadata import (
     get_metadata,
     set_cet,
@@ -63,6 +66,27 @@ def test_failed_stamp_write_keeps_previous_stamps(wh, monkeypatch):
         set_lset(wh, AQI_STAGE, datetime(2023, 2, 1))
     monkeypatch.undo()
     assert get_metadata(wh, AQI_STAGE) == (CET, LSET)
+
+
+def test_concurrent_stamps_of_two_tables_both_survive(wh, monkeypatch):
+    """The DAG's two stage branches have no edge between them, so their
+    stamps can be written at once. A read that sleeps before its write
+    makes the two writes interleave; neither table's stamp may be lost."""
+    load = metadata._load
+
+    def slow_load(w):
+        stamps = load(w)
+        time.sleep(0.2)
+        return stamps
+
+    monkeypatch.setattr(metadata, "_load", slow_load)
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(set_cet, wh, t, CET) for t in (AQI_STAGE, COUNTIES_STAGE)]
+        for f in futures:
+            f.result(timeout=30)
+    monkeypatch.undo()
+    assert get_metadata(wh, AQI_STAGE) == (CET, None)
+    assert get_metadata(wh, COUNTIES_STAGE) == (CET, None)
 
 
 def test_stamps_start_no_job(wh):

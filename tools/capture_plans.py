@@ -4,17 +4,26 @@ directory (one file per query) — the plan evidence for optimization
 rounds: run before and after a change, diff the directories, and the
 affected-query set (and the plan-shape delta) falls out mechanically.
 
+Expression ids (``#12``), plan ids (``plan_id=3``) and RDD ids
+(``RDD[7]``) are session counters that differ between two runs of one
+commit, so they are written as fixed tokens: two captures of the same
+code compare equal under a plain ``diff -r``.
+
 Usage: python tools/capture_plans.py OUTDIR [SF_DIR] [name ...]
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _HERE not in sys.path:
     sys.path.insert(0, _HERE)
+
+#: Session counters in plan text: expression, plan and RDD ids.
+_COUNTER = re.compile(r"(#|plan_id=|RDD\[)\d+")
 
 
 def main() -> None:
@@ -39,7 +48,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — capture the failure text
             txt = f"EXPLAIN FAILED: {e}\n"
         with open(os.path.join(outdir, f"{name}.txt"), "w") as fh:
-            fh.write(txt)
+            fh.write(_COUNTER.sub(r"\1N", txt))
     spark.stop()
     print(f"captured {len(names)} plans -> {outdir}")
 
