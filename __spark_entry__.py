@@ -20,28 +20,14 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 if _HERE not in sys.path:
     sys.path.insert(0, _HERE)
 
-# google.protobuf provisioning for the transformWithState surface
-# (st7): the state-server protocol needs it in the driver, the Python
-# workers, AND the streaming runner subprocess the JVM forks. Only an
-# env var set BEFORE the JVM launches reaches all three, so expose the
-# vendored pure-Python runtime (vendor/README.md) at import time —
-# the driver loads this module before it builds its SparkSession. If
-# the JVM somehow predates this import, plans/streaming_q's
-# _ensure_protobuf still covers driver + regular workers via
-# sys.path + addPyFile.
-try:
-    import importlib.util as _ilu
+# google.protobuf for st7 (transformWithState), provided at import
+# time: the driver loads this module before it builds its
+# SparkSession. If the JVM somehow predates this import,
+# plans/streaming_q's _ensure_protobuf still covers driver + regular
+# workers via sys.path + addPyFile.
+from aqi_analysis_apache_airflow_spark.vendored import provide_protobuf
 
-    _HAVE_PB = _ilu.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    _HAVE_PB = False
-if not _HAVE_PB:
-    _VENDOR_PB = os.path.join(_HERE, "vendor", "protobuf_py.zip")
-    if os.path.isfile(_VENDOR_PB):
-        sys.path.insert(0, _VENDOR_PB)
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            p for p in [_VENDOR_PB, os.environ.get("PYTHONPATH", "")] if p
-        )
+provide_protobuf()
 
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 from aqi_analysis_apache_airflow_spark.plans import extended as _extended  # noqa: F401

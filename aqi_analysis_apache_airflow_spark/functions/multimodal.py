@@ -7,11 +7,13 @@ an Arrow-batched ``mapInPandas`` stage so the heavy Python work sees
 whole record batches, never single rows.
 
 The decode libraries (PIL/ffmpeg/etc.) are NOT in this image, so the
-actual decode is stubbed: ``decode_stub=True`` (default) computes
-deterministic features from the raw bytes (size + md5) so the Spark
+actual decode is stubbed: ``extract_binary_features`` computes
+deterministic features from the raw bytes (size + md5), so the Spark
 plumbing — schema, Arrow batch shape, partition-parallel execution —
-is real and testable; ``decode_stub=False`` raises NotImplementedError
-at the point a real decoder would plug in.
+is real and testable; a real decoder plugs into the same
+``mapInPandas`` stage. ``frame_sample`` is the video-frame expansion
+as a narrow generate, and ``documents_as_media`` adapts the corpus
+documents to this payload shape.
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ def extract_binary_features(
     media: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    decode_stub: bool = True,
 ) -> DataFrame:
     """Per-record features from a binary column via mapInPandas.
 
@@ -40,11 +41,6 @@ def extract_binary_features(
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
 
-        if not decode_stub:
-            raise NotImplementedError(
-                "real decode needs an image/audio library not present in "
-                "this environment; plug it in here"
-            )
         for pdf in batches:
             payload = pdf[payload_col]
             # a NULL payload (e.g. NULL source text) must surface as
@@ -115,45 +111,3 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )
-
-
-RESIZE_SCHEMA = "doc_id bigint, n_bytes_in int, n_bytes_out int, resized binary"
-
-
-def resize_stub(
-    media: DataFrame,
-    factor: int = 4,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Resize/downsample plumbing for image-like payloads — the third
-    stub of the decode family (features, frames, resize). The real
-    implementation decodes, resamples (e.g. bilinear to W/f × H/f)
-    and re-encodes inside this same Arrow-batched ``mapInPandas``
-    stage; the stand-in is a deterministic nearest-neighbor byte
-    stride (every ``factor``-th byte), which preserves exactly the
-    properties the pipeline around it depends on: output size ≈
-    input/f, pure function of the payload, partition-parallel, no
-    shuffle. ``decode_stub=False`` marks the real-decoder plug point,
-    as in :func:`extract_binary_features`."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not decode_stub:
-            raise NotImplementedError(
-                "real resize needs an image library not present in this "
-                "environment; plug it in here"
-            )
-        for pdf in batches:
-            payload = pdf[payload_col]
-            out = payload.map(lambda b: bytes(b)[::factor])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes_in": payload.str.len().astype("int32"),
-                    "n_bytes_out": out.str.len().astype("int32"),
-                    "resized": out,
-                }
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(_resize, RESIZE_SCHEMA)

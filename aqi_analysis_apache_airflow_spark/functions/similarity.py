@@ -1,10 +1,10 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Brute-force exact cosine is the baseline (and the oracle); the LSH
-variant is the 100 TB path: random-hyperplane signatures bucket the
-vectors so the candidate join touches a small fraction of the corpus.
-Hyperplanes are derived from xxhash64(dim, plane) — deterministic, no
-driver-side randomness to broadcast.
+Exact dot products and cosines (a reproducible decimal form for
+surfaced scores, a double form for internal ranking), brute-force
+exact top-k (the baseline, and the oracle), and the IVF path: a
+deterministic coarse quantizer assigns each vector to a centroid, so a
+probe exact-reranks only the members of its best ``n_probe`` clusters.
 """
 
 from __future__ import annotations
@@ -133,69 +133,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_signature(vec: Column, n_planes: int = 16) -> Column:
-    """Random-hyperplane LSH signature as an int bitmask.
-
-    Plane p's component for dimension d is ±1 from the parity of
-    xxhash64(d, p) — a data-independent, reproducible hyperplane
-    family. sign(v·h_p) becomes bit p. Cosine-similar vectors agree on
-    most bits, so bucketing by the signature (or by its bands) turns
-    the quadratic all-pairs problem into per-bucket joins.
-    """
-    dims = F.sequence(F.lit(0), F.size(vec) - 1)
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    dims,
-                    lambda x, d: F.when(
-                        F.xxhash64(d, F.lit(p)).bitwiseAND(F.lit(1)) == 1,
-                        x.cast("double"),
-                    ).otherwise(-x.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            F.lit(1 << p),
-        ).otherwise(F.lit(0))
-        for p in range(n_planes)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("int")
-
-
-def lsh_near_pairs(
-    emb: DataFrame,
-    threshold: float = 0.85,
-    n_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate near-duplicate pairs: bucket by full hyperplane
-    signature, join within buckets, verify with exact cosine. Recall
-    is tunable via n_planes (fewer planes → bigger buckets → higher
-    recall, more verify work)."""
-    sig = emb.select(
-        F.col(id_col), F.col(vec_col), hyperplane_signature(F.col(vec_col), n_planes).alias("sig")
-    )
-    a = sig.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"), "sig"
-    )
-    b = sig.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"), "sig"
-    )
-    return (
-        a.join(b, "sig")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cosine(F.col("vec_a"), F.col("vec_b")).alias("cosine_sim"))
-        .filter(F.col("cosine_sim") >= threshold)
-    )
-
-
 def ivf_assign(
     emb: DataFrame,
     n_centroids: int = 16,
@@ -276,65 +213,6 @@ def ivf_assign(
         .select(id_col, vec_col, (-best["neg_id"]).alias("cluster"))
     )
     return centroids, assigned
-
-
-def ivf_write_index(
-    emb: DataFrame,
-    index_path: str,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF index to storage: ``assigned`` written
-    PARTITIONED BY cluster (one directory per centroid — the physical
-    layout that makes a probe read only its clusters' files) plus the
-    tiny ``centroids`` table. This is the warehouse form of
-    :func:`ivf_assign`'s docstring claim; :func:`ivf_probe_index`
-    reads it back with partition pruning."""
-    centroids, assigned = ivf_assign(emb, n_centroids, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(
-        f"{index_path}/assigned"
-    )
-    centroids.write.mode("overwrite").parquet(f"{index_path}/centroids")
-
-
-def ivf_probe_index(
-    spark,
-    index_path: str,
-    query: DataFrame,
-    k: int = 50,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
-) -> DataFrame:
-    """Probe an on-disk IVF index written by :func:`ivf_write_index`:
-    rank the (broadcast-sized) centroid table against the query,
-    ``collect()`` the ``n_probe`` winning cluster ids — a sanctioned
-    control-plane read of n_probe integers, like the CET/LSET metadata
-    lookup, NOT a data collect — and scan ONLY those partitions of the
-    assigned table. The literal ``isin`` filter makes the pruning
-    static: the scan's PartitionFilters clause drops the other
-    n_centroids − n_probe directories before any file is opened, so
-    the probe touches ~n_probe/n_centroids of the index bytes."""
-    centroids = spark.read.parquet(f"{index_path}/centroids")
-    probed = [
-        r["centroid_id"]
-        for r in (
-            centroids.join(F.broadcast(query))
-            .select(
-                "centroid_id",
-                cosine_fast(F.col("cvec"), F.col(query_vec_col)).alias("__sim"),
-            )
-            .orderBy(F.col("__sim").desc(), "centroid_id")
-            .limit(n_probe)
-            .collect()
-        )
-    ]
-    cand = spark.read.parquet(f"{index_path}/assigned").filter(
-        F.col("cluster").isin(probed)
-    )
-    return brute_force_topk(cand, query, k, id_col, vec_col, query_vec_col)
 
 
 def ivf_topk(

@@ -1,5 +1,5 @@
 from .dedupe import keep_first
-from .filters import anti_join, cdc_window, not_in, null_normalize
+from .filters import anti_join, cdc_window, not_in
 from .joins import dim_join, full_outer_union_keys
 from .merge import merge_upsert
 from .skew import salted_join
@@ -14,6 +14,5 @@ __all__ = [
     "keep_first",
     "merge_upsert",
     "not_in",
-    "null_normalize",
     "salted_join",
 ]

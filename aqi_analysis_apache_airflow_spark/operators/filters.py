@@ -7,7 +7,7 @@ join-based upsert in :mod:`.merge` and never appear here.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -64,10 +64,3 @@ def not_in(df: DataFrame, col: str, sub: DataFrame, sub_col: str) -> DataFrame:
 def anti_join(df: DataFrame, other: DataFrame, keys: list[str]) -> DataFrame:
     """F5: composite-key ``NOT EXISTS`` (``dags/etl/stage_to_nds.py:132-135``)."""
     return df.join(other.select(*keys).distinct(), on=keys, how="left_anti")
-
-
-def null_normalize(col: Column) -> Column:
-    """F7: the reference maps ``pd.isna → None`` per field
-    (``dags/etl/stage_to_nds.py:12-14,53-59``). Spark nulls are native,
-    so this only canonicalizes NaN → NULL for float columns."""
-    return F.when(F.isnan(col), F.lit(None)).otherwise(col)

@@ -1,4 +1,4 @@
-"""Z-order write layout: multi-dimensional data clustering for
+"""Z-order (Morton-curve) keys: multi-dimensional data clustering for
 min/max-stat file skipping.
 
 A table range-partitioned on one column prunes beautifully on that
@@ -8,18 +8,14 @@ key whose contiguous ranges are small rectangles in (a, b) space — so
 every written file covers a narrow band of BOTH columns, and a reader
 filtering on either one skips most files on footer stats alone. This
 is the public technique behind Delta/Iceberg's OPTIMIZE ZORDER,
-implemented here as plain column expressions over a vanilla parquet
-write (no table-format dependency).
-
-Scale shape: the min/max bounds come from a 1-row aggregate broadcast
-onto the corpus (no global sort, no sampling pass); the z-key write is
-``repartitionByRange`` + within-partition sort — the same shuffle a
-plain sorted write costs.
+implemented here as plain column expressions (no table-format
+dependency). The key backs ``zorder1_morton_layout`` and, through
+``interleave_bits``, the Hilbert-curve query.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -63,44 +59,3 @@ def z_value(
         ).otherwise(F.lit(0).cast("long"))
 
     return interleave_bits(scaled(a, a_min, a_max), scaled(b, b_min, b_max), bits)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-curve of
-    (``col_a``, ``col_b``): bounds from a broadcast 1-row aggregate,
-    z-key projection, range-repartition into ``n_files`` splits,
-    within-partition sort, drop the key. Each output file then covers
-    a narrow min/max band of BOTH columns — the property
-    ``tests/test_scale_ops.py`` asserts on the written footers."""
-    bounds = df.agg(
-        F.min(col_a).alias("__amin"),
-        F.max(col_a).alias("__amax"),
-        F.min(col_b).alias("__bmin"),
-        F.max(col_b).alias("__bmax"),
-    )
-    keyed = df.join(F.broadcast(bounds)).withColumn(
-        "__z",
-        z_value(
-            F.col(col_a),
-            F.col(col_b),
-            F.col("__amin"),
-            F.col("__amax"),
-            F.col("__bmin"),
-            F.col("__bmax"),
-            bits,
-        ),
-    )
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z", "__amin", "__amax", "__bmin", "__bmax")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -21,9 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SCD2_COLS = ("valid_from", "valid_to", "is_current")
-
-
 def scd2_init(source: DataFrame, effective_ts) -> DataFrame:
     """First load: every row becomes an open version."""
     return (

@@ -2759,9 +2759,8 @@ def _z_oracle() -> str:
 
 @query("zorder1_morton_layout", oracle=_z_oracle())
 def zorder1_morton_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Z-order (Morton-curve) clustering key behind
-    ``operators/layout.py:write_zordered`` as a driver-verified
-    query: scale (o_custkey, o_totalprice) to 16-bit ranks by their
+    """The Z-order (Morton-curve) clustering key of
+    ``operators/layout.py:z_value`` as a driver-verified query: scale (o_custkey, o_totalprice) to 16-bit ranks by their
     global bounds (broadcast 1-row aggregate — no sampling pass, no
     global sort) and interleave the bits; zbucket is the top 4 bits =
     the 16 contiguous curve segments a range-partitioned write would
@@ -2770,8 +2769,7 @@ def zorder1_morton_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     on BOTH columns and a reader filtering on either skips most files
     — the public technique behind Delta/Iceberg OPTIMIZE ZORDER.
     Whole plan is one broadcast join + 2*16 shift/mask JVM ops per
-    row; the write itself is exercised (with footer-stat assertions)
-    in tests/test_quality_layout.py."""
+    row."""
     from ..operators.layout import z_value
 
     orders = load(spark, sf_dir, "orders")

@@ -966,7 +966,7 @@ def d5_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, exact, on a deterministic 1/50
     subsample (the oracle's all-pairs SQL is quadratic; the subsample
     keeps it honest at any sf). The production path for the full corpus
-    is :func:`...functions.similarity.lsh_near_pairs`."""
+    is bucketed LSH (:func:`rp1_hyperplane_lsh`)."""
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 50 == 0)
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
@@ -1056,12 +1056,8 @@ def rp1_hyperplane_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     collisions by cosine (deterministic id tiebreak) — the top-k form
     keeps the op meaningful on corpora with no true near-dups (this
     synthetic one is near-orthogonal) while the LSH plumbing stays
-    fully exercised and hash-checked. The xxhash-family production
-    twin is :func:`...functions.similarity.lsh_near_pairs` (same
-    plan, cheaper hash, threshold form, unverifiable in SQL) — the
-    d3m precedent applied to the embedding surface, closing the one
-    dedup family (embedding LSH) whose oracle coverage was
-    unit-test-only.
+    fully exercised and hash-checked — the d3m precedent applied to
+    the embedding surface.
 
     Scale shape: the ±1 sign matrix is 64×12 rows built once and
     BROADCAST (never one md5 per element-row — that would be 12

@@ -347,37 +347,18 @@ def _ensure_protobuf(spark: SparkSession) -> None:
     """Make ``google.protobuf`` importable in the DRIVER and every
     Python WORKER when the environment lacks it (the
     transformWithState state-server protocol imports it on both
-    sides). The vendored pure-Python runtime ships as a single zip
-    (vendor/protobuf_py.zip — zipimport loads packages from a zip on
-    sys.path/PYTHONPATH directly): the driver gets it on sys.path,
-    workers via ``sc.addPyFile`` — the one runtime mechanism that
-    reaches workers after the JVM is already up (the driver contract
-    hands us a running vanilla session, so env PYTHONPATH is frozen;
-    the streaming-runner subprocess is instead covered by
-    __spark_entry__'s import-time PYTHONPATH export)."""
-    import importlib
-    import importlib.util
-    import os
-    import sys
+    sides): :func:`...vendored.provide_protobuf` puts the vendored zip
+    on the driver's sys.path, and ``sc.addPyFile`` ships it to workers
+    — the one runtime mechanism that reaches workers after the JVM is
+    already up (the driver contract hands us a running vanilla
+    session, so env PYTHONPATH is frozen; the streaming-runner
+    subprocess is instead covered by __spark_entry__'s import-time
+    call)."""
+    from ..vendored import provide_protobuf
 
-    try:
-        if importlib.util.find_spec("google.protobuf") is not None:
-            return
-    except ModuleNotFoundError:
-        pass
-    zip_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "vendor",
-        "protobuf_py.zip",
-    )
-    if not os.path.isfile(zip_path):  # pragma: no cover - vendored zip ships
-        raise ModuleNotFoundError(
-            "google.protobuf absent and vendor/protobuf_py.zip missing"
-        )
-    if zip_path not in sys.path:
-        sys.path.insert(0, zip_path)
-        importlib.invalidate_caches()
-    spark.sparkContext.addPyFile(zip_path)
+    zip_path = provide_protobuf()
+    if zip_path is not None:
+        spark.sparkContext.addPyFile(zip_path)
 
 
 @query(

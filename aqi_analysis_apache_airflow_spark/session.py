@@ -24,14 +24,13 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 def get_spark(
     app_name: str = "aqi_analysis_apache_airflow_spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) the session. Idempotent per JVM."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
-        SparkSession.builder.master(master or f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",

@@ -59,68 +59,3 @@ def read_aqi_csv_glob(spark: SparkSession, source_dir: str) -> DataFrame:
 def read_counties_csv(spark: SparkSession, path: str) -> DataFrame:
     """S3: the static counties master (``dags/etl/source_to_stage.py:88-91``)."""
     return spark.read.schema(COUNTIES_RAW_SCHEMA).option("header", True).csv(path)
-
-
-def jdbc_options(
-    url: str,
-    table: str,
-    *,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int | None = None,
-    fetch_size: int = 10_000,
-    extra: dict[str, str] | None = None,
-) -> dict[str, str]:
-    """Validated option dict for a parallel JDBC scan/write.
-
-    The scale rule this enforces: a JDBC read WITHOUT
-    ``partitionColumn/lowerBound/upperBound/numPartitions`` is a single
-    connection pulling the whole table through one task — fine for a
-    control row, catastrophic for a fact table. Either pass all four or
-    none (Spark itself half-validates this at .load() time; failing
-    here keeps the error next to the caller).
-    """
-    if not url.startswith("jdbc:"):
-        raise ValueError(f"jdbc url must start with 'jdbc:', got {url!r}")
-    bounds = (partition_column, lower_bound, upper_bound, num_partitions)
-    if any(b is not None for b in bounds) and any(b is None for b in bounds):
-        raise ValueError(
-            "partition_column, lower_bound, upper_bound, num_partitions "
-            "must be passed together (or all omitted for a 1-task read "
-            "of a small control table)"
-        )
-    opts = {"url": url, "dbtable": table, "fetchsize": str(fetch_size)}
-    if partition_column is not None:
-        opts.update(
-            partitionColumn=partition_column,
-            lowerBound=str(lower_bound),
-            upperBound=str(upper_bound),
-            numPartitions=str(num_partitions),
-        )
-    opts.update(extra or {})
-    return opts
-
-
-def read_jdbc(spark: SparkSession, **kwargs) -> DataFrame:
-    """True-Postgres-parity source (SURVEY.md §1.5): the reference
-    stores every table in Postgres via SQLAlchemy ORM
-    (``dags/etl/models.py:7-12``); this engine's sanctioned mapping is
-    the parquet warehouse, so JDBC is the opt-in variant for reading an
-    existing Postgres deployment. Kwargs go to :func:`jdbc_options`;
-    requires the JDBC driver jar on the Spark classpath (not shipped in
-    this image — config-gated, exercised via option-assembly tests)."""
-    return spark.read.format("jdbc").options(**jdbc_options(**kwargs)).load()
-
-
-def write_jdbc(
-    df: DataFrame, *, mode: str = "append", batch_size: int = 10_000, **kwargs
-) -> None:
-    """JDBC sink twin of :func:`read_jdbc`. ``batchsize`` batches the
-    INSERTs exactly like the reference's 10k-row flush
-    (``dags/etl/load_to_db.py``); ``mode='overwrite'`` with
-    ``truncate=true`` in ``extra`` maps the reference's
-    truncate-and-reload tables (S7) without dropping indexes."""
-    opts = jdbc_options(**kwargs)
-    opts["batchsize"] = str(batch_size)
-    df.write.format("jdbc").options(**opts).mode(mode).save()

@@ -1,13 +1,3 @@
-from .ops import (
-    dedup_within_watermark,
-    read_events_stream,
-    session_windows,
-    windowed_counts,
-)
+from .ops import dedup_within_watermark, read_events_stream, windowed_counts
 
-__all__ = [
-    "dedup_within_watermark",
-    "read_events_stream",
-    "session_windows",
-    "windowed_counts",
-]
+__all__ = ["dedup_within_watermark", "read_events_stream", "windowed_counts"]

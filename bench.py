@@ -155,24 +155,11 @@ _HERE = os.path.dirname(os.path.abspath(__file__))
 if _HERE not in sys.path:
     sys.path.insert(0, _HERE)
 
-# st7 (transformWithStateInPandas) needs google.protobuf in the
-# streaming driver worker: if no system protobuf exists, expose the
-# vendored pure-Python runtime to the driver AND the worker daemon —
-# must happen before the first SparkSession builds the JVM (the same
-# gate as tests/conftest.py).
-import importlib.util as _ilu
+# google.protobuf for st7 (transformWithState), provided before the
+# first SparkSession builds the JVM so the Python workers inherit it.
+from aqi_analysis_apache_airflow_spark.vendored import provide_protobuf
 
-try:
-    _HAVE_PROTOBUF = _ilu.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    _HAVE_PROTOBUF = False
-if not _HAVE_PROTOBUF:
-    _VENDOR = os.path.join(_HERE, "vendor", "protobuf_py.zip")
-    if os.path.isfile(_VENDOR):
-        sys.path.insert(0, _VENDOR)
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            p for p in [_VENDOR, os.environ.get("PYTHONPATH", "")] if p
-        )
+provide_protobuf()
 
 HEADLINE = [
     "q1_pricing_summary",

@@ -1,33 +1,15 @@
 from __future__ import annotations
 
-import importlib.util
-import os
-import sys
 import time
 from contextlib import contextmanager
 
 import pytest
 
-# Un-gate the transformWithStateInPandas test: if no system
-# google.protobuf exists, expose the vendored pure-Python runtime
-# (vendor/README.md) to BOTH the driver (sys.path) and the Python
-# workers (PYTHONPATH, inherited by the worker daemon the JVM spawns —
-# must be set before the first SparkSession builds the JVM).
-try:
-    _HAVE_PROTOBUF = importlib.util.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:  # no 'google' namespace at all
-    _HAVE_PROTOBUF = False
-if not _HAVE_PROTOBUF:
-    _VENDOR = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "vendor",
-        "protobuf_py.zip",
-    )
-    if os.path.isfile(_VENDOR):
-        sys.path.insert(0, _VENDOR)
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            p for p in [_VENDOR, os.environ.get("PYTHONPATH", "")] if p
-        )
+# google.protobuf for st7 (transformWithState), provided before the
+# first SparkSession builds the JVM so the Python workers inherit it.
+from aqi_analysis_apache_airflow_spark.vendored import provide_protobuf
+
+provide_protobuf()
 
 from aqi_analysis_apache_airflow_spark.session import get_spark
 

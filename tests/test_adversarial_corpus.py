@@ -10,7 +10,6 @@ list silently missed nine."""
 
 from __future__ import annotations
 
-import math
 import os
 import re
 
@@ -20,6 +19,7 @@ import pytest
 
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 from aqi_analysis_apache_airflow_spark.schemas import CORPUS_TABLES
+from tests.test_oracle_parity import _canon_frame
 
 _OTHERS = [t for t in CORPUS_TABLES if t != "documents"]
 
@@ -138,27 +138,6 @@ def adversarial_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def _canon_cell(x):
-    if x is None or (isinstance(x, float) and math.isnan(x)):
-        return "NULL"
-    try:
-        if pd.isna(x):
-            return "NULL"
-    except (TypeError, ValueError):
-        pass
-    if isinstance(x, float):
-        return repr(x)
-    return str(x)
-
-
-def _canon(df: pd.DataFrame):
-    cols = sorted(df.columns)
-    df = df[cols]
-    return cols, sorted(
-        tuple(_canon_cell(v) for v in row) for row in df.itertuples(index=False)
-    )
-
-
 @pytest.mark.parametrize("name", DOC_QUERIES)
 def test_adversarial_parity(spark, adversarial_dir, name):
     q = REGISTRY[name]
@@ -170,8 +149,8 @@ def test_adversarial_parity(spark, adversarial_dir, name):
     sdf = q.fn(spark, adversarial_dir).toPandas()
     odf = con.execute(q.oracle).fetchdf()
     assert len(sdf) == len(odf), f"{name}: rowcount {len(sdf)} != {len(odf)}"
-    scols, srows = _canon(sdf)
-    ocols, orows = _canon(odf)
+    scols, srows = _canon_frame(sdf)
+    ocols, orows = _canon_frame(odf)
     assert scols == ocols, f"{name}: columns {scols} != {ocols}"
     diffs = [(a, b) for a, b in zip(srows, orows) if a != b][:3]
     assert srows == orows, f"{name}: first diffs {diffs}"

@@ -35,7 +35,6 @@ any future multi-table query is swept automatically.
 
 from __future__ import annotations
 
-import math
 import os
 import re
 import shutil
@@ -47,6 +46,7 @@ import duckdb
 
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 from aqi_analysis_apache_airflow_spark.schemas import CORPUS_TABLES
+from tests.test_oracle_parity import _canon_frame
 
 _BASE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -250,28 +250,6 @@ def adv_dir(spark, tmp_path_factory):
     return d
 
 
-def _canon_cell(x):
-    if x is None or (isinstance(x, float) and math.isnan(x)):
-        return "NULL"
-    try:
-        if pd.isna(x):
-            return "NULL"
-    except (TypeError, ValueError):
-        pass
-    if isinstance(x, float):
-        return repr(x)
-    return str(x)
-
-
-def _canon(df: pd.DataFrame):
-    cols = sorted(df.columns)
-    df = df[cols]
-    return cols, sorted(
-        tuple(_canon_cell(v) for v in row)
-        for row in df.itertuples(index=False)
-    )
-
-
 @pytest.mark.parametrize("name", MULTI_QUERIES)
 def test_adversarial_multitable_parity(spark, adv_dir, name):
     q = REGISTRY[name]
@@ -283,8 +261,8 @@ def test_adversarial_multitable_parity(spark, adv_dir, name):
     sdf = q.fn(spark, adv_dir).toPandas()
     odf = con.execute(q.oracle).fetchdf()
     assert len(sdf) == len(odf), f"{name}: rowcount {len(sdf)} != {len(odf)}"
-    scols, srows = _canon(sdf)
-    ocols, orows = _canon(odf)
+    scols, srows = _canon_frame(sdf)
+    ocols, orows = _canon_frame(odf)
     assert scols == ocols, f"{name}: columns {scols} != {ocols}"
     diffs = [(a, b) for a, b in zip(srows, orows) if a != b][:3]
     assert srows == orows, f"{name}: first diffs {diffs}"

@@ -7,7 +7,6 @@ oracle query runs here, so new ones are covered automatically."""
 
 from __future__ import annotations
 
-import math
 import os
 import re
 
@@ -17,6 +16,7 @@ import pytest
 
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 from aqi_analysis_apache_airflow_spark.schemas import CORPUS_TABLES
+from tests.test_oracle_parity import _canon_frame
 
 _OTHERS = [t for t in CORPUS_TABLES if t != "orders"]
 
@@ -73,27 +73,6 @@ def adversarial_or_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def _canon_cell(x):
-    if x is None or (isinstance(x, float) and math.isnan(x)):
-        return "NULL"
-    try:
-        if pd.isna(x):
-            return "NULL"
-    except (TypeError, ValueError):
-        pass
-    if isinstance(x, float):
-        return repr(x)
-    return str(x)
-
-
-def _canon(df: pd.DataFrame):
-    cols = sorted(df.columns)
-    df = df[cols]
-    return cols, sorted(
-        tuple(_canon_cell(v) for v in row) for row in df.itertuples(index=False)
-    )
-
-
 @pytest.mark.parametrize("name", ORDERS_QUERIES)
 def test_adversarial_orders_parity(spark, adversarial_or_dir, name):
     q = REGISTRY[name]
@@ -105,8 +84,8 @@ def test_adversarial_orders_parity(spark, adversarial_or_dir, name):
     sdf = q.fn(spark, adversarial_or_dir).toPandas()
     odf = con.execute(q.oracle).fetchdf()
     assert len(sdf) == len(odf), f"{name}: rowcount {len(sdf)} != {len(odf)}"
-    scols, srows = _canon(sdf)
-    ocols, orows = _canon(odf)
+    scols, srows = _canon_frame(sdf)
+    ocols, orows = _canon_frame(odf)
     assert scols == ocols, f"{name}: columns {scols} != {ocols}"
     diffs = [(a, b) for a, b in zip(srows, orows) if a != b][:3]
     assert srows == orows, f"{name}: first diffs {diffs}"

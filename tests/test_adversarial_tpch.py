@@ -31,7 +31,6 @@ fixture tables), so new TPC-H-shaped queries are covered on arrival.
 
 from __future__ import annotations
 
-import math
 import os
 import re
 
@@ -42,6 +41,7 @@ import duckdb
 
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 from aqi_analysis_apache_airflow_spark.schemas import CORPUS_TABLES
+from tests.test_oracle_parity import _canon_frame
 
 _TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]
 _OTHERS = [t for t in CORPUS_TABLES if t not in _TABLES]
@@ -232,27 +232,6 @@ def adversarial_tpch_dir(spark, tmp_path_factory):
     return str(d)
 
 
-def _canon_cell(x):
-    if x is None or (isinstance(x, float) and math.isnan(x)):
-        return "NULL"
-    try:
-        if pd.isna(x):
-            return "NULL"
-    except (TypeError, ValueError):
-        pass
-    if isinstance(x, float):
-        return repr(x)
-    return str(x)
-
-
-def _canon(df: pd.DataFrame):
-    cols = sorted(df.columns)
-    df = df[cols]
-    return cols, sorted(
-        tuple(_canon_cell(v) for v in row) for row in df.itertuples(index=False)
-    )
-
-
 @pytest.mark.parametrize("name", TPCH_QUERIES)
 def test_adversarial_tpch_parity(spark, adversarial_tpch_dir, name):
     q = REGISTRY[name]
@@ -265,8 +244,8 @@ def test_adversarial_tpch_parity(spark, adversarial_tpch_dir, name):
     sdf = q.fn(spark, adversarial_tpch_dir).toPandas()
     odf = con.execute(q.oracle).fetchdf()
     assert len(sdf) == len(odf), f"{name}: rowcount {len(sdf)} != {len(odf)}"
-    scols, srows = _canon(sdf)
-    ocols, orows = _canon(odf)
+    scols, srows = _canon_frame(sdf)
+    ocols, orows = _canon_frame(odf)
     assert scols == ocols, f"{name}: columns {scols} != {ocols}"
     diffs = [(a, b) for a, b in zip(srows, orows) if a != b][:3]
     assert srows == orows, f"{name}: first diffs {diffs}"

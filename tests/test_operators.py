@@ -247,45 +247,6 @@ def test_asof_join_name_collision_raises(spark):
     assert ok.columns.count("price") == 1 and "r_price" in ok.columns
 
 
-def test_vectorized_zscore(spark):
-    from aqi_analysis_apache_airflow_spark.functions.udf import vectorized_zscore
-
-    df = spark.createDataFrame(
-        [(10.0, 5.0, 5.0), (5.0, 5.0, 0.0)], "v double, m double, s double"
-    )
-    out = [
-        r["z"]
-        for r in df.select(
-            vectorized_zscore(F.col("v"), F.col("m"), F.col("s")).alias("z")
-        ).collect()
-    ]
-    assert out[0] == 1.0 and out[1] is None
-
-
-def test_jdbc_options_validation():
-    import pytest
-
-    from aqi_analysis_apache_airflow_spark.sources.readers import jdbc_options
-
-    opts = jdbc_options(
-        "jdbc:postgresql://db:5432/aqi",
-        "nds.measurements",
-        partition_column="id",
-        lower_bound=0,
-        upper_bound=1_000_000,
-        num_partitions=32,
-        extra={"user": "etl"},
-    )
-    assert opts["partitionColumn"] == "id" and opts["numPartitions"] == "32"
-    assert opts["dbtable"] == "nds.measurements" and opts["user"] == "etl"
-    with pytest.raises(ValueError, match="jdbc url"):
-        jdbc_options("postgresql://db/aqi", "t")
-    with pytest.raises(ValueError, match="together"):
-        jdbc_options("jdbc:postgresql://db/aqi", "t", partition_column="id")
-    # all-omitted is the sanctioned 1-task control-table read
-    assert "partitionColumn" not in jdbc_options("jdbc:postgresql://db/aqi", "t")
-
-
 def test_merge_upsert_unique_source_guard(spark):
     import pytest
 
@@ -340,45 +301,6 @@ def test_not_in_matches_sql_semantics_property(spark):
         assert got == want, f"probe={probe} sub={sub}: {got} != {want}"
 
     check()
-
-
-def test_chunk_udtf_equals_expression_form(spark):
-    """The Python UDTF chunker (lateral join) produces exactly the
-    pure-column c1_chunk_text expansion."""
-    from aqi_analysis_apache_airflow_spark.functions.udf import ChunkTextUDTF
-    from aqi_analysis_apache_airflow_spark.plans import REGISTRY
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    via_udtf = docs.lateralJoin(ChunkTextUDTF(F.col("text").outer())).select(
-        "doc_id", "chunk_idx", "chunk_off", "chunk"
-    )
-    via_expr = REGISTRY["c1_chunk_text"].fn(
-        spark, "/root/testdata/sf0.001"
-    ).select("doc_id", "chunk_idx", "chunk_off", "chunk")
-    canon = lambda df: sorted(tuple(map(str, r)) for r in df.collect())
-    assert canon(via_udtf) == canon(via_expr)
-
-
-def test_trimmed_mean_grouped_agg(spark):
-    """Grouped-agg pandas UDF: 10%-trimmed mean drops outliers that
-    wreck the plain mean, and groups too small to trim fall back to
-    the full mean."""
-    from aqi_analysis_apache_airflow_spark.functions.udf import trimmed_mean_10
-
-    rows = [("g1", float(v)) for v in range(1, 11)] + [
-        ("g1", 1000.0),  # outlier in the top decile of 11 values
-        ("g2", 5.0),
-        ("g2", 7.0),
-    ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    got = {
-        r["g"]: r["tm"]
-        for r in df.groupBy("g").agg(trimmed_mean_10(F.col("v")).alias("tm")).collect()
-    }
-    # g1: 11 values, k=1 -> drop min (1.0) and max (1000.0), mean of 2..10
-    assert got["g1"] == sum(range(2, 11)) / 9
-    # g2: n=2, k=0 -> plain mean
-    assert got["g2"] == 6.0
 
 
 def test_asof_cogrouped_equals_union_tag(spark):

@@ -11,7 +11,6 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
-from aqi_analysis_apache_airflow_spark.operators.filters import null_normalize
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 from aqi_analysis_apache_airflow_spark.plans import extended as _extended  # noqa: F401
 from aqi_analysis_apache_airflow_spark.plans import queries as _queries  # noqa: F401
@@ -117,12 +116,6 @@ def test_ivfd_probe_scan_is_partition_pruned(spark):
     m = re.search(r"PartitionFilters: \[cluster#\d+ IN \(([^)]*)\)\]", p)
     assert m, "probe scan has no cluster IN (...) PartitionFilters"
     assert len(m.group(1).split(",")) == 4
-
-
-def test_null_normalize(spark):
-    df = spark.createDataFrame([(1.0,), (float("nan"),), (None,)], "x double")
-    out = [r["y"] for r in df.select(null_normalize(F.col("x")).alias("y")).collect()]
-    assert out.count(None) == 2 and 1.0 in out
 
 
 def test_q6_full_pushdown_and_pruning(spark):

@@ -167,39 +167,6 @@ def test_approx_sketches_within_tolerance(spark):
         assert row["median_price"] == exact_median[flag]
 
 
-def test_ivf_index_probe_prunes_partitions(spark, tmp_path_factory):
-    """The on-disk IVF index delivers the scale claim physically: the
-    assigned table is laid out one directory per cluster, and a probe's
-    scan prunes to exactly the n_probe probed clusters — PLUS the
-    pruned probe returns the identical top-k as the in-memory path."""
-    from aqi_analysis_apache_airflow_spark.functions.similarity import (
-        ivf_probe_index,
-        ivf_topk,
-        ivf_write_index,
-    )
-    import os
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    corpus = emb.filter(F.col("vec_id") != 0)
-    query = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    path = str(tmp_path_factory.mktemp("ivf_index"))
-    ivf_write_index(corpus, path, n_centroids=16)
-    # physical layout: one directory per cluster
-    assert sum(
-        d.startswith("cluster=") for d in os.listdir(f"{path}/assigned")
-    ) > 1
-
-    probed = ivf_probe_index(spark, path, query, k=50, n_probe=4)
-    p = _plan(probed)
-    assert "PartitionFilters" in p and "cluster" in p
-    got = [(r["vec_id"], r["cosine_sim"]) for r in probed.collect()]
-    want = [
-        (r["vec_id"], r["cosine_sim"])
-        for r in ivf_topk(corpus, query, k=50, n_centroids=16, n_probe=4).collect()
-    ]
-    assert got == want
-
-
 def test_partitioned_write_prunes(spark, tmp_path_factory):
     """A filter on the partition column must prune at the source: the
     scan's partition count shrinks and non-matching years never load."""

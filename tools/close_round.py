@@ -25,7 +25,6 @@ Usage: python tools/close_round.py N [--parity] [--bench]
 from __future__ import annotations
 
 import json
-import math
 import os
 import subprocess
 import sys
@@ -34,51 +33,14 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-# st7 (transformWithStateInPandas) needs google.protobuf in the
-# streaming driver worker — same vendored-runtime gate as bench.py /
-# tests/conftest.py, applied before the first SparkSession builds.
-import importlib.util as _ilu  # noqa: E402
+# google.protobuf for st7 (transformWithState), provided before the
+# first SparkSession builds the JVM so the Python workers inherit it.
+from aqi_analysis_apache_airflow_spark.vendored import provide_protobuf  # noqa: E402
 
-try:
-    _HAVE_PROTOBUF = _ilu.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    _HAVE_PROTOBUF = False
-if not _HAVE_PROTOBUF:
-    _VENDOR = os.path.join(_REPO, "vendor", "protobuf_py.zip")
-    if os.path.isfile(_VENDOR):
-        sys.path.insert(0, _VENDOR)
-        os.environ["PYTHONPATH"] = os.pathsep.join(
-            p for p in [_VENDOR, os.environ.get("PYTHONPATH", "")] if p
-        )
+provide_protobuf()
 
 T2_SF_DIR = "/root/testdata/sf0.01"
 BENCH_SF_DIR = "/root/testdata/sf0.1"
-
-
-def _canon_cell(x) -> str:
-    # the tests/test_oracle_parity.py canonicalization, kept in lockstep
-    import pandas as pd
-
-    if x is None or (isinstance(x, float) and math.isnan(x)):
-        return "NULL"
-    try:
-        if pd.isna(x):
-            return "NULL"
-    except (TypeError, ValueError):
-        pass
-    if isinstance(x, float):
-        return repr(x)
-    return str(x)
-
-
-def _canon_frame(df):
-    cols = sorted(df.columns)
-    df = df[cols]
-    rows = sorted(
-        tuple(_canon_cell(v) for v in row)
-        for row in df.itertuples(index=False)
-    )
-    return cols, rows
 
 
 def run_parity(n_round: int) -> None:
@@ -91,6 +53,7 @@ def run_parity(n_round: int) -> None:
     )
     from aqi_analysis_apache_airflow_spark.schemas import CORPUS_TABLES
     from aqi_analysis_apache_airflow_spark.session import get_spark
+    from tests.test_oracle_parity import _canon_frame
 
     spark = get_spark(app_name=f"close-round-{n_round}-parity")
     con = duckdb.connect()
