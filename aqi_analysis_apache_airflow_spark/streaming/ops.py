@@ -58,9 +58,10 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
 def windowed_counts(
     events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
-    """Watermarked tumbling aggregation — the streaming twin of e1_tumbling_window. Late rows inside the
-    watermark still update their window; rows later than the watermark
-    are dropped WITH accounting (observable via
+    """Watermarked tumbling aggregation — the streaming twin of
+    e1_tumbling_window. Late rows inside the watermark still update
+    their window; rows later than the watermark are dropped WITH
+    accounting (observable via
     ``query.lastProgress['stateOperators'][0]['numRowsDroppedByWatermark']``)
     — unlike the reference's silent CDC drop."""
     return (
