@@ -17,7 +17,7 @@ Layout
 ``session``    SparkSession builder (UTC, AQE, Arrow).
 ``schemas``    explicit StructTypes for the AQI domain + test corpus.
 ``sources``    CSV/parquet scans (reference ops S1-S3).
-``operators``  projections/filters/joins/dedup/merge/surrogate (P*/F*/J*/A*).
+``operators``  filters/dedup/merge/surrogate keys/salted join (F*/A*).
 ``functions``  scalar + text + similarity + dedup + multimodal functions.
 ``pipelines``  source→stage and stage→NDS parity pipelines + CET/LSET.
 ``streaming``  Structured Streaming surface over the events table.

@@ -22,10 +22,10 @@ split count is ``min(ceil(bytes / maxPartitionBytes), row_groups)`` —
 a byte-only estimate is blind to a large file written as a few giant
 row groups (exactly the layout this corpus ships) and would skip the
 spread while the scan's real parallelism is still ~1 task. Row-group
-counts are read from local parquet footers, and only when they can
-change the decision (few files whose byte estimate already reaches
-the parallelism target); when a footer cannot be read the byte
-estimate stands (documented fallback).
+counts are read from the local parquet footer of every file larger
+than one split quantum, whatever the parallelism target (the caller
+compares the total with it only afterwards); when a footer cannot be
+read the byte estimate stands (documented fallback).
 
 The split quantum is read from ``spark.sql.files.maxPartitionBytes``
 with the Spark default (128 MiB) as fallback (ADVICE r13 #2) — a conf
@@ -100,10 +100,9 @@ def _natural_splits(df: DataFrame, quantum: int) -> int | None:
     unbounded (``sys.maxsize``) on remote storage, or None when it
     cannot be determined (no files / listing or sizing failure). Per
     file: min(ceil(bytes/quantum), row_groups) — a split is only
-    non-empty when it holds a row-group midpoint. Footers are
-    read only when they can lower the verdict below the byte estimate
-    (few files, byte estimate already >= the parallelism target is
-    checked by the caller)."""
+    non-empty when it holds a row-group midpoint. The footer of every
+    local file larger than one quantum is read, whether or not it can
+    change the verdict."""
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — any listing failure → unknown

@@ -1,6 +1,5 @@
 from .dedupe import keep_first
 from .filters import anti_join, cdc_window, not_in
-from .joins import dim_join, full_outer_union_keys
 from .merge import merge_upsert
 from .skew import salted_join
 from .surrogate import assign_missing_keys
@@ -9,8 +8,6 @@ __all__ = [
     "anti_join",
     "assign_missing_keys",
     "cdc_window",
-    "dim_join",
-    "full_outer_union_keys",
     "keep_first",
     "merge_upsert",
     "not_in",

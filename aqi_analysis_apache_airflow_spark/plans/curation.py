@@ -1985,14 +1985,6 @@ _DC3_PROBE_CAP = 500  # probe ids stay below this: a FIXED 20-probe eval
 # set at every scale factor (the corpus grows, the eval suite doesn't)
 _DC3_FLAG_SIM = 0.92  # well inside the ~0.99 probe-source margin
 
-#: session-conf flag gating the IVF prefilter path (verdict r7 task 5):
-#: "true" bounds the pair stream by cluster co-membership instead of
-#: the full |corpus|×|probes| product. Default OFF — the registry
-#: entry stays on the exact path, so the DuckDB oracle is unchanged.
-_DC3_IVF_FLAG = "spark.graft.dc3.ivfPrefilter"
-_DC3_IVF_CENTROIDS = 16
-_DC3_IVF_NPROBE = 4
-
 
 def _dc3_probes(emb: DataFrame) -> DataFrame:
     """The self-derived eval-probe set: every ``_DC3_PROBE_STEP``-th
@@ -2006,98 +1998,6 @@ def _dc3_probes(emb: DataFrame) -> DataFrame:
         F.transform(
             "embedding", lambda e: F.round(e.cast("double"), 1)
         ).alias("qv"),
-    )
-
-
-def _dc3_sims_ivf(emb: DataFrame, probes: DataFrame) -> DataFrame:
-    """dc3's IVF-prefiltered candidate scorer: (vec_id, eval_id, sim)
-    for corpus×probe pairs that SHARE an IVF cell — the 10k-probe
-    scale path the exact plan's docstring promises. Each probe ranks
-    the broadcast centroid table per-row (the ivf_assign argmax shape,
-    widened to top-``_DC3_IVF_NPROBE``); the (eval_id, cluster) probe
-    map and the exploded probe elements both broadcast, so the corpus
-    explode fans out only to probes probing its OWN cell and never
-    shuffles. Pairs outside every probed cell are never materialized —
-    that is the bound (plan-asserted in tests/test_dc3_prefilter.py).
-    Recall follows IVF semantics: a contaminated pair is missed only
-    if source and paraphrase quantize into different coarse cells AND
-    the probe does not probe the source's cell (n_probe tunes this;
-    n_probe == n_centroids recovers the exact path). The per-pair sim
-    uses the identical scaled-BIGINT fold as the exact path, so scores
-    agree bit-for-bit on every pair both paths produce."""
-    from ..functions.similarity import dot_fast, ivf_assign
-
-    centroids, assigned = ivf_assign(emb, _DC3_IVF_CENTROIDS)
-    cents_row = centroids.select(
-        "centroid_id",
-        "cvec",
-        F.sqrt(dot_fast(F.col("cvec"), F.col("cvec"))).alias("cnorm"),
-    ).agg(F.collect_list(F.struct("centroid_id", "cvec", "cnorm")).alias("__cents"))
-    # r13: probe norm projected once per row (not closed over inside
-    # the lambda, where interpreted HOF eval re-runs it per centroid)
-    qnorm = F.sqrt(dot_fast(F.col("qv"), F.col("qv")))
-    ranked = F.array_sort(
-        F.transform(
-            F.col("__cents"),
-            lambda c: F.struct(
-                (
-                    dot_fast(F.col("qv"), c["cvec"])
-                    / F.nullif(F.col("__qnorm") * c["cnorm"], F.lit(0.0))
-                ).alias("sim"),
-                (-c["centroid_id"]).alias("neg_id"),
-            ),
-        )
-    )
-    # degenerate corpora can yield fewer than n_probe centroids (every
-    # vector in one cell): slice by the ACTUAL tail length, else
-    # slice(-4, 4) on a shorter array returns [] and the prefilter
-    # would silently report everything un-contaminated (ADVICE r8).
-    # slice(start=0) throws, so the zero-centroid case routes through
-    # an empty slice of the same element type.
-    n_take = F.least(F.size(ranked), F.lit(_DC3_IVF_NPROBE))
-    probe_cells = (
-        probes.filter(dot_fast(F.col("qv"), F.col("qv")) > 0)
-        .withColumn("__qnorm", qnorm)
-        .join(F.broadcast(cents_row))
-        .select(
-            "eval_id",
-            F.explode(
-                F.when(n_take > 0, F.slice(ranked, -n_take, n_take)).otherwise(
-                    F.slice(ranked, 1, 0)
-                )
-            ).alias("s"),
-        )
-        .select("eval_id", (-F.col("s.neg_id")).alias("cluster"))
-    )
-    long_prod = lambda a, b: F.round(  # noqa: E731
-        a.cast("double") * b.cast("double") * F.lit(1e14)
-    ).cast("long")
-    aexp = assigned.select(
-        "vec_id", "cluster", F.posexplode("embedding").alias("pos", "x")
-    )
-    qexp = probes.select("eval_id", F.posexplode("qv").alias("pos", "y"))
-    return (
-        aexp.join(F.broadcast(probe_cells), "cluster")
-        .join(F.broadcast(qexp), ["eval_id", "pos"])
-        .groupBy("vec_id", "eval_id")
-        .agg(
-            F.sum(long_prod(F.col("x"), F.col("y"))).alias("dot"),
-            F.sum(long_prod(F.col("x"), F.col("x"))).alias("nx"),
-            F.sum(long_prod(F.col("y"), F.col("y"))).alias("ny"),
-        )
-        .filter((F.col("nx") > 0) & (F.col("ny") > 0))
-        .select(
-            "vec_id",
-            "eval_id",
-            F.round(
-                F.col("dot").cast("double")
-                / (
-                    F.sqrt(F.col("nx").cast("double"))
-                    * F.sqrt(F.col("ny").cast("double"))
-                ),
-                6,
-            ).alias("sim"),
-        )
     )
 
 
@@ -2155,55 +2055,40 @@ def dc3_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over |corpus|×|probes| pair groups with exact scaled-
     BIGINT sums (the knn1 convention — no BigDecimal in the fold, no
     Python). Zero-norm vectors on either side drop under the same
-    HAVING rule. At a 10k-probe eval suite set the session conf
-    ``spark.graft.dc3.ivfPrefilter`` to "true": the pair stream is
-    then bounded by IVF cell co-membership (:func:`_dc3_sims_ivf`,
-    sim_ivf's coarse quantizer — vectors sharing none of a probe's
-    ``_DC3_IVF_NPROBE`` probed cells never form a pair). The
-    registry/oracle path stays the exact default."""
+    HAVING rule."""
     emb = load_spread(spark, sf_dir, "embeddings")
     probes = _dc3_probes(emb)
-    prefilter = (
-        str(spark.conf.get(_DC3_IVF_FLAG, "false")).lower() == "true"
+    long_prod = lambda a, b: F.round(  # noqa: E731
+        a.cast("double") * b.cast("double") * F.lit(1e14)
+    ).cast("long")
+    cexp = emb.select("vec_id", F.posexplode("embedding").alias("pos", "x"))
+    qexp = probes.select("eval_id", F.posexplode("qv").alias("pos", "y"))
+    sims = (
+        cexp.join(F.broadcast(qexp), "pos")
+        .groupBy("vec_id", "eval_id")
+        .agg(
+            F.sum(long_prod(F.col("x"), F.col("y"))).alias("dot"),
+            F.sum(long_prod(F.col("x"), F.col("x"))).alias("nx"),
+            F.sum(long_prod(F.col("y"), F.col("y"))).alias("ny"),
+        )
+        .filter((F.col("nx") > 0) & (F.col("ny") > 0))
+        .select(
+            "vec_id",
+            "eval_id",
+            F.round(
+                F.col("dot").cast("double")
+                / (
+                    F.sqrt(F.col("nx").cast("double"))
+                    * F.sqrt(F.col("ny").cast("double"))
+                ),
+                6,
+            ).alias("sim"),
+        )
     )
-    if prefilter:
-        sims = _dc3_sims_ivf(emb, probes)
-    else:
-        long_prod = lambda a, b: F.round(  # noqa: E731
-            a.cast("double") * b.cast("double") * F.lit(1e14)
-        ).cast("long")
-        cexp = emb.select(
-            "vec_id", F.posexplode("embedding").alias("pos", "x")
-        )
-        qexp = probes.select(
-            "eval_id", F.posexplode("qv").alias("pos", "y")
-        )
-        sims = (
-            cexp.join(F.broadcast(qexp), "pos")
-            .groupBy("vec_id", "eval_id")
-            .agg(
-                F.sum(long_prod(F.col("x"), F.col("y"))).alias("dot"),
-                F.sum(long_prod(F.col("x"), F.col("x"))).alias("nx"),
-                F.sum(long_prod(F.col("y"), F.col("y"))).alias("ny"),
-            )
-            .filter((F.col("nx") > 0) & (F.col("ny") > 0))
-            .select(
-                "vec_id",
-                "eval_id",
-                F.round(
-                    F.col("dot").cast("double")
-                    / (
-                        F.sqrt(F.col("nx").cast("double"))
-                        * F.sqrt(F.col("ny").cast("double"))
-                    ),
-                    6,
-                ).alias("sim"),
-            )
-        )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("sim").desc(), F.col("eval_id")
     )
-    best = (
+    return (
         sims.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select(
@@ -2212,22 +2097,6 @@ def dc3_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("eval_id").alias("nearest_eval_id"),
             (F.col("sim") >= _DC3_FLAG_SIM).alias("contaminated"),
         )
-    )
-    if not prefilter:
-        return best
-    # prefilter mode: vectors matching NO probed cell have no candidate
-    # pairs — surface them as un-contaminated (NULL sim) so both modes
-    # emit one row per indexable vector
-    from ..functions.similarity import dot_fast
-
-    base = emb.filter(
-        dot_fast(F.col("embedding"), F.col("embedding")) > 0
-    ).select("vec_id")
-    return base.join(best, "vec_id", "left_outer").select(
-        "vec_id",
-        "max_eval_sim",
-        "nearest_eval_id",
-        F.coalesce(F.col("contaminated"), F.lit(False)).alias("contaminated"),
     )
 
 

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from ..functions.scalar import aqi_category, aqi_category_sql
 from ..operators.dedupe import keep_first
 from ..operators.filters import anti_join, cdc_window, not_in
-from ..operators.joins import dim_join, full_outer_union_keys
 from ..operators.merge import merge_upsert
 from .registry import load, load_spread, query
 
@@ -188,7 +187,7 @@ def j1_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("s_nationkey").alias("nationkey"))
         .agg(F.count("*").alias("n_suppliers"))
     )
-    return full_outer_union_keys(c, s, "nationkey")
+    return c.join(s, "nationkey", "full_outer")
 
 
 @query(
@@ -253,10 +252,8 @@ def j4_composite_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_seen = events.groupBy("user_id", "event_type").agg(
         F.min("ts").alias("first_ts")
     )
-    return dim_join(
-        events.select("event_id", "user_id", "event_type"),
-        first_seen,
-        ["user_id", "event_type"],
+    return events.select("event_id", "user_id", "event_type").join(
+        F.broadcast(first_seen), ["user_id", "event_type"]
     )
 
 

@@ -57,7 +57,6 @@ def st1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir)
     deduped = dedup_within_watermark(
         stream, keys=["user_id", "event_type"], watermark="2 hours"
@@ -87,7 +86,6 @@ def st2_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay drains."""
     from ..streaming.ops import read_events_stream, run_to_memory, windowed_counts
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir)
     wc = windowed_counts(stream, window="1 hour", watermark="2 hours")
     out = run_to_memory(wc, _sink_name("st2_stream_windowed_sink"), mode="complete")
@@ -129,7 +127,6 @@ def st3_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_attribution_join,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir)
     joined = stream_stream_attribution_join(stream, within="30 minutes")
     out = run_to_memory(joined, _sink_name("st3_join_sink"), mode="append")
@@ -183,7 +180,6 @@ def st4_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's max(ts) + INTERVAL."""
     from ..streaming.ops import read_events_stream, run_to_memory
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir)
     sessions = (
         stream.withWatermark("ts", "2 hours")
@@ -228,7 +224,6 @@ def st5_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import load_table
     from ..streaming.ops import read_events_stream, run_to_memory
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -286,7 +281,8 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import load_table
     from ..streaming.ops import read_events_stream
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # opened first: it pins the session zone the seed's ts cast reads
+    stream = read_events_stream(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="st6_wh_")
     wh = Warehouse(spark, root)
 
@@ -331,8 +327,7 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(_merge)
+        stream.writeStream.foreachBatch(_merge)
         .option("checkpointLocation", f"{root}/ckpt")
         .trigger(availableNow=True)
         .start()
@@ -453,7 +448,6 @@ def st7_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     before = spark.conf.get(provider_key, None)
     spark.conf.set(
@@ -544,7 +538,6 @@ def st8_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_stream_attribution_join,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir)
     joined = stream_stream_attribution_join(
         stream, within="30 minutes", watermark="0 seconds", how="left_outer"

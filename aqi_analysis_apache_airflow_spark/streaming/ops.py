@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+
 def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
     """File-source stream over events parquet (swap for Kafka in prod;
     the downstream plans are source-agnostic).
@@ -35,8 +36,10 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
     the legacy conf) and as plain microsecond TIMESTAMP_NTZ — so the
     schema is taken from a batch scan of the same files (metadata-only,
     no data read) and the ts conversion branches on the type actually
-    found, exactly like the batch loader in sources/readers.py."""
+    found, exactly like the batch loader in sources/readers.py. The
+    session time zone is pinned to UTC here, for every st* query."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = (
         spark.read.option("pathGlobFilter", "events.parquet")
         .parquet(path_dir)
@@ -48,7 +51,7 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
         .parquet(path_dir)
     )
     # TIMESTAMP (not NTZ): EventTimeWatermark only accepts TIMESTAMP.
-    # Session timezone is pinned UTC, so values line up with the batch
+    # With the zone pinned to UTC above, values line up with the batch
     # loader's NTZ microseconds.
     if isinstance(schema["ts"].dataType, T.LongType):  # raw nanos
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))

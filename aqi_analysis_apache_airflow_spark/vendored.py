@@ -4,10 +4,9 @@ The transformWithState state-server protocol (st7) needs
 ``google.protobuf`` in the driver, every Python worker, AND the
 streaming-runner subprocess the JVM forks. Only an environment
 variable set BEFORE the JVM launches reaches all three, so every entry
-point (``__spark_entry__.py``, ``bench.py``, ``tests/conftest.py``,
-``tools/close_round.py``) calls :func:`provide_protobuf` at import
-time, before it builds a SparkSession. This module imports no pyspark
-and starts no JVM.
+point (``__spark_entry__.py``, ``bench.py``, ``tests/conftest.py``)
+calls :func:`provide_protobuf` at import time, before it builds a
+SparkSession. This module imports no pyspark and starts no JVM.
 """
 
 from __future__ import annotations

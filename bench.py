@@ -138,10 +138,10 @@ Mover-rule enforcement record (the dated notes the rule requires):
 
 Single cross-JVM runs on this box swing ~±5% run-to-run (measured
 with identical configs back-to-back); one-query conclusions need
-interleaved same-process A/Bs. SPARK_GRAFT_BENCH_ONLY=<names> keeps
-the legacy single-process path (one JVM, those queries only, results
-to BENCH_PARTIAL.json) — that is also the vehicle for solo-dose
-pressure measurements."""
+interleaved same-process A/Bs.
+
+The REF freezes above used ``tools/freeze_bench_ref.py``, which is no
+longer shipped: ``git show 2c86f8a:tools/freeze_bench_ref.py``."""
 
 from __future__ import annotations
 
@@ -728,33 +728,6 @@ def _summarize(samples: dict[str, list[float]]) -> dict:
     }
 
 
-def _measure_dc3_twin(spark, sf_dir: str) -> float:
-    """dc3 IVF-prefilter twin (verdict r8 task 5): flag-gated path,
-    correctness-tested in tests/test_dc3_prefilter.py, timed here so
-    the 10k-probe scenario's claimed win stays a number, not prose."""
-    from aqi_analysis_apache_airflow_spark.plans import REGISTRY
-
-    _DC3_FLAG = "spark.graft.dc3.ivfPrefilter"
-    dc3 = REGISTRY["dc3_semantic_decontamination"]
-    _dc3_prior = spark.conf.get(_DC3_FLAG, None)
-    xs: list[float] = []
-    try:
-        spark.conf.set(_DC3_FLAG, "true")
-        for pass_no in range(3):  # warmup + 2 counted
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            dc3.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            if pass_no > 0:
-                xs.append(time.perf_counter() - t0)
-    finally:
-        # restore the PRIOR state, don't pin "false" (ADVICE r9)
-        if _dc3_prior is None:
-            spark.conf.unset(_DC3_FLAG)
-        else:
-            spark.conf.set(_DC3_FLAG, _dc3_prior)
-    return median(xs)
-
-
 def _run_child(spec_path: str) -> None:
     """Child entry: one fresh JVM, one block of work, detail to spec['out']."""
     with open(spec_path) as fh:
@@ -780,8 +753,6 @@ def _run_child(spec_path: str) -> None:
             out["canary"] = canary
         samples = _measure(spark, sf_dir, spec["queries"], n_passes)
         out.update(_summarize(samples))
-        if spec.get("dc3_twin"):
-            out["dc3_twin_s"] = round(_measure_dc3_twin(spark, sf_dir), 4)
     with open(spec["out"], "w") as fh:
         json.dump(out, fh, indent=1)
     spark.stop()
@@ -877,45 +848,11 @@ def _mover_table(
     }
 
 
-def _legacy_single_process(sf_dir: str, names: list[str], n_passes: int) -> None:
-    """SPARK_GRAFT_BENCH_ONLY path: one JVM, the named queries only —
-    the iteration aid AND the solo-dose arm of pressure measurements.
-    Results go to BENCH_PARTIAL.json, never the full-run artifact."""
-    from aqi_analysis_apache_airflow_spark.session import get_spark
-
-    spark = get_spark(app_name="bench")
-    _warmup(spark, sf_dir)
-    canary = _run_canary(spark, sf_dir)
-    samples = _measure(spark, sf_dir, names, n_passes)
-    summary = _summarize(samples)
-    detail = {
-        "metric": "total_headline_seconds",
-        "value": summary["total"],
-        "unit": "sec",
-        "sf": _sf_of(sf_dir),
-        "passes": n_passes,
-        "mode": "single-process (SPARK_GRAFT_BENCH_ONLY)",
-        **summary,
-        **({"canary": canary} if canary else {}),
-    }
-    with open(os.path.join(_HERE, "BENCH_PARTIAL.json"), "w") as fh:
-        json.dump(detail, fh, indent=1)
-    _print_line(
-        total=summary["total"],
-        queries=summary["queries"],
-        sf=_sf_of(sf_dir),
-        n_passes=n_passes,
-        detail_name="BENCH_PARTIAL.json",
-        box_state=canary["box_state"] if canary else None,
-    )
-
-
 def _print_line(
     total: float,
     queries: dict[str, float],
     sf: float,
     n_passes: int,
-    detail_name: str,
     box_state: float | None,
     st_total: float | None = None,
     appx_total: float | None = None,
@@ -938,7 +875,7 @@ def _print_line(
             "queries": shown,
             "sf": sf,
             "passes": n_passes,
-            "detail": detail_name,
+            "detail": "BENCH_DETAIL.json",
             **({"box_state": round(box_state, 3)} if box_state is not None else {}),
             **({"st_total": round(st_total, 2)} if st_total is not None else {}),
             **(
@@ -977,17 +914,6 @@ def main() -> None:
             f"SPARK_GRAFT_BENCH_PASSES={n_passes}: need >= 1 counted pass "
             "(pass 0 is always an uncounted warmup)"
         )
-
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if only:
-        keep = {n.strip() for n in only.split(",") if n.strip()}
-        unknown = keep - set(HEADLINE)
-        if unknown:
-            raise SystemExit(f"SPARK_GRAFT_BENCH_ONLY names not in HEADLINE: {unknown}")
-        _legacy_single_process(
-            sf_dir, [n for n in HEADLINE if n in keep], n_passes
-        )
-        return
 
     from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 
@@ -1045,10 +971,6 @@ def main() -> None:
                     "out": os.path.join(tmpdir, f"appendix_b{k}.json"),
                 }
             )
-        # dc3's flag-gated IVF twin rides the LAST batch child (the
-        # final appendix block, or the final headline block now that
-        # the r13 promotion leaves the appendix empty)
-        specs[-1]["dc3_twin"] = True
 
     # Cool-box gate (verdict r12 task 3): the r12 artifact shipped with
     # blocks at box_state 1.156/1.088 after the child's OWN canary
@@ -1114,12 +1036,6 @@ def main() -> None:
         and (res.get("canary", {}).get("box_state") or 0) > _CANARY_HOT_RATIO
     ]
 
-    # dc3's twin may ride the last headline child when the appendix is
-    # empty (r13 promotion) — surface it wherever it landed
-    dc3_twin_s = next(
-        (r["dc3_twin_s"] for r in results.values() if "dc3_twin_s" in r),
-        None,
-    )
     st_detail = None
     appx_detail = None
     if extras:
@@ -1157,10 +1073,6 @@ def main() -> None:
                     "box_state": bs,
                 }
             )
-            if "dc3_twin_s" in res:
-                appx_detail["queries"][
-                    "dc3_semantic_decontamination__ivf_prefilter"
-                ] = res["dc3_twin_s"]
         appx_detail["total"] = round(
             sum(
                 res["total"]
@@ -1174,13 +1086,7 @@ def main() -> None:
     if abs(sf - 0.1) < 1e-9:
         all_q = dict(timings)
         if appx_detail:
-            all_q.update(
-                {
-                    n: t
-                    for n, t in appx_detail["queries"].items()
-                    if not n.endswith("__ivf_prefilter")
-                }
-            )
+            all_q.update(appx_detail["queries"])
         movers = _mover_table(all_q, box_by_query)
 
     with open(os.path.join(_HERE, "BENCH_DETAIL.json"), "w") as fh:
@@ -1199,7 +1105,6 @@ def main() -> None:
                 "raw_spread_pct": raw_spread,
                 "blocks": blocks_detail,
                 **({"movers": movers} if movers else {}),
-                **({"dc3_twin_s": dc3_twin_s} if dc3_twin_s else {}),
                 **({"streaming": st_detail} if st_detail else {}),
                 **({"appendix": appx_detail} if appx_detail else {}),
             },
@@ -1212,7 +1117,6 @@ def main() -> None:
         queries=timings,
         sf=sf,
         n_passes=n_passes,
-        detail_name="BENCH_DETAIL.json",
         box_state=box_state,
         st_total=st_detail["total"] if st_detail else None,
         appx_total=appx_detail["total"] if appx_detail else None,

@@ -16,7 +16,9 @@ from aqi_analysis_apache_airflow_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", shuffle_partitions=8)
+    s = get_spark(
+        app_name="tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     yield s
 
 

@@ -6,6 +6,10 @@ query, pipeline, benchmark or tool. The scan reads code identifiers
 only (``ast.Name``, ``ast.Attribute`` and imported names), so a mention
 in a docstring or comment is not a caller, and neither is a re-export
 in an ``__init__.py`` or a reference inside the definition itself.
+
+No code of the engine names a private ``spark.graft.*`` session conf:
+a result that such a conf switches is one the driver's vanilla session
+never produces.
 """
 
 from __future__ import annotations
@@ -102,3 +106,31 @@ def test_every_name_outside_plans_has_a_non_test_caller():
         )
     )
     assert not uncalled, "no caller outside the tests:\n" + "\n".join(uncalled)
+
+
+#: Prefix of the session confs private to this engine.
+_PRIVATE_CONF = "spark.graft."
+
+
+def test_no_code_reads_a_private_session_conf():
+    found = []
+    for path in _py_files(PKG) + [os.path.join(REPO, "__spark_entry__.py")]:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for top in tree.body:
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                owner = top.name
+            elif isinstance(top, ast.Assign):
+                owner = ",".join(ast.unparse(t) for t in top.targets)
+            elif isinstance(top, ast.AnnAssign):
+                owner = ast.unparse(top.target)
+            else:
+                owner = f"line {top.lineno}"
+            found += [
+                f"{os.path.relpath(path, REPO)}::{owner}: {node.value!r}"
+                for node in ast.walk(top)
+                if isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.startswith(_PRIVATE_CONF)
+            ]
+    assert not found, "private session confs:\n" + "\n".join(found)
