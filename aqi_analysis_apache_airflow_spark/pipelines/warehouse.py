@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -22,6 +23,11 @@ from pyspark.sql import types as T
 
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
+        # The swap and the table checks go through os.path, which reads
+        # "file:///x" as a relative directory named "file:" while Spark
+        # writes to /x; only a plain local path means the same to both.
+        if urlparse(root).scheme:
+            raise ValueError(f"warehouse root must be a local path: {root!r}")
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)

@@ -14,8 +14,9 @@ Determinism notes (why these can hash-match a batch oracle):
   sink: WHICH duplicate row survives is first-arrival
   (partition-order) nondeterministic, but the keys themselves are not.
 - Streaming event time must be TIMESTAMP (watermarks reject NTZ), so
-  the session timezone is pinned UTC at runtime and results are cast
-  back to NTZ to line up with the batch loader / DuckDB wall times.
+  each query pins the session time zone to UTC for its call
+  (``_utc_query``) and casts results back to NTZ to line up with the
+  batch loader / DuckDB wall times.
 
 At 100 TB these same plans run unbounded (Kafka source, real
 watermarks); the bounded replay here is the correctness harness,
@@ -24,14 +25,49 @@ mirroring `tests/test_streaming.py`'s batch-twin strategy.
 
 from __future__ import annotations
 
+import functools
 import itertools
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .registry import query
+from .registry import QueryFn, query
 
 _SINK_SEQ = itertools.count()
+
+
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the block, then restore the caller's
+    value, or unset the key if the caller had not set it."""
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def _utc_query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """``@query`` that runs the function under a UTC session time zone
+    and hands the caller's zone back afterwards. The returned frame
+    keeps UTC semantics: Spark binds the zone into its casts when the
+    frame is analyzed, which happens inside the call."""
+
+    def deco(fn: QueryFn) -> QueryFn:
+        @functools.wraps(fn)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            with _session_conf(spark, "spark.sql.session.timeZone", "UTC"):
+                return fn(spark, sf_dir)
+
+        return query(name, oracle)(pinned)
+
+    return deco
 
 
 def _sink_name(prefix: str) -> str:
@@ -41,7 +77,7 @@ def _sink_name(prefix: str) -> str:
     return f"{prefix}_{next(_SINK_SEQ)}"
 
 
-@query(
+@_utc_query(
     "st1_stream_dedup",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
 )
@@ -65,7 +101,7 @@ def st1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "event_type")
 
 
-@query(
+@_utc_query(
     "st2_stream_windowed",
     oracle="""
     WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events)
@@ -98,7 +134,7 @@ def st2_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@_utc_query(
     "st3_stream_stream_join",
     oracle="""
     WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
@@ -139,7 +175,7 @@ def st3_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@_utc_query(
     "st4_stream_session_window",
     oracle="""
     WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events),
@@ -203,7 +239,7 @@ def st4_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@_utc_query(
     "st5_stream_static_join",
     oracle="""
     SELECT event_id, user_id, c_mktsegment
@@ -235,7 +271,7 @@ def st5_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@query(
+@_utc_query(
     "st6_stream_merge_upsert",
     oracle="""
     WITH ev AS (
@@ -281,7 +317,6 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.readers import load_table
     from ..streaming.ops import read_events_stream
 
-    # opened first: it pins the session zone the seed's ts cast reads
     stream = read_events_stream(spark, sf_dir)
     root = tempfile.mkdtemp(prefix="st6_wh_")
     wh = Warehouse(spark, root)
@@ -356,7 +391,7 @@ def _ensure_protobuf(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(zip_path)
 
 
-@query(
+@_utc_query(
     "st7_stream_tws_user_stats",
     oracle="""
     SELECT user_id,
@@ -448,14 +483,12 @@ def st7_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
+    with _session_conf(
+        spark,
+        "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
-    )
-    try:
+    ):
         stream = read_events_stream(spark, sf_dir).select(
             "user_id",
             "value",
@@ -472,11 +505,6 @@ def st7_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = run_to_memory(
             stats, _sink_name("st7_tws_user_stats_sink"), mode="update"
         )
-    finally:
-        if before is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, before)
     return out.select(
         "user_id",
         "n_events",
@@ -489,7 +517,7 @@ def st7_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+@_utc_query(
     "st8_stream_outer_join",
     oracle="""
     WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,

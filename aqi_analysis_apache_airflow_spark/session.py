@@ -41,8 +41,9 @@ def get_spark(
         # 24g heap ran ~7% SLOWER — larger G1 region scan cost —
         # and -XX:+UseParallelGC was within the ±4% box noise)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # JVM-flag passthrough for GC/heap A/Bs (must be set before the
-        # JVM starts, so it has to ride the builder, not spark.conf)
+        # JVM-flag passthrough (perfbench pins the JVM tmpdir and time
+        # zone with it); it must be set before the JVM starts, so it
+        # rides the builder, not spark.conf
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""),

@@ -24,7 +24,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reader rejects ([PARQUET_TYPE_ILLEGAL]). We flip the legacy conf to
     read it as raw nanos and truncate to microsecond TIMESTAMP_NTZ with
     exact integer arithmetic (``div 1000`` — never double division,
-    which loses sub-microsecond precision near 2^53). The conf is
+    which loses sub-microsecond precision near 2^53). The micros are
+    added to the NTZ epoch, because a TIMESTAMP → TIMESTAMP_NTZ cast
+    would shift every value by the session time zone. The conf is
     runtime-settable and harmless for the other tables.
     """
     if name == "events":
@@ -33,7 +35,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts",
-                F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz"),
+                F.expr(
+                    "timestampadd(MICROSECOND, ts div 1000, "
+                    "TIMESTAMP_NTZ'1970-01-01 00:00:00')"
+                ),
             )
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")

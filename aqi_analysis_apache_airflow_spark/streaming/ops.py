@@ -37,9 +37,9 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
     schema is taken from a batch scan of the same files (metadata-only,
     no data read) and the ts conversion branches on the type actually
     found, exactly like the batch loader in sources/readers.py. The
-    session time zone is pinned to UTC here, for every st* query."""
+    stream's TIMESTAMP wall times equal the batch loader's NTZ values
+    under a UTC session zone, which every st* query pins for its call."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = (
         spark.read.option("pathGlobFilter", "events.parquet")
         .parquet(path_dir)
@@ -51,8 +51,6 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
         .parquet(path_dir)
     )
     # TIMESTAMP (not NTZ): EventTimeWatermark only accepts TIMESTAMP.
-    # With the zone pinned to UTC above, values line up with the batch
-    # loader's NTZ microseconds.
     if isinstance(schema["ts"].dataType, T.LongType):  # raw nanos
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -1,147 +1,26 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Time the headline registry queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Prints ONE JSON line:
-  {"metric": "total_headline_seconds", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": 0.1}
+Each query is forced through the noop writer, so every column and
+aggregate is computed (a bare count() would let Catalyst prune the
+projections being timed).
 
-Each query is forced through the noop writer so every column/aggregate
-is actually computed (a bare count() would let Catalyst prune the
-projections being benchmarked).
+``HEADLINE`` runs in frozen blocks of ``BLOCK_CAPACITY`` queries, each
+in its own child process and fresh JVM: one uncounted warmup pass, then
+$SPARK_GRAFT_BENCH_PASSES (default 3) counted interleaved passes with
+the session cache cleared before every query, plus adaptive top-ups
+while a query's trimmed spread exceeds 30%. A query's time is its
+median. Blocks keep the per-query JVM dose fixed as the list grows:
+BENCH_PRESSURE.json measured a 65-query subset 1.13x slower inside a
+186-query same-JVM run than solo, and BENCH_PRESSURE2.json measured
+that subset in block mode against solo. st1-st8 run in one more child.
 
-Methodology (round 12 — FIXED FRESH-JVM BLOCKS, verdict r11 task 2):
-the headline is split into frozen blocks of ``BLOCK_CAPACITY`` (=73)
-queries; each block runs in its OWN child process / fresh JVM with the
-full prior methodology (one uncounted warmup pass, then
-$SPARK_GRAFT_BENCH_PASSES (default 3) counted INTERLEAVED passes,
-median per query, adaptive top-ups while the trimmed spread > 30%, the
-session cache cleared between queries). Streaming (st1-st8) and the
-appendix run in their own children. WHY blocks: shared-JVM dose is
-measured, not assumed — BENCH_PRESSURE.json (2026-08-15) showed a
-65-query subset running 1.131x slower inside a 186-query same-JVM
-headline than solo under the default codegen cache, still 1.062x at
-maxEntries=5000, and r11's +20% common-query shift on a
-canary-verified-clean box was exactly this mechanism at 219 queries
-(every worst mover lived in an untouched file). A 73-query block IS
-the solo dose (BENCH_PRESSURE's solo arm was 65 queries in one JVM),
-so per-query medians are dose-independent by construction and
-round-over-round comparisons hold PER BLOCK as the headline grows.
-BENCH_PRESSURE2.json (2026-08-16) certifies the residual: the same 65
-subset inside block-mode vs solo. The price is one JVM startup +
-warmup per block (~20s x 6 children).
-
-HEADLINE is APPEND-ONLY (it always has been: additions land at the
-tail each round): consecutive 73-query slices therefore have FROZEN
-membership — blocks 1..k never change once full; new queries fill the
-last partial block, then open a new one. The committed block map is
-exactly ``headline_blocks()`` over the committed list. r12 totals are
-the new baseline; earlier rounds' totals were same-JVM-dosed and are
-NOT comparable (r11: 251.9s/219q one-JVM; the same queries block-mode
-run faster by roughly the removed pressure).
-
-Round 13 (verdict r12 tasks 3+6): the ENTIRE r12 appendix (130
-queries incl. the r13 additions) is PROMOTED into the headline —
-blocks 4-5 freeze its membership, the appendix path stays as the
-catch-basin for future not-yet-promoted registry additions (empty
-today). And the headline is GATED on a cool box: a batch child whose
-canary ends hot (> 1.10x) after its own cooldown cycle is re-spawned
-whole (fresh JVM, fresh canary) up to $SPARK_GRAFT_BENCH_BLOCK_RETRIES
-(default 2) times; a run that STILL carries a hot block is stamped
-``canonical: false`` in BENCH_DETAIL.json and ``hot_blocks`` on the
-stdout line — the r12 gate artifact shipped at box_state 1.156/1.088
-and measured ~10-17% hot vs its same-day cool twins; that cannot
-recur silently.
-
-Box-state canary (verdict r10 task 2): EVERY batch child (headline +
-appendix blocks) measures q1 against its committed solo reference
-first, stamps the per-block ``box_state``, and a hot box (> 1.10x)
-gets up to 5 60s cooldown + retry cycles. The streaming child carries NO canary
-(r9 finding: streams are measured on the truly fresh JVM; the r11
-canary-before-streaming wrinkle is hereby undone — streaming medians
-are again comparable to r10-and-earlier).
-
-Worst-mover gate (verdict r11 task 4): when BENCH_REF.json exists
-(frozen per-query medians — the geometric mean of the two 2026-08-16
-full block-mode runs; see its methodology field), the run
-emits the top-10 ``median/ref`` movers into the detail file plus a
-``movers15`` count (ratio > 1.5) on the stdout line; each mover row
-carries its block's box_state so a hot-block artifact is visible.
-RAW ratios, deliberately NOT canary-normalized: the canary measures
-box state at BLOCK START and 2026-08-16 data shows that overestimates
-the block window (block-1 canary 1.223 while q1's in-block median ran
-0.767/0.94 = 0.82 of reference minutes later — post-workload heat
-decays faster than a block runs). The canary is a flag, not a
-divisor. Any mover > 1.5x on a cool block two rounds running gets a
-dated note or a fix. Honest bound on single-run movers: block WINDOWS
-on this box swing ~+-20% in both directions at the minutes scale
-(block 1 measured 48.5/71.6/64.8s across three same-day runs while
-its start-of-block canary read 1.22/1.19/0.98 — the canary detects
-pre-existing heat but cannot predict the window), which is why the
-REF is a two-run mean and a single-round mover list is advisory; the
-dose bias the blocks removed was SYSTEMATIC (always up, growing with
-headline size), unlike this zero-mean window noise.
-
-Mover-rule enforcement record (the dated notes the rule requires):
-- 2026-08-16 (r13): the 11 r12 cool-block movers (pit1 1.86x, mg1,
-  mw1, itv1, split3, dq7, div1, w8, lm2, wm1, sch1) were re-measured
-  on TWO canonical all-cool r13 runs: 0.87-1.25x and 0.77-1.04x —
-  cleared, no code change warranted. Root cause: 10 of the 11 shared
-  r12 block 2, whose WINDOW ran slow despite a cool start-of-block
-  canary (the documented canary-cannot-predict-the-window limit); the
-  mover table now emits flagged_block_histogram so a one-block mover
-  cluster is visible as a window artifact at a glance.
-- 2026-08-16 (r13): gof1_weekday_uniformity flags at ~1.89x on both
-  cool runs (0.28s -> 0.53s) BY DESIGN: the r12-ADVICE fix re-derived
-  its null as calendar-occupancy-weighted (windows over the 7-row
-  per-type relation + the broadcast chi-square spine replaced a bare
-  groupBy). Real plan change, oracle-green at all SFs; its BENCH_REF
-  row intentionally keeps the old plan's time until the next freeze
-  so the flag records the regression-shaped delta honestly.
-- 2026-08-17 (r13, session 2): iqr1_tukey_fences flags at 1.46x/1.68x
-  on two canonical all-cool runs (0.88s -> ~1.3-1.5s) BY DESIGN: the
-  r13 value-spine rewrite trades sf0.1 wall for the measured
-  e=0.82 -> 0.16/decade scaling fix (SCALING.md r13 — 5.92s -> 2.17s
-  at 10x; the r12 row-ranking form was linear on |groups|=3 cores).
-  Same convention as gof1 above: the BENCH_REF row keeps the r12
-  plan's time so the delta stays visible until the next full freeze.
-  The 10 session-2 additions + mcn1 got REF rows via
-  freeze_bench_ref --add-missing (geometric mean of the two
-  2026-08-17 canonical runs, headline 284.2s / 318.9s, every block
-  box_state 0.82-0.92).
-- 2026-08-18 (r13, optimization session): the gate run's movers
-  (gof1/iqr1 per the dated notes above; mg1, hn1, wmed1, place1,
-  gdpr1 at 1.5-1.7x) ride a measured CROSS-DAY drift the canary
-  cannot see: the 282-query untouched control population ran at
-  median 1.27x its 2026-08-17 medians on three all-cool canonical
-  runs (p75 1.37 — so a >1.5x flag is drift + one-block noise, and
-  the flagged five live in three different blocks), while the 36
-  optimization-touched queries ran at median 0.72x through the same
-  headwind (decomposition in OPTIMIZATION_r13.md). No untouched
-  query moved outside drift+noise; no code change warranted. Note
-  the canary's q1 reference is itself ~0.85x stale this round (q1
-  gained the load spread), so box_state reads ~15% optimistic until
-  the next REF freeze.
-- 2026-08-18 (r14, optimization round 2): PERF_r13 flagged hits1 at
-  0.748x "regressed" — the same cross-day drift (hits1 was untouched
-  in r13; the 282-query control ran 1.27x that day). The r14 baseline
-  run on a healthy box (tools/bench_r14_baseline.json, all blocks
-  0.92-1.07) measures hits1 at 2.78s = 0.98x its frozen REF —
-  cleared, no code change warranted. The same run's movers15=2 were
-  exactly the dated gof1/iqr1 plan-trade rows above; both rows (and
-  the q1 canary reference) are refreshed by the r14 REF re-freeze.
-- 2026-08-18 (r14): BENCH_REF.json re-frozen as the per-query
-  geometric mean of the round's two post-change canonical runs
-  (freeze_bench_ref --refreeze; the methodology field carries both
-  run stamps), and _CANARY_REF_S updated from the same two runs —
-  closing the r13 note above (box_state no longer reads ~15%
-  optimistic against a stale q1 row).
-
-Single cross-JVM runs on this box swing ~±5% run-to-run (measured
-with identical configs back-to-back); one-query conclusions need
-interleaved same-process A/Bs.
-
-The REF freezes above used ``tools/freeze_bench_ref.py``, which is no
-longer shipped: ``git show 2c86f8a:tools/freeze_bench_ref.py``."""
+Stdout is ONE JSON line of at most 1,900 chars, because the consumer
+keeps only the last 2,000: ``metric``, ``value`` (sum of the headline
+medians), ``unit``, ``queries`` (per-query medians; the fastest fold
+into ``zz_others`` when the line would overflow), ``sf``, ``passes``,
+``detail`` and ``st_total``. Per-query spreads, per-block totals and
+the streaming child's detail go to BENCH_DETAIL.json."""
 
 from __future__ import annotations
 
@@ -161,6 +40,8 @@ from aqi_analysis_apache_airflow_spark.vendored import provide_protobuf
 
 provide_protobuf()
 
+# Append-only: new queries go at the tail, so every full block of
+# BLOCK_CAPACITY keeps its membership and stays comparable across runs.
 HEADLINE = [
     "q1_pricing_summary",
     "q3_shipping_priority",
@@ -188,8 +69,6 @@ HEADLINE = [
     "sdd1_semantic_dedup",
     "q7_nation_volume",
     "q8_market_share",
-    # round-3 additions (new rows vs r02 — absence in older BENCH_r*
-    # files means "not yet implemented", not a regression)
     "samp1_stratified_sample",
     "pack1_sequence_packing",
     "d7_cross_source_dedup",
@@ -234,7 +113,6 @@ HEADLINE = [
     "g12_conditional_aggs",
     "r3_new_users_cumulative",
     "dq3_distribution_drift",
-    # round-4 additions
     "q2_min_cost_supplier",
     "q9_product_profit",
     "q11_important_stock",
@@ -284,7 +162,6 @@ HEADLINE = [
     "wmed2_weighted_median_banded",
     "pv1_pivot_multi_agg",
     "dq8_uniqueness_audit",
-    # round-6 additions
     "ret1_bm25_topk",
     "shuf1_deterministic_shard",
     "gdpr1_cascade_delete",
@@ -305,7 +182,6 @@ HEADLINE = [
     "snm1_sorted_neighborhood",
     "d11_segment_dedup",
     "split3_temporal_split",
-    # round-7 additions
     "dc3_semantic_decontamination",
     "km1_lloyd_kmeans",
     "sub2_exact_substring_dedup",
@@ -350,17 +226,11 @@ HEADLINE = [
     "sax1_sax_symbols",
     "dq9_contract_check",
     "gap1_interarrival_stats",
-    # round-8 additions
     "winnow2_fingerprint_pairs",
     "ppx1_unigram_cross_entropy",
     "rec1_ivf_recall",
     "cur1_curriculum_stages",
     "wv1_winnowing_recall",
-    # round-9 additions: the 5 most expensive appendix queries promoted
-    # to the 3-pass interleaved methodology (verdict r8 task 4 — they
-    # were single-cold-pass-only before; g6 also carries the r9
-    # Expand-plan fix, 22.4s cold / 5.4s interleaved → 2.2s), plus the
-    # new fixed-point k-core registry query
     "g6_approx_sketches",
     "m1_binary_features",
     "d6_dedup_clusters",
@@ -375,16 +245,8 @@ HEADLINE = [
     "wm1_watermark_detect",
     "kn1_kneser_ney_bigram",
     "m5_frame_overlap_pairs",
-    # round-10 additions: the lpa1/gr1 fixed-point convergence twins
-    # (kcore2 precedent — the convergence machinery is hash-certified);
-    # both are round-count-bound (~1s/round scheduling floor, gr2 3
-    # rounds / lpa2 4 full rounds at sf0.1)
     "gr2_fixed_point_pagerank",
     "lpa2_fixed_point_communities",
-    # round-11 promotions (verdict r10 task 4): the expensive /
-    # representative round-10 appendix entries move to the 3-pass
-    # interleaved methodology so round-over-round comparisons cover
-    # them at full rigor (committed appendix medians 0.55-3.7s)
     "bh1_fdr_source_drift",
     "da1_detector_agreement",
     "perm1_randomization_test",
@@ -400,14 +262,6 @@ HEADLINE = [
     "auc1_score_auc",
     "mk1_trend_test",
     "ece1_reliability_diagram",
-    # round-13 promotion (verdict r12 task 6): the ENTIRE r12 appendix
-    # moves into the block headline — the appendix ran the same
-    # fresh-JVM methodology but with alphabetically-shifting block
-    # membership and no mover gating; freezing these 130 names here
-    # (alphabetical at promotion time, append-only after) makes blocks
-    # 4-5 per-block comparable from r13 on and retires the appendix
-    # (it stays as the catch-basin for not-yet-promoted additions).
-    # Includes the two round-13 queries (caldrift1, pperm1).
     "a1_distinct",
     "acf1_daily_autocorrelation",
     "aniso1_embedding_anisotropy",
@@ -538,9 +392,6 @@ HEADLINE = [
     "x7_array_hof",
     "x8_map_ops",
     "x9_unpivot",
-    # round-13 late addition (block 5 fills toward 73): no BENCH_REF
-    # row yet — landed after the two-run r13 freeze window, row due
-    # next round (the iqr1/gof2 precedent)
     "mcn1_mcnemar_rules",
     "cochq1_cochran_q",
     "cliffs1_cliffs_delta",
@@ -557,10 +408,8 @@ HEADLINE = [
     "eo1_equalized_odds",
 ]
 
-#: Frozen block capacity (see module docstring). r12: 219 headline
-#: queries = exactly 3 full blocks. r13: the appendix promotion brings
-#: the headline to 349 = 4 full blocks + block 5 at 57; new additions
-#: append to block 5 until it fills.
+#: Frozen block size. 363 headline queries = 4 full blocks + block 5
+#: at 71; new additions fill block 5, then open block 6.
 BLOCK_CAPACITY = 73
 
 
@@ -571,27 +420,6 @@ def headline_blocks() -> list[list[str]]:
         HEADLINE[i : i + BLOCK_CAPACITY]
         for i in range(0, len(HEADLINE), BLOCK_CAPACITY)
     ]
-
-
-# Box-state canary (verdict r10 task 2): q1's committed 3-pass median
-# at sf0.1 on a verified-idle box (BENCH_DETAIL.json @ a095b1a),
-# measured FIRST on a fresh JVM — which is exactly how every block
-# child runs it, so the reference carries over to block mode.
-_CANARY_NAME = "q1_pricing_summary"
-_CANARY_REF_S = 0.94
-_CANARY_HOT_RATIO = 1.10  # >=10% is real heat (cross-JVM noise is
-# ±4-5%, measured); a hot box cools 60s per retry, up to 5 retries —
-# one retry was NOT enough (2026-08-16: a block run started ~6 min
-# after an 18-min all-core pytest suite read 1.19 after one cooldown
-# and the whole run measured ~1.14x the same-day clean run; the
-# post-workload heat decays over MINUTES, so the canary loops until
-# the box reads cool or the budget is spent, and the final reading is
-# stamped either way)
-_CANARY_COOLDOWN_S = 60
-_CANARY_MAX_RETRIES = 5
-
-_REF_PATH = os.path.join(_HERE, "BENCH_REF.json")
-_MOVER_FLAG_RATIO = 1.5
 
 
 def median(xs: list[float]) -> float:
@@ -653,44 +481,6 @@ def _time_query(spark, sf_dir: str, name: str) -> float:
     return time.perf_counter() - t0
 
 
-def _canary_median(spark, sf_dir: str) -> float:
-    xs: list[float] = []
-    for pass_no in range(4):  # pass 0 = uncounted warmup
-        dt = _time_query(spark, sf_dir, _CANARY_NAME)
-        if pass_no > 0:
-            xs.append(dt)
-    return median(xs)
-
-
-def _run_canary(spark, sf_dir: str) -> dict | None:
-    """q1 vs the committed reference; up to _CANARY_MAX_RETRIES
-    cooldown+retry cycles on a hot box, final reading stamped either
-    way. Only meaningful at sf0.1 (the committed scale) — None
-    elsewhere."""
-    if abs(_sf_of(sf_dir) - 0.1) > 1e-9:
-        return None
-    first = _canary_median(spark, sf_dir)
-    box_state = first / _CANARY_REF_S
-    detail = {
-        "query": _CANARY_NAME,
-        "ref_s": _CANARY_REF_S,
-        "first_median_s": round(first, 4),
-        "first_ratio": round(box_state, 3),
-        "retries": 0,
-        "readings": [round(box_state, 3)],
-    }
-    retries = 0
-    while box_state > _CANARY_HOT_RATIO and retries < _CANARY_MAX_RETRIES:
-        time.sleep(_CANARY_COOLDOWN_S)
-        retries += 1
-        box_state = _canary_median(spark, sf_dir) / _CANARY_REF_S
-        detail["readings"].append(round(box_state, 3))
-    detail["retries"] = retries
-    detail["cooldown_s"] = _CANARY_COOLDOWN_S
-    detail["box_state"] = round(box_state, 3)
-    return detail
-
-
 def _measure(
     spark,
     sf_dir: str,
@@ -733,28 +523,13 @@ def _run_child(spec_path: str) -> None:
     with open(spec_path) as fh:
         spec = json.load(fh)
     sf_dir = spec["sf_dir"]
-    n_passes = spec["n_passes"]
     from aqi_analysis_apache_airflow_spark.session import get_spark
 
     spark = get_spark(app_name=f"bench-{spec['label']}")
     _warmup(spark, sf_dir)
-    out: dict = {"label": spec["label"]}
-    if spec["kind"] == "streaming":
-        # NO canary here: streams are measured on the truly fresh JVM
-        # (r9 finding — after ~850 same-JVM batch executions every
-        # availableNow replay ran 5-10x slower while batch queries in
-        # the same JVM stayed at full speed; production streams run in
-        # dedicated drivers, so fresh-JVM is the honest number).
-        samples = _measure(spark, sf_dir, spec["queries"], n_passes)
-        out.update(_summarize(samples))
-    else:
-        canary = _run_canary(spark, sf_dir)
-        if canary is not None:
-            out["canary"] = canary
-        samples = _measure(spark, sf_dir, spec["queries"], n_passes)
-        out.update(_summarize(samples))
+    samples = _measure(spark, sf_dir, spec["queries"], spec["n_passes"])
     with open(spec["out"], "w") as fh:
-        json.dump(out, fh, indent=1)
+        json.dump({"label": spec["label"], **_summarize(samples)}, fh, indent=1)
     spark.stop()
 
 
@@ -782,88 +557,16 @@ def _spawn_child(spec: dict, log_path: str) -> dict:
         return json.load(fh)
 
 
-def _mover_table(
-    merged_queries: dict[str, float], box_by_query: dict[str, float]
-) -> dict | None:
-    """Top-10 median/ref movers vs the committed BENCH_REF.json.
-    RAW ratios (see module docstring: the start-of-block canary
-    overestimates block-window heat, so it is reported per row as a
-    flag, never used as a divisor)."""
-    if not os.path.isfile(_REF_PATH):
-        return None
-    with open(_REF_PATH) as fh:
-        ref = json.load(fh)
-    rq = ref.get("queries", {})
-    ratios = []
-    for name, med in merged_queries.items():
-        r = rq.get(name)
-        if r:
-            ratios.append((round(med / r, 3), name, med, r))
-    if not ratios:
-        return None
-    ratios.sort(reverse=True)
-
-    def _cool(n: str) -> bool:
-        return (box_by_query.get(n) or 1.0) <= _CANARY_HOT_RATIO
-
-    flagged = [
-        n for t, n, m, r in ratios if t > _MOVER_FLAG_RATIO and _cool(n)
-    ]
-    # block clustering of the flagged movers (r13 finding): 10 of the
-    # 11 r12 cool-block movers shared ONE block — a slow block WINDOW
-    # the start-of-block canary cannot see reads as a mover cluster
-    # (both r13 cool runs measured all 11 at 0.77-1.25x). When most
-    # flags share a block, suspect the window before the queries.
-    blk_of = {}
-    for i, names in enumerate(headline_blocks(), start=1):
-        for n in names:
-            blk_of[n] = i
-    hist: dict[str, int] = {}
-    for n in flagged:
-        key = str(blk_of.get(n, "appendix"))
-        hist[key] = hist.get(key, 0) + 1
-
-    return {
-        "ref_date": ref.get("date"),
-        "flagged_block_histogram": hist,
-        # only movers measured in a COOL block are actionable flags; a
-        # hot block's uniform shift is a box artifact (2026-08-16: a
-        # run started minutes after an 18-min suite flagged 26 movers,
-        # every one in a box_state>1.1 block) — those are counted
-        # separately so the signal channel stays clean
-        "flagged_gt_1_5": flagged,
-        "hot_block_movers_gt_1_5": len(
-            [n for t, n, m, r in ratios if t > _MOVER_FLAG_RATIO and not _cool(n)]
-        ),
-        "top10": [
-            {
-                "query": n,
-                "ratio": t,
-                "median_s": m,
-                "ref_s": r,
-                "block_box_state": box_by_query.get(n),
-            }
-            for t, n, m, r in ratios[:10]
-        ],
-    }
-
-
 def _print_line(
     total: float,
     queries: dict[str, float],
     sf: float,
     n_passes: int,
-    box_state: float | None,
-    st_total: float | None = None,
-    appx_total: float | None = None,
-    movers15: int | None = None,
-    hot_blocks: int | None = None,
+    st_total: float,
 ) -> None:
-    # The harness that consumes stdout keeps only the LAST 2000
-    # CHARACTERS of output, so the line must stay under that budget or
-    # the whole result is unparseable (bit round 3: 61 queries +
-    # spread_pct = ~4 KB line, recorded as parsed:null). If every
-    # query doesn't fit, fold the fastest into one "zz_others" bucket.
+    # The consumer keeps only the last 2,000 characters of stdout, so a
+    # longer line is unparseable: fold the fastest queries into one
+    # "zz_others" bucket until the line fits.
     budget = 1900
     shown = {name: round(t, 2) for name, t in queries.items()}
     line = ""
@@ -876,16 +579,7 @@ def _print_line(
             "sf": sf,
             "passes": n_passes,
             "detail": "BENCH_DETAIL.json",
-            **({"box_state": round(box_state, 3)} if box_state is not None else {}),
-            **({"st_total": round(st_total, 2)} if st_total is not None else {}),
-            **(
-                {"appx_total": round(appx_total, 2)}
-                if appx_total is not None
-                else {}
-            ),
-            **({"movers15": movers15} if movers15 is not None else {}),
-            # non-canonical marker: blocks still hot after re-spawns
-            **({"hot_blocks": hot_blocks} if hot_blocks is not None else {}),
+            "st_total": round(st_total, 2),
         }
         line = json.dumps(payload, separators=(",", ":"))
         if len(line) <= budget:
@@ -917,177 +611,49 @@ def main() -> None:
 
     from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 
-    extras = os.environ.get("SPARK_GRAFT_BENCH_SKIP_EXTRAS", "") not in (
-        "1",
-        "true",
-    )
     tmpdir = os.path.join(_HERE, "spark-warehouse", "_bench_blocks")
     os.makedirs(tmpdir, exist_ok=True)
 
-    specs: list[dict] = []
-    if extras:
-        st_names = sorted(
-            n for n in REGISTRY if n.startswith("st") and n not in HEADLINE
-        )
-        specs.append(
-            {
-                "kind": "streaming",
-                "label": "streaming",
-                "queries": st_names,
-                "sf_dir": sf_dir,
-                "n_passes": n_passes,
-                "out": os.path.join(tmpdir, "streaming.json"),
-            }
-        )
+    # Streams get a JVM of their own: after ~850 same-JVM batch
+    # executions every availableNow replay ran 5-10x slower while batch
+    # queries stayed at full speed, and production streams run in
+    # dedicated drivers.
+    st_names = sorted(n for n in REGISTRY if n.startswith("st") and n not in HEADLINE)
     blocks = headline_blocks()
-    for k, names in enumerate(blocks, start=1):
-        specs.append(
-            {
-                "kind": "headline",
-                "label": f"headline-b{k}",
-                "queries": names,
-                "sf_dir": sf_dir,
-                "n_passes": n_passes,
-                "out": os.path.join(tmpdir, f"headline_b{k}.json"),
-            }
-        )
-    appx_blocks: list[list[str]] = []
-    if extras:
-        appx_names = sorted(
-            n for n in REGISTRY if n not in HEADLINE and not n.startswith("st")
-        )
-        appx_blocks = [
-            appx_names[i : i + BLOCK_CAPACITY]
-            for i in range(0, len(appx_names), BLOCK_CAPACITY)
-        ]
-        for k, names in enumerate(appx_blocks, start=1):
-            specs.append(
-                {
-                    "kind": "appendix",
-                    "label": f"appendix-b{k}",
-                    "queries": names,
-                    "sf_dir": sf_dir,
-                    "n_passes": n_passes,
-                    "out": os.path.join(tmpdir, f"appendix_b{k}.json"),
-                }
-            )
-
-    # Cool-box gate (verdict r12 task 3): the r12 artifact shipped with
-    # blocks at box_state 1.156/1.088 after the child's OWN canary
-    # exhausted its cooldowns — so a hot CHILD now gets re-spawned
-    # whole (fresh JVM + fresh canary cycle), up to
-    # SPARK_GRAFT_BENCH_BLOCK_RETRIES times, before the run accepts its
-    # reading; a run that still carries a hot block is stamped
-    # canonical=false rather than silently published.
-    block_retries = int(os.environ.get("SPARK_GRAFT_BENCH_BLOCK_RETRIES", "2"))
-    results: dict[str, dict] = {}
-    for spec in specs:
-        log_path = spec["out"].replace(".json", ".log")
-        res = _spawn_child(spec, log_path)
-        tries = 0
-        while (
-            spec["kind"] != "streaming"
-            and (res.get("canary", {}).get("box_state") or 0)
-            > _CANARY_HOT_RATIO
-            and tries < block_retries
-        ):
-            tries += 1
-            time.sleep(_CANARY_COOLDOWN_S)
-            res = _spawn_child(spec, log_path)
-        if tries:
-            res["respawns"] = tries
-        results[spec["label"]] = res
-
-    # ---- merge ----
-    headline_results = [
-        results[f"headline-b{k}"] for k in range(1, len(blocks) + 1)
+    work = [("streaming", st_names)] + [
+        (f"headline-b{k}", names) for k, names in enumerate(blocks, start=1)
     ]
+    results: dict[str, dict] = {}
+    for label, names in work:
+        out = os.path.join(tmpdir, label.replace("-", "_") + ".json")
+        spec = {
+            "label": label,
+            "queries": names,
+            "sf_dir": sf_dir,
+            "n_passes": n_passes,
+            "out": out,
+        }
+        results[label] = _spawn_child(spec, out.replace(".json", ".log"))
+
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     raw_spread: dict[str, float] = {}
-    box_by_query: dict[str, float] = {}
     blocks_detail = []
-    for k, res in enumerate(headline_results, start=1):
+    for k, names in enumerate(blocks, start=1):
+        res = results[f"headline-b{k}"]
         timings.update(res["queries"])
         spread.update(res["spread_pct"])
         raw_spread.update(res["raw_spread_pct"])
-        bs = res.get("canary", {}).get("box_state")
-        for n in res["queries"]:
-            box_by_query[n] = bs or 1.0
         blocks_detail.append(
             {
                 "block": k,
-                "first_query": blocks[k - 1][0],
-                "n_queries": len(blocks[k - 1]),
+                "first_query": names[0],
+                "n_queries": len(names),
                 "total": res["total"],
-                "box_state": bs,
-                "canary": res.get("canary"),
             }
         )
     total = round(sum(timings.values()), 4)
-    box_states = [b["box_state"] for b in blocks_detail if b["box_state"]]
-    box_state = max(box_states) if box_states else None
-    # the gate artifact is canonical only if EVERY batch child ended
-    # its (possibly re-spawned) canary cycle cool (verdict r12 task 3)
-    hot_labels = [
-        label
-        for label, res in results.items()
-        if label != "streaming"
-        and (res.get("canary", {}).get("box_state") or 0) > _CANARY_HOT_RATIO
-    ]
-
-    st_detail = None
-    appx_detail = None
-    if extras:
-        st_detail = results["streaming"]
-        st_detail["note"] = (
-            "fresh JVM, no prior canary (r9 finding; r11's "
-            "canary-before-streaming wrinkle undone in block mode)"
-        )
-    if extras and appx_blocks:
-        appx_detail = {
-            "queries": {},
-            "spread_pct": {},
-            "raw_spread_pct": {},
-            "n_samples": {},
-            "blocks": [],
-            "note": "alphabetical 73-query fresh-JVM blocks, same "
-            "methodology as the headline (warmup + interleaved passes + "
-            "adaptive top-ups); membership of appendix blocks can shift "
-            "as the registry grows (alphabetical), dose stays capped",
-        }
-        for k in range(1, len(appx_blocks) + 1):
-            res = results[f"appendix-b{k}"]
-            appx_detail["queries"].update(res["queries"])
-            appx_detail["spread_pct"].update(res["spread_pct"])
-            appx_detail["raw_spread_pct"].update(res["raw_spread_pct"])
-            appx_detail["n_samples"].update(res["n_samples"])
-            bs = res.get("canary", {}).get("box_state")
-            for n in res["queries"]:
-                box_by_query[n] = bs or 1.0
-            appx_detail["blocks"].append(
-                {
-                    "block": k,
-                    "n_queries": len(appx_blocks[k - 1]),
-                    "total": res["total"],
-                    "box_state": bs,
-                }
-            )
-        appx_detail["total"] = round(
-            sum(
-                res["total"]
-                for k in range(1, len(appx_blocks) + 1)
-                for res in [results[f"appendix-b{k}"]]
-            ),
-            4,
-        )
-
-    movers = None
-    if abs(sf - 0.1) < 1e-9:
-        all_q = dict(timings)
-        if appx_detail:
-            all_q.update(appx_detail["queries"])
-        movers = _mover_table(all_q, box_by_query)
+    st_detail = results["streaming"]
 
     with open(os.path.join(_HERE, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(
@@ -1099,14 +665,10 @@ def main() -> None:
                 "sf": sf,
                 "passes": n_passes,
                 "mode": f"fresh-jvm blocks of {BLOCK_CAPACITY}",
-                "canonical": not hot_labels,
-                **({"hot_blocks": hot_labels} if hot_labels else {}),
                 "spread_pct": spread,
                 "raw_spread_pct": raw_spread,
                 "blocks": blocks_detail,
-                **({"movers": movers} if movers else {}),
-                **({"streaming": st_detail} if st_detail else {}),
-                **({"appendix": appx_detail} if appx_detail else {}),
+                "streaming": st_detail,
             },
             fh,
             indent=1,
@@ -1117,11 +679,7 @@ def main() -> None:
         queries=timings,
         sf=sf,
         n_passes=n_passes,
-        box_state=box_state,
-        st_total=st_detail["total"] if st_detail else None,
-        appx_total=appx_detail["total"] if appx_detail else None,
-        movers15=len(movers["flagged_gt_1_5"]) if movers else None,
-        hot_blocks=len(hot_labels) if hot_labels else None,
+        st_total=st_detail["total"],
     )
 
 

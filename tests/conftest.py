@@ -43,3 +43,22 @@ def jobs_started(sc):
         while not st.getJobIdsForGroup(tag + "-sentinel") and time.monotonic() < deadline:
             time.sleep(0.05)
         ids.extend(st.getJobIdsForGroup(tag))
+
+
+@contextmanager
+def session_time_zone(spark, zone):
+    """Run the block under session time zone ``zone`` (None: unset),
+    then restore the zone the session had before."""
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key, None)
+    if zone is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, zone)
+    try:
+        yield
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

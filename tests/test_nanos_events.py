@@ -16,6 +16,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import session_time_zone
 
 from aqi_analysis_apache_airflow_spark.sources.readers import load_table
 
@@ -58,10 +59,13 @@ def test_nanos_file_really_is_nanos(nanos_dir):
     assert str(s.field("ts").type) == "timestamp[ns]"
 
 
-def test_batch_loader_truncates_nanos_exactly(spark, nanos_dir):
-    df = load_table(spark, nanos_dir, "events")
-    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
-    got = {r["event_id"]: r["ts"].isoformat(sep=" ") for r in df.collect()}
+@pytest.mark.parametrize("zone", ["UTC", "America/New_York"])
+def test_batch_loader_truncates_nanos_exactly(spark, nanos_dir, zone):
+    """NTZ wall times are the file's, whatever the session zone."""
+    with session_time_zone(spark, zone):
+        df = load_table(spark, nanos_dir, "events")
+        assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+        got = {r["event_id"]: r["ts"].isoformat(sep=" ") for r in df.collect()}
     want = {eid: iso for eid, iso, _ in _ROWS}
     assert got == want  # nanos remainder truncated, never rounded up
 

@@ -233,3 +233,13 @@ def test_idempotent_rerun(wh):
     # matched rows got their last_updated_nds bumped to the rerun stamp
     st = wh.read(STATE_NDS).filter(F.col("state_name") == "Connecticut").first()
     assert st["last_updated_nds"] == rerun_at
+
+
+@pytest.mark.parametrize("scheme", ["file://", "s3a://bucket"])
+def test_warehouse_rejects_uri_root(spark, tmp_path, monkeypatch, scheme):
+    """os.path reads "file:///x" as a relative "file:" directory while
+    Spark writes to /x, so a URI root would make reads silently empty."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="local path"):
+        Warehouse(spark, f"{scheme}{tmp_path}/wh")
+    assert os.listdir(tmp_path) == []

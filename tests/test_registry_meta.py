@@ -56,12 +56,11 @@ def test_no_duplicate_output_columns(spark):
 
 
 def test_bench_block_map_frozen_capacity():
-    """Block-mode comparability contract (r12): HEADLINE is
-    append-only and duplicate-free, so consecutive BLOCK_CAPACITY
-    slices have frozen membership; every full block must hold exactly
-    BLOCK_CAPACITY queries and block 1 must still open with the
-    canary query (its committed reference assumes q1 runs in a fresh
-    child after warmup)."""
+    """Block-mode comparability contract: HEADLINE is append-only and
+    duplicate-free, so consecutive BLOCK_CAPACITY slices have frozen
+    membership; every full block must hold exactly BLOCK_CAPACITY
+    queries, and block 1 still opens with q1, as in every recorded
+    BENCH_r*.json run."""
     import bench
 
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
@@ -72,17 +71,38 @@ def test_bench_block_map_frozen_capacity():
     assert blocks[0][0] == "q1_pricing_summary"
 
 
-def test_bench_ref_names_exist():
-    """BENCH_REF.json (frozen mover references) must only name live
-    registry queries — a renamed/removed query must be re-frozen, not
-    silently carried."""
-    import json
-    import os
+def test_bench_times_every_registry_query():
+    """bench.py times HEADLINE in blocks and the st* streams in their
+    own child; a registry query in neither would go silently untimed."""
+    import bench
 
-    path = os.path.join(os.path.dirname(__file__), "..", "BENCH_REF.json")
-    if not os.path.isfile(path):
-        return
-    with open(path) as fh:
-        ref = json.load(fh)
-    stale = [n for n in ref["queries"] if n not in REGISTRY]
-    assert not stale, f"BENCH_REF names not in registry: {stale}"
+    st_names = {n for n in REGISTRY if n.startswith("st")}
+    assert set(REGISTRY) == set(bench.HEADLINE) | st_names
+    assert not st_names & set(bench.HEADLINE)
+
+
+def test_bench_stdout_line_contract(capsys):
+    """bench.py's consumer keeps only the last 2,000 chars of stdout:
+    the one line must be JSON, fit the 1,900-char budget with all 363
+    headline queries, and carry exactly the published keys."""
+    import json
+
+    import bench
+
+    times = {n: 0.05 + i / 100 for i, n in enumerate(bench.HEADLINE)}
+    bench._print_line(
+        total=sum(times.values()),
+        queries=times,
+        sf=0.1,
+        n_passes=3,
+        st_total=12.345,
+    )
+    line = capsys.readouterr().out.strip()
+    assert "\n" not in line and len(line) <= 1900
+    payload = json.loads(line)
+    assert set(payload) == {
+        "metric", "value", "unit", "queries", "sf", "passes", "detail", "st_total",
+    }
+    assert payload["st_total"] == 12.35
+    assert "zz_others" in payload["queries"]
+    assert payload["value"] == round(sum(times.values()), 2)

@@ -5,6 +5,7 @@ availableNow run over the events parquet must agree with its batch twin
 from __future__ import annotations
 
 import pytest
+from conftest import session_time_zone
 
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 from aqi_analysis_apache_airflow_spark.plans import extended as _extended  # noqa: F401
@@ -72,3 +73,16 @@ def test_late_rows_accounted_not_silently_dropped(spark, events_stream):
     assert ops and "numRowsDroppedByWatermark" in ops[0]
     assert ops[0]["numRowsDroppedByWatermark"] == 0
 
+
+@pytest.mark.parametrize("zone", ["America/New_York", None])
+@pytest.mark.parametrize("name", ["st1_stream_dedup", "st2_stream_windowed"])
+def test_stream_query_restores_session_zone(spark, name, zone):
+    """An st* query pins UTC only for its own call: the caller's zone
+    (or its absence) is back afterwards, and the rows, collected after
+    that, equal a run on a UTC session."""
+    q = REGISTRY[name].fn
+    want = _canon(q(spark, SF_DIR), ["*"])
+    with session_time_zone(spark, zone):
+        got = _canon(q(spark, SF_DIR), ["*"])
+        assert spark.conf.get("spark.sql.session.timeZone", None) == zone
+    assert got == want
