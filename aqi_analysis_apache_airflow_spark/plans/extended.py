@@ -966,15 +966,32 @@ def d5_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, exact, on a deterministic 1/50
     subsample (the oracle's all-pairs SQL is quadratic; the subsample
     keeps it honest at any sf). The production path for the full corpus
-    is bucketed LSH (:func:`rp1_hyperplane_lsh`)."""
-    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 50 == 0)
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    from ..functions.similarity import cosine
+    is bucketed LSH (:func:`rp1_hyperplane_lsh`).
 
+    Each vector's norm is computed once, before the pair join (the
+    ``__norm`` precedent of sdd1): the join condition gets no
+    common-subexpression rewrite, so :func:`...functions.similarity.
+    cosine` there would fold both norms again for every pair. The
+    score is the same expression, round(dot / nullif(na * nb, 0), 6),
+    so the values are identical."""
+    from ..functions.similarity import dot_decimal
+
+    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 50 == 0)
+    norm = F.sqrt(dot_decimal(F.col("embedding"), F.col("embedding")).cast("double"))
+    a = emb.select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"), norm.alias("na")
+    )
+    b = emb.select(
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"), norm.alias("nb")
+    )
+    cos = F.round(
+        dot_decimal(F.col("va"), F.col("vb")).cast("double")
+        / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0)),
+        6,
+    )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cosine_sim"))
+        .select("id_a", "id_b", cos.alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= 0.2)
     )
 

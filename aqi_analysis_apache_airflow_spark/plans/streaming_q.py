@@ -26,32 +26,13 @@ mirroring `tests/test_streaming.py`'s batch-twin strategy.
 from __future__ import annotations
 
 import functools
-import itertools
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..streaming.ops import session_conf
 from .registry import QueryFn, query
-
-_SINK_SEQ = itertools.count()
-
-
-@contextmanager
-def _session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
-    """Set one session conf for the block, then restore the caller's
-    value, or unset the key if the caller had not set it."""
-    before = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if before is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, before)
-
 
 def _utc_query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
     """``@query`` that runs the function under a UTC session time zone
@@ -62,19 +43,12 @@ def _utc_query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         @functools.wraps(fn)
         def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-            with _session_conf(spark, "spark.sql.session.timeZone", "UTC"):
+            with session_conf(spark, "spark.sql.session.timeZone", "UTC"):
                 return fn(spark, sf_dir)
 
         return query(name, oracle)(pinned)
 
     return deco
-
-
-def _sink_name(prefix: str) -> str:
-    # memory-sink query names must be unique among ACTIVE queries; a
-    # fresh name per invocation also keeps re-runs from clobbering a
-    # previous run's temp view mid-read
-    return f"{prefix}_{next(_SINK_SEQ)}"
 
 
 @_utc_query(
@@ -97,7 +71,7 @@ def st1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = dedup_within_watermark(
         stream, keys=["user_id", "event_type"], watermark="2 hours"
     )
-    out = run_to_memory(deduped, _sink_name("st1_stream_dedup_sink"), mode="append")
+    out = run_to_memory(deduped, "st1_stream_dedup_sink", mode="append")
     return out.select("user_id", "event_type")
 
 
@@ -124,7 +98,7 @@ def st2_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, sf_dir)
     wc = windowed_counts(stream, window="1 hour", watermark="2 hours")
-    out = run_to_memory(wc, _sink_name("st2_stream_windowed_sink"), mode="complete")
+    out = run_to_memory(wc, "st2_stream_windowed_sink", mode="complete")
     return out.select(
         F.col("window_start").cast("timestamp_ntz").alias("window_start"),
         F.col("window_end").cast("timestamp_ntz").alias("window_end"),
@@ -165,7 +139,7 @@ def st3_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, sf_dir)
     joined = stream_stream_attribution_join(stream, within="30 minutes")
-    out = run_to_memory(joined, _sink_name("st3_join_sink"), mode="append")
+    out = run_to_memory(joined, "st3_join_sink", mode="append")
     return out.select(
         "user_id",
         "view_id",
@@ -227,9 +201,7 @@ def st4_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    out = run_to_memory(
-        sessions, _sink_name("st4_session_sink"), mode="complete"
-    )
+    out = run_to_memory(sessions, "st4_session_sink", mode="complete")
     return out.select(
         F.col("session_window.start").cast("timestamp_ntz").alias("session_start"),
         F.col("session_window.end").cast("timestamp_ntz").alias("session_end"),
@@ -267,7 +239,7 @@ def st5_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream.join(
         dim, stream.user_id == dim.c_custkey, "inner"
     ).select("event_id", "user_id", "c_mktsegment")
-    out = run_to_memory(joined, _sink_name("st5_dim_join_sink"), mode="append")
+    out = run_to_memory(joined, "st5_dim_join_sink", mode="append")
     return out
 
 
@@ -483,7 +455,7 @@ def st7_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    with _session_conf(
+    with session_conf(
         spark,
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."
@@ -502,9 +474,7 @@ def st7_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        out = run_to_memory(
-            stats, _sink_name("st7_tws_user_stats_sink"), mode="update"
-        )
+        out = run_to_memory(stats, "st7_tws_user_stats_sink", mode="update")
     return out.select(
         "user_id",
         "n_events",
@@ -570,7 +540,7 @@ def st8_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream_stream_attribution_join(
         stream, within="30 minutes", watermark="0 seconds", how="left_outer"
     )
-    out = run_to_memory(joined, _sink_name("st8_outer_sink"), mode="append")
+    out = run_to_memory(joined, "st8_outer_sink", mode="append")
     wm = (
         load_table(spark, sf_dir, "events")
         .agg(

@@ -22,9 +22,14 @@ the stream deterministically.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sources.readers import footer_schema
 
 
 def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
@@ -32,19 +37,18 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
     the downstream plans are source-agnostic).
 
     ``readStream`` needs an explicit schema, and the corpus has shipped
-    ``ts`` both as TIMESTAMP(NANOS) (surfaced as raw-nanos LONG under
-    the legacy conf) and as plain microsecond TIMESTAMP_NTZ — so the
-    schema is taken from a batch scan of the same files (metadata-only,
-    no data read) and the ts conversion branches on the type actually
-    found, exactly like the batch loader in sources/readers.py. The
-    stream's TIMESTAMP wall times equal the batch loader's NTZ values
-    under a UTC session zone, which every st* query pins for its call."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = (
-        spark.read.option("pathGlobFilter", "events.parquet")
-        .parquet(path_dir)
-        .schema
-    )
+    ``ts`` both as INT64 TIMESTAMP(NANOS) and as plain microsecond
+    TIMESTAMP_NTZ — so the schema is read from the file's footer
+    (:func:`...sources.readers.footer_schema`, no Spark job), which
+    maps nanos to raw LONG, and the ts conversion branches on the type
+    actually found, exactly like the batch loader. A remote or
+    unreadable footer falls back to a batch schema scan of the same
+    file; no session conf is set, so a remote nanos file raises
+    [PARQUET_TYPE_ILLEGAL]. The stream's TIMESTAMP wall times equal the
+    batch loader's NTZ values under a UTC session zone, which every st*
+    query pins for its call."""
+    path = f"{path_dir}/events.parquet"
+    schema = footer_schema(path) or spark.read.parquet(path).schema
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
@@ -96,7 +100,22 @@ def dedup_within_watermark(
     )
 
 
-#: State-store parallelism for a bounded replay (see ``run_to_memory``).
+@contextmanager
+def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set one session conf for the block, then restore the caller's
+    value, or unset the key if the caller had not set it."""
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+#: Most state partitions a bounded replay uses (see ``run_to_memory``).
 STATE_PARTITIONS = 8
 
 
@@ -107,16 +126,24 @@ def run_to_memory(
     sink (availableNow trigger): deterministic, synchronous, test-grade.
     ``mode``: 'complete' for aggregations (append would hold back
     windows the final watermark hasn't passed), 'append' for stateless
-    / dedup streams. Returns the materialized batch result.
+    / dedup streams. Returns the materialized batch result. The sink's
+    temp view ``name`` is dropped before the call returns (the returned
+    frame is already resolved against the sink and keeps its rows), so
+    a replay leaves no view in the session and a fixed ``name`` can be
+    reused by the next call.
 
-    The replay runs at ``STATE_PARTITIONS`` shuffle partitions, which
-    right-sizes STATE parallelism for the bounded replay: a streaming
-    query instantiates one state-store instance per shuffle partition
-    per stateful operator per batch, and at the session's batch default
-    (32) that fixed machinery dominates replay wall time — measured at
-    sf0.1: st8 9.1s → 2.9s and st3 6.4s → 2.2s at 8 partitions, values
-    identical (state partitioning never affects deterministic results).
-    The conf is set only around stream start and restored after.
+    The replay runs at ``min(STATE_PARTITIONS, defaultParallelism)``
+    shuffle partitions, which right-sizes STATE parallelism for the
+    bounded replay: a streaming query instantiates one state-store
+    instance per shuffle partition per stateful operator per batch, and
+    at the session's batch default (32) that fixed machinery dominates
+    replay wall time — measured at sf0.1: st8 9.1s → 2.9s and st3 6.4s
+    → 2.2s at 8 partitions, values identical (state partitioning never
+    affects deterministic results). With fewer task slots than that,
+    the partitions beyond the slot count only queue more state-store
+    work behind each other, so the replay uses no more partitions than
+    the session has slots. The conf is set only for the replay, then
+    restored (or unset, if the caller had not set it).
 
     SINGLE-THREADED ASSUMPTION (ADVICE r8): the override mutates the
     SESSION conf for the replay's duration, because a stateful stream
@@ -127,20 +154,20 @@ def run_to_memory(
     harness for synchronous bounded replays; do not call it from a
     session shared with concurrent planners."""
     spark = stream_df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    parts = min(STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
     try:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with session_conf(spark, "spark.sql.shuffle.partitions", str(parts)):
+            q = (
+                stream_df.writeStream.outputMode(mode)
+                .format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return spark.sql(f"SELECT * FROM {name}")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.sql(f"SELECT * FROM {name}")
+        spark.catalog.dropTempView(name)
 
 
 def stream_stream_attribution_join(

@@ -28,7 +28,8 @@ def jobs_started(sc):
     jobs the block started. Listener events arrive asynchronously, so a
     sentinel job in its own group is run after the block and awaited:
     events are delivered in order, so once it shows up every earlier
-    job does too."""
+    job does too. The sentinel is a JVM-only job: a Python RDD job
+    costs ~10x more (it starts a Python worker task)."""
     tag = f"jobs-started-{time.monotonic_ns()}"
     ids: list[int] = []
     sc.setJobGroup(tag, tag)
@@ -36,7 +37,9 @@ def jobs_started(sc):
         yield ids
     finally:
         sc.setJobGroup(tag + "-sentinel", tag)
-        sc.parallelize([0], 1).count()
+        one = sc._jvm.java.util.ArrayList()
+        one.add(0)
+        sc._jsc.parallelize(one, 1).count()
         sc.setLocalProperty("spark.jobGroup.id", None)
         st = sc.statusTracker()
         deadline = time.monotonic() + 30

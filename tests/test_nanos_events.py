@@ -1,7 +1,8 @@
 """The events corpus has shipped ``ts`` both as parquet
 TIMESTAMP(NANOS) and as plain microsecond TIMESTAMP_NTZ across driver
-rounds; the loaders branch on what they find (raw-nanos LONG under the
-legacy conf → exact ``div 1000`` truncation). The current corpus is
+rounds; the loaders branch on what they find (raw-nanos LONG from the
+footer schema → exact ``div 1000`` truncation), with the legacy
+``nanosAsLong`` conf unset before and after every read. The current corpus is
 microseconds, which would leave the nanos branch as untested dead code
 exactly until the round it becomes load-bearing again — so this fixture
 writes a real TIMESTAMP(NANOS) parquet and proves both the batch loader
@@ -19,6 +20,8 @@ import pytest
 from conftest import session_time_zone
 
 from aqi_analysis_apache_airflow_spark.sources.readers import load_table
+
+NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 _ROWS = [
     # (event_id, iso microsecond wall time, nanos remainder to add)
@@ -46,7 +49,7 @@ def nanos_dir(tmp_path_factory):
         }
     )
     # version 2.6 + no coercion stores the physical TIMESTAMP(NANOS)
-    # annotation that Spark's reader rejects without the legacy conf
+    # annotation that Spark's inference rejects without the legacy conf
     pq.write_table(
         table, os.path.join(d, "events.parquet"),
         coerce_timestamps=None, version="2.6",
@@ -62,10 +65,12 @@ def test_nanos_file_really_is_nanos(nanos_dir):
 @pytest.mark.parametrize("zone", ["UTC", "America/New_York"])
 def test_batch_loader_truncates_nanos_exactly(spark, nanos_dir, zone):
     """NTZ wall times are the file's, whatever the session zone."""
+    spark.conf.unset(NANOS_CONF)
     with session_time_zone(spark, zone):
         df = load_table(spark, nanos_dir, "events")
         assert dict(df.dtypes)["ts"] == "timestamp_ntz"
         got = {r["event_id"]: r["ts"].isoformat(sep=" ") for r in df.collect()}
+    assert spark.conf.get(NANOS_CONF, None) is None
     want = {eid: iso for eid, iso, _ in _ROWS}
     assert got == want  # nanos remainder truncated, never rounded up
 
@@ -77,6 +82,7 @@ def test_stream_reader_handles_nanos(spark, nanos_dir):
     )
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.unset(NANOS_CONF)
     out = run_to_memory(
         read_events_stream(spark, nanos_dir).select("event_id", "ts"),
         "nanos_probe_sink",
@@ -88,3 +94,4 @@ def test_stream_reader_handles_nanos(spark, nanos_dir):
     }
     want = {eid: iso for eid, iso, _ in _ROWS}
     assert got == want
+    assert spark.conf.get(NANOS_CONF, None) is None

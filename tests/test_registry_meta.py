@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from conftest import jobs_started
+
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
 
 
@@ -46,13 +48,67 @@ def test_every_oracle_query_in_some_adversarial_suite():
     assert not uncovered, f"queries in no adversarial suite: {uncovered}"
 
 
+_LOOP = "iterates to convergence on the driver; each round runs jobs"
+_PIN = "pins an intermediate with a local checkpoint"
+_WRITE = "writes files that the returned plan reads"
+
+#: Queries that start Spark jobs while their plan is built, and why.
+#: Every other query must build with none: corpus reads take their
+#: schema from the parquet footer. st1-st5, st7 and st8 run their
+#: streams at build time too, but a stream's jobs run in the stream's
+#: own job group, so they do not count here.
+BUILD_JOBS = {
+    "acf1_daily_autocorrelation": _PIN,
+    "assort1_degree_assortativity": _PIN,
+    "bpe2_merge_training": _LOOP,
+    "bpe3_compression_curve": _LOOP,
+    "d6_dedup_clusters": _LOOP + " (connected components)",
+    "d9_canonical_best": _LOOP + " (connected components)",
+    "drm1_domain_reweight": _PIN,
+    "fmt1_multiformat_roundtrip": _WRITE,
+    "funnel1_ordered_conversion": "collects the distinct-user count as a scalar",
+    "gr1_pagerank": _LOOP,
+    "gr2_fixed_point_pagerank": _LOOP,
+    "hits1_hubs_authorities": _LOOP,
+    "kcore1_kcore_peeling": _LOOP,
+    "kcore2_fixed_point_core": _LOOP,
+    "km1_lloyd_kmeans": _LOOP + " (Lloyd rounds)",
+    "kn1_kneser_ney_bigram": _PIN,
+    "lpa2_fixed_point_communities": _LOOP,
+    "markov2_stationary_distribution": _LOOP + " over pinned transitions",
+    "mk1_trend_test": _PIN,
+    "mmr1_diversified_topk": _PIN + " per selection round",
+    "pacf1_partial_autocorrelation": _PIN,
+    "ppmi1_sppmi_pairs": _PIN,
+    "sch1_schema_evolution": _WRITE,
+    "sil1_cluster_silhouette": _LOOP + " (the km1 fit)",
+    "sim_ivfd_topk": _WRITE + " (the on-disk IVF index)",
+    "snm1_sorted_neighborhood": "collects per-partition counts for the rank offsets",
+    "snm2_blocking_recall": "collects per-partition counts for the rank offsets",
+    "sp1_shortest_path": _LOOP + " (one round per hop)",
+    "split2_cluster_split": _LOOP + " (connected components)",
+    "st6_stream_merge_upsert": _WRITE + " (the seeded warehouse table)",
+}
+
+
 def test_no_duplicate_output_columns(spark):
     """The driver sorts columns by name before hashing values — a
-    duplicate column name would silently corrupt the comparison."""
+    duplicate column name would silently corrupt the comparison.
+
+    Building a plan starts no Spark job unless the query is listed in
+    ``BUILD_JOBS``: a corpus read that infers its schema would start
+    one per table, every time the driver builds the query."""
     sf = "/root/testdata/sf0.001"
+    started = {}
     for name, q in sorted(REGISTRY.items()):
-        cols = q.fn(spark, sf).columns
+        with jobs_started(spark.sparkContext) as ids:
+            cols = q.fn(spark, sf).columns
         assert len(cols) == len(set(cols)), f"{name}: duplicate columns {cols}"
+        started[name] = len(ids)
+    unlisted = {n: k for n, k in started.items() if k and n not in BUILD_JOBS}
+    assert not unlisted, f"jobs started while building: {unlisted}"
+    stale = sorted(n for n in BUILD_JOBS if not started[n])
+    assert not stale, f"BUILD_JOBS entries that started no job: {stale}"
 
 
 def test_bench_block_map_frozen_capacity():

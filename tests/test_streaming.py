@@ -86,3 +86,42 @@ def test_stream_query_restores_session_zone(spark, name, zone):
         got = _canon(q(spark, SF_DIR), ["*"])
         assert spark.conf.get("spark.sql.session.timeZone", None) == zone
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "st1_stream_dedup",
+        "st2_stream_windowed",
+        "st3_stream_stream_join",
+        "st4_stream_session_window",
+        "st5_stream_static_join",
+        "st7_stream_tws_user_stats",
+        "st8_stream_outer_join",
+    ],
+)
+def test_stream_query_leaves_no_view_or_conf(spark, name):
+    """A memory-sink replay drops its temp view before the query
+    returns, and the returned frame still reads its rows; reading the
+    events file sets no legacy parquet conf."""
+    nanos_conf = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(nanos_conf)
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    out = REGISTRY[name].fn(spark, SF_DIR)
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == views
+    assert spark.conf.get(nanos_conf, None) is None
+    assert out.count() > 0
+
+
+def test_replay_leaves_unset_shuffle_partitions_unset(spark):
+    """``run_to_memory`` overrides the shuffle partitions for the
+    replay only: a session that never set them has them unset again
+    afterwards, not pinned to the default."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        REGISTRY["st2_stream_windowed"].fn(spark, SF_DIR)
+        assert spark.conf.get(key, None) is None
+    finally:
+        spark.conf.set(key, before)
