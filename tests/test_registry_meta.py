@@ -48,7 +48,7 @@ def test_every_oracle_query_in_some_adversarial_suite():
     assert not uncovered, f"queries in no adversarial suite: {uncovered}"
 
 
-_LOOP = "iterates to convergence on the driver; each round runs jobs"
+_LOOP = "iterates to convergence; each round runs jobs"
 _PIN = "pins an intermediate with a local checkpoint"
 _WRITE = "writes files that the returned plan reads"
 
@@ -97,7 +97,7 @@ def test_no_duplicate_output_columns(spark):
 
     Building a plan starts no Spark job unless the query is listed in
     ``BUILD_JOBS``: a corpus read that infers its schema would start
-    one per table, every time the driver builds the query."""
+    one per table, every time the query is built."""
     sf = "/root/testdata/sf0.001"
     started = {}
     for name, q in sorted(REGISTRY.items()):
