@@ -23,7 +23,7 @@ from .spread import spread_if_narrow
 # 3-dot cosine 11.0s → 12.7s, interleaved same-JVM medians) — the
 # ~400-node decimal expression blows the codegen budget and falls back
 # to interpreted CASE evaluation — and was reverted. The real lever
-# for these scans is parallelism (see ``spread_small_scan``): the
+# for these scans is parallelism (see ``spread_if_narrow``): the
 # bench corpus arrives as one row group and the whole scorer ran on
 # ONE task.
 

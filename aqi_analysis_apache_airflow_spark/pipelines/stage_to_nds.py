@@ -8,10 +8,31 @@ MERGE (full-outer join + coalesce) per table:
 - county backfill dp1 (``:113-123``): AQI counties NOT IN county_nds
   (faithful NOT-IN null semantics)
 - Windham patch dp2 (``:125-138``): AQI 'Windham' rows missing from the
-  counties master, appended AFTER dp1 — the reference relies on the
-  VT/CT name collision to make dp1 skip Windham, so ORDER MATTERS
+  counties master
 - measurement upsert (``:141-218``): keyed (measured_date,
   defining_site, defining_parameter)
+
+dp1 and dp2 are the reference's two INSERT ... SELECTs of name-only
+county rows. Here they are one append, written once after the county
+upsert: the union of dp1's and dp2's (state_name, county_name) pairs,
+resolved to (county_name, state_id_sk) with one DISTINCT, minus the
+pairs county_nds already holds. That is the result of dp1 followed by
+the idempotent dp2 below: dp1's names are absent from county_nds, so
+the anti-join keeps them; a dp2 pair that dp1 also produced collapses
+in the DISTINCT instead of being found in the table dp1 wrote; and the
+NOT-IN NULL rule still empties only dp1.
+
+Deliberate deviations, both in the name-only rows:
+
+- The reference's dp2 NOT EXISTS checks only the counties MASTER,
+  never county_nds, so it re-inserts the same Windham row on EVERY
+  nightly run — unbounded duplicate growth. The anti-join against
+  county_nds on (county_name, state_id_sk) makes the patch idempotent;
+  first-run output is identical.
+- The new rows are numbered together in (county_name, state_id_sk)
+  order, where the reference numbers dp1's rows before dp2's. The two
+  orders differ only when a load inserts a dp2 row and a dp1 county
+  whose name sorts after "Windham".
 
 The natural keys are ``schemas.NDS_NATURAL_KEYS`` and every read takes
 its schema from ``schemas.TABLE_SCHEMAS``. The audit policy is stated
@@ -146,8 +167,18 @@ def upsert_counties(wh: Warehouse, now: datetime | None = None) -> None:
         update_cols=["county_name"],
         key_order=["county_fips", "county_name"],
     )
-    backfill_counties_from_measurements(wh, now)
-    patch_windham(wh, now)
+    # dp1 + dp2 (S8): one INSERT ... SELECT of their union, numbered together
+    county = _read(wh, COUNTY_NDS)
+    pairs = backfill_counties_from_measurements(wh, county).unionByName(patch_windham(wh))
+    src = anti_join(
+        _name_only_counties(pairs, _read(wh, STATE_NDS), now),
+        county,
+        ["county_name", "state_id_sk"],
+    )
+    merged = assign_missing_keys(
+        county.unionByName(src), "county_id_sk", ["county_name", "state_id_sk"]
+    )
+    wh.overwrite(merged, COUNTY_NDS)
 
 
 def _name_only_counties(names: DataFrame, state: DataFrame, now: datetime) -> DataFrame:
@@ -170,55 +201,28 @@ def _name_only_counties(names: DataFrame, state: DataFrame, now: datetime) -> Da
     )
 
 
-def backfill_counties_from_measurements(wh: Warehouse, now: datetime | None = None) -> None:
-    """dp1 (``stage_to_nds.py:113-123``): AQI counties with measurements
-    but absent from county_nds — inserted with ONLY county_name +
-    state_id_sk (fips/geo/population stay NULL). Uses faithful NOT-IN
-    semantics: a NULL county_name anywhere in county_nds empties the
-    insert, exactly like the reference's SQL."""
-    county = _read(wh, COUNTY_NDS)
+def backfill_counties_from_measurements(wh: Warehouse, county: DataFrame) -> DataFrame:
+    """dp1 (``stage_to_nds.py:113-123``): the (county_name, state_name)
+    pairs of AQI counties with measurements but absent from ``county``,
+    to be inserted with ONLY county_name + state_id_sk (fips/geo/
+    population stay NULL). Uses faithful NOT-IN semantics: a NULL
+    county_name anywhere in ``county`` empties the result, exactly like
+    the reference's SQL."""
     aqi = _read(wh, AQI_STAGE).select("county_name", "state_name")
-    src = _name_only_counties(
-        not_in(aqi, "county_name", county, "county_name"),
-        _read(wh, STATE_NDS),
-        now or _now(),
-    )
-    _append_partial_counties(wh, county, src)
+    return not_in(aqi, "county_name", county, "county_name")
 
 
-def patch_windham(wh: Warehouse, now: datetime | None = None) -> None:
-    """dp2 (``stage_to_nds.py:125-138``): 'Windham' AQI rows whose
-    (state_name, county_name) is missing from the counties master —
-    the real master has Windham VT but CT's Windham is a planning
-    region, so the CT rows need a patched county row.
-
-    Deliberate deviation: the reference's NOT EXISTS checks only the
-    counties MASTER, never county_nds, so it re-inserts the same
-    Windham row on EVERY nightly run — unbounded duplicate growth. An
-    anti-join against county_nds on (county_name, state_id_sk) makes
-    the patch idempotent; first-run output is identical."""
-    county = _read(wh, COUNTY_NDS)
+def patch_windham(wh: Warehouse) -> DataFrame:
+    """dp2 (``stage_to_nds.py:125-138``): the (state_name, county_name)
+    pairs of 'Windham' AQI rows missing from the counties master — the
+    real master has Windham VT but CT's Windham is a planning region,
+    so the CT rows need a patched county row."""
     windham = _read(wh, AQI_STAGE).filter(F.col("county_name") == "Windham")
-    src = _name_only_counties(
-        anti_join(
-            windham.select("state_name", "county_name"),
-            _read(wh, COUNTIES_STAGE),
-            ["state_name", "county_name"],
-        ),
-        _read(wh, STATE_NDS),
-        now or _now(),
+    return anti_join(
+        windham.select("state_name", "county_name"),
+        _read(wh, COUNTIES_STAGE),
+        ["state_name", "county_name"],
     )
-    src = anti_join(src, county, ["county_name", "state_id_sk"])
-    _append_partial_counties(wh, county, src)
-
-
-def _append_partial_counties(wh: Warehouse, county: DataFrame, src: DataFrame) -> None:
-    """INSERT ... SELECT (S8): number the appended rows' surrogate keys
-    and write county_nds via stage-and-swap."""
-    merged = assign_missing_keys(
-        county.unionByName(src), "county_id_sk", ["county_name", "state_id_sk"]
-    )
-    wh.overwrite(merged, COUNTY_NDS)
 
 
 # --------------------------------------------------------------------------

@@ -1625,23 +1625,21 @@ def rc1_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTEs — fine here, explosive on cyclic graphs, which is
     why sp1 keeps the frontier-loop form). Integer-only arithmetic:
     nothing to round, bit-exact against DuckDB's identical recursion."""
-    # Fixed view name: createOrReplaceTempView is idempotent, so repeated
-    # invocations (bench passes, parity sweeps) reuse one catalog entry
-    # instead of leaking rc1_customer_0,1,2,... per call.
-    view = "rc1_customer_src"
-    load(spark, sf_dir, "customer").select("c_custkey").createOrReplaceTempView(
-        view
-    )
-    return spark.sql(f"""
+    # A DataFrame argument is registered as a generated temp view that
+    # spark.sql drops before it returns, so the session keeps no view.
+    return spark.sql(
+        """
       WITH RECURSIVE chain(node, cur, depth) AS (
-        SELECT c_custkey, c_custkey, 0 FROM {view}
+        SELECT c_custkey, c_custkey, 0 FROM {src}
         UNION ALL
         SELECT node, cur div 2, depth + 1 FROM chain WHERE cur > 1
       )
       SELECT node, CAST(max(depth) AS INT) AS depth,
              CAST(count(*) AS BIGINT) AS chain_len
       FROM chain GROUP BY node
-    """)
+    """,
+        src=load(spark, sf_dir, "customer").select("c_custkey"),
+    )
 
 
 @query(

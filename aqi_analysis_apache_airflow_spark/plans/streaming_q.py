@@ -280,6 +280,7 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at deployment scale the swap becomes Delta/Iceberg MERGE INTO
     with an unchanged logical plan, and this exact foreachBatch shape
     is the standard Kafka→lakehouse CDC consumer)."""
+    import shutil
     import tempfile
 
     from pyspark.sql import Window
@@ -290,8 +291,6 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ops import read_events_stream
 
     stream = read_events_stream(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="st6_wh_")
-    wh = Warehouse(spark, root)
 
     def _compact(df: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy(
@@ -323,7 +322,6 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").alias("last_value"),
         )
     )
-    wh.overwrite(seed, "user_latest")
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
         wh.overwrite(
@@ -333,16 +331,25 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_latest",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return wh.read("user_latest").select(
-        "user_id", "last_ts", "last_event_type", "last_value"
-    )
+    root = tempfile.mkdtemp(prefix="st6_wh_")
+    try:
+        wh = Warehouse(spark, root)
+        wh.overwrite(seed, "user_latest")
+        q = (
+            stream.writeStream.foreachBatch(_merge)
+            .option("checkpointLocation", f"{root}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        # One row per user: held in the returned plan, so the warehouse
+        # directory can go before the call returns.
+        latest = wh.read("user_latest").select(
+            "user_id", "last_ts", "last_event_type", "last_value"
+        )
+        return spark.createDataFrame(latest.collect(), latest.schema)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def _ensure_protobuf(spark: SparkSession) -> None:

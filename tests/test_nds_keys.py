@@ -74,6 +74,12 @@ NIGHT2 = [
     ("Connecticut", "Ghostville", 71, "s-d", "PM2.5", "2023-02-06 08:00:00"),
     ("Maine", "York", 15, "s-h", "PM2.5", "2023-02-07 08:00:00"),  # new state
 ]
+#: one load whose dp1 county sorts after "Windham" and that patches Windham CT
+NIGHT_MIXED = [
+    ("Connecticut", "Hartford", 40, "s-a", "PM2.5", "2023-01-10 08:00:00"),
+    ("Connecticut", "Yellowstone Gap", 70, "s-d", "PM2.5", "2023-01-11 08:00:00"),  # dp1
+    ("Connecticut", "Windham", 20, "s-e", "PM2.5", "2023-01-11 08:00:00"),  # dp2
+]
 #: (county, fips, state_id, state_name)
 MASTER1 = [
     ("Hartford", "09003", "CT", "Connecticut"),
@@ -100,11 +106,12 @@ def numbered(start_after: int, keys) -> dict:
     return {k: start_after + i for i, k in enumerate(sorted(keys), 1)}
 
 
-def write_sources(src: str) -> None:
+def write_sources(src: str, nights=((NIGHT1, WINDOW1), (NIGHT2, WINDOW2))) -> None:
+    os.makedirs(os.path.join(src, "aqi"), exist_ok=True)
     with open(os.path.join(src, "aqi", "10_state_aqi_2023.csv"), "w", newline="") as f:
         w = csv.writer(f)
         w.writerow(AQI_HEADER)
-        for rows, (_, _, updated, _) in ((NIGHT1, WINDOW1), (NIGHT2, WINDOW2)):
+        for rows, (_, _, updated, _) in nights:
             for state, county, aqi, site, param, created in rows:
                 w.writerow([state, county, "09", "001", created[:10], aqi, "x",
                             param, site, 1, created, updated])
@@ -150,7 +157,6 @@ def snapshot(wh: Warehouse) -> dict:
 @pytest.fixture(scope="module")
 def src(tmp_path_factory):
     src = str(tmp_path_factory.mktemp("nds_keys_source"))
-    os.makedirs(os.path.join(src, "aqi"))
     write_sources(src)
     write_master(os.path.join(src, "uscounties.csv"), MASTER1)
     return src
@@ -211,6 +217,34 @@ def test_dp1_numbered_after_master_inserts(loaded):
         ("York", "23031"): top + 2,
         ("Phantom", None): top + 3,
     }
+
+
+def test_dp1_and_dp2_rows_numbered_together(spark, tmp_path):
+    """dp1 and dp2 are one append numbered in (county_name, state_id_sk)
+    order, so Windham CT (dp2) takes its key before Yellowstone Gap
+    (dp1); each is inserted once, and a rerun of the load inserts
+    nothing."""
+    src = str(tmp_path / "source")
+    write_sources(src, [(NIGHT_MIXED, WINDOW1)])
+    wh = Warehouse(spark, str(tmp_path / "warehouse"))
+
+    def counties() -> list[tuple]:
+        return sorted(
+            (r["county_id_sk"], r["county_name"], r["county_fips"])
+            for r in wh.read(s2n.COUNTY_NDS).collect()
+        )
+
+    load(wh, src, MASTER1, WINDOW1)
+    expected = [
+        (1, "Hartford", "09003"),
+        (2, "Windham", "50025"),
+        (3, "Windsor", "50027"),
+        (4, "Windham", None),
+        (5, "Yellowstone Gap", None),
+    ]
+    assert counties() == expected
+    load(wh, src, MASTER1, WINDOW1)
+    assert counties() == expected
 
 
 @pytest.fixture
@@ -277,8 +311,8 @@ def test_upserts_produce_declared_nds_schemas(captured):
         s2n.COUNTY_NDS: COUNTY_NDS_SCHEMA,
         s2n.MEASUREMENT_NDS: MEASUREMENT_NDS_SCHEMA,
     }
-    # states, counties + dp1 + dp2, measurements
-    assert [t for t, _ in frames] == [s2n.STATE_NDS] + [s2n.COUNTY_NDS] * 3 + [
+    # states, counties (the upsert, then the dp1 + dp2 append), measurements
+    assert [t for t, _ in frames] == [s2n.STATE_NDS] + [s2n.COUNTY_NDS] * 2 + [
         s2n.MEASUREMENT_NDS
     ]
     for table, df in frames:
