@@ -30,6 +30,16 @@ from .spread import spread_if_narrow
 
 TOKEN_RE = r"\S+"
 
+#: Words per shingle of every near-dup function over ``documents``.
+SHINGLE_K = 3
+#: MinHash signature length. The minhash functions and the LSH pair
+#: functions must agree on it, so they share it.
+N_HASHES = 32
+#: LSH bands per signature (``N_HASHES // BANDS`` components each).
+BANDS = 8
+#: Most label-propagation rounds of :func:`connected_components`.
+CC_MAX_ROUNDS = 50
+
 
 def tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(TOKEN_RE), 0)
@@ -107,26 +117,24 @@ def word_shingles(text: Column, k: int = 3, *, distinct: bool = True) -> Column:
     return F.when(n >= k, shingled).otherwise(F.array().cast("array<string>"))
 
 
-def exploded_shingles(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """(id, shingle) pairs. The shingle transform is the CPU-heavy part
-    of every near-dup pipeline, so parallelize it across cores even
+def exploded_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) pairs. The shingle transform is the CPU-heavy
+    part of every near-dup pipeline, so parallelize it across cores even
     when the input arrives as one split (the bench corpus is a single
     row group — without this the whole explode runs on one task; at
     production scale the natural splits suffice and the repartition
     vanishes — ``spread_if_narrow``)."""
     return (
-        spread_if_narrow(docs.select(id_col, text_col))
+        spread_if_narrow(docs.select("doc_id", "text"))
         .select(
-            F.col(id_col),
-            F.explode(word_shingles(F.col(text_col), k)).alias("shingle"),
+            F.col("doc_id"),
+            F.explode(word_shingles(F.col("text"), SHINGLE_K)).alias("shingle"),
         )
     )
 
 
 def capped_pair_counts(
-    sh: DataFrame, max_doc_freq: int, id_col: str = "doc_id"
+    sh: DataFrame, max_doc_freq: int
 ) -> tuple[DataFrame, DataFrame]:
     """The capped (stop-shingle-pruned) pair machinery, exposed for
     every consumer that needs raw intersection counts rather than a
@@ -138,15 +146,15 @@ def capped_pair_counts(
 
     Returns ``(inter, sizes)``: ``inter`` = (doc_a < doc_b, inter)
     intersection counts over the capped shingle universe; ``sizes`` =
-    (id_col, set_size) capped set sizes per doc.
+    (doc_id, set_size) capped set sizes per doc.
     """
     grouped = (
         sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_set(id_col)).alias("docs"))
+        .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
         .filter(F.size("docs") <= max_doc_freq)
     )
-    capped = grouped.select(F.explode("docs").alias(id_col))
-    sizes = capped.groupBy(id_col).agg(F.count("*").alias("set_size"))
+    capped = grouped.select(F.explode("docs").alias("doc_id"))
+    sizes = capped.groupBy("doc_id").agg(F.count("*").alias("set_size"))
     pair_structs = F.expr(
         "flatten(transform(docs, (x, i) -> "
         "transform(slice(docs, i + 2, size(docs)), "
@@ -164,13 +172,11 @@ def capped_pair_counts(
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    k: int = 3,
     max_doc_freq: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     allow_quadratic: bool = False,
 ) -> DataFrame:
-    """Exact Jaccard over k-word shingle sets for every candidate pair.
+    """Exact Jaccard over ``SHINGLE_K``-word shingle sets for every
+    candidate pair.
 
     ``max_doc_freq`` drops shingles shared by more than that many docs
     (stop-shingles): they contribute little discrimination but dominate
@@ -195,21 +201,21 @@ def ngram_jaccard_pairs(
             "(stop-shingle pruning, the scale path) or opt in explicitly "
             "with allow_quadratic=True (oracle-baseline use only)"
         )
-    sh = exploded_shingles(docs, id_col, text_col, k)
+    sh = exploded_shingles(docs)
     if max_doc_freq is not None:
-        inter, sizes = capped_pair_counts(sh, max_doc_freq, id_col)
+        inter, sizes = capped_pair_counts(sh, max_doc_freq)
     else:
-        sizes = sh.groupBy(id_col).agg(F.count("*").alias("set_size"))
-        a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-        b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("set_size"))
+        a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+        b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
         inter = (
             a.join(b, "shingle")
             .filter(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").alias("inter"))
         )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("set_size").alias("size_b"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("set_size").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("set_size").alias("size_b"))
     return (
         inter.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -225,16 +231,11 @@ def ngram_jaccard_pairs(
     )
 
 
-def exact_jaccard_for_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact k-word-shingle Jaccard for a GIVEN set of candidate pairs
-    (columns ``doc_a``, ``doc_b``) — the verification stage after an
-    approximate candidate generator (LSH bands, simhash).
+def exact_jaccard_for_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact ``SHINGLE_K``-word-shingle Jaccard for a GIVEN set of
+    candidate pairs (columns ``doc_a``, ``doc_b``) — the verification
+    stage after an approximate candidate generator (LSH bands,
+    simhash).
 
     Scale shape: shingle ARRAYS are computed only for docs that appear
     in some candidate pair (semi-join pushdown), then joined whole to
@@ -266,18 +267,18 @@ def exact_jaccard_for_pairs(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     cand_ids = (
-        pairs.select(F.col("doc_a").alias(id_col))
-        .union(pairs.select(F.col("doc_b").alias(id_col)))
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .union(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
     sets = spread_if_narrow(
-        docs.join(cand_ids, id_col, "left_semi")
+        docs.join(cand_ids, "doc_id", "left_semi")
     ).select(
-        F.col(id_col),
-        word_shingles(F.col(text_col), k).alias("sh"),
+        F.col("doc_id"),
+        word_shingles(F.col("text"), SHINGLE_K).alias("sh"),
     )
-    sa = sets.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
         pairs.join(sa, "doc_a")
@@ -304,16 +305,14 @@ def exact_jaccard_for_pairs(
 _MASK32 = 0xFFFFFFFF
 
 
-def _md5_halves(
-    sh: DataFrame, id_col: str, keep_shingle: bool = False
-) -> DataFrame:
+def _md5_halves(sh: DataFrame, keep_shingle: bool = False) -> DataFrame:
     """One md5 per shingle, split into FOUR unsigned 32-bit halves
     held in longs (__hi1/__lo1 = the h1 word, __hi2/__lo2 = h2) — the
     representation :func:`_km_sql` needs. The conv() calls run once
     per shingle here instead of once per (shingle, seed).
     ``keep_shingle`` carries the raw shingle through for callers that
     also hash it with another family (the fused dual-family path)."""
-    keep = [id_col] + (["shingle"] if keep_shingle else [])
+    keep = ["doc_id"] + (["shingle"] if keep_shingle else [])
     return sh.selectExpr(
         *keep, "md5(shingle) AS __hx"
     ).selectExpr(
@@ -364,16 +363,8 @@ def _xx_halves_sql(seed: int, name: str) -> list[str]:
     ]
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    n_hashes: int = 32,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_family: str = "xxhash64",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """One row per doc with ``sig: array<bigint>`` of length n_hashes.
+def minhash_signatures(docs: DataFrame, hash_family: str = "xxhash64") -> DataFrame:
+    """One row per doc with ``sig: array<bigint>`` of length ``N_HASHES``.
 
     Hash families (both deterministic across runs and partitionings):
 
@@ -390,48 +381,34 @@ def minhash_signatures(
 
     Aggregation is a groupBy(doc) of per-shingle minima: map-side
     combine collapses most of the data before the single shuffle.
-
-    ``shingles`` — optionally pass a pre-exploded (id, shingle) frame
-    (persist it first): callers that build signatures under SEVERAL
-    hash families (d3's family-agreement form) then pay the CPU-heavy
-    shingle transform once instead of once per family.
+    Building signatures under SEVERAL hash families from one shingle
+    scan is :func:`minhash_signatures_families`.
     """
-    sh = (
-        shingles
-        if shingles is not None
-        else exploded_shingles(docs, id_col, text_col, k)
-    )
+    sh = exploded_shingles(docs)
     if hash_family == "xxhash64":
         sh = sh.selectExpr(
-            id_col,
-            *[f"xxhash64(shingle, {i}) AS __hv{i}" for i in range(n_hashes)],
+            "doc_id",
+            *[f"xxhash64(shingle, {i}) AS __hv{i}" for i in range(N_HASHES)],
         )
     elif hash_family == "md5":
-        sh = _md5_halves(sh, id_col)
+        sh = _md5_halves(sh)
         sh = sh.selectExpr(
-            id_col, *[f"{_km_sql(i)} AS __hv{i}" for i in range(n_hashes)]
+            "doc_id", *[f"{_km_sql(i)} AS __hv{i}" for i in range(N_HASHES)]
         )
     else:
         raise ValueError(f"unknown hash_family {hash_family!r}")
-    mins = sh.groupBy(id_col).agg(
-        *[F.expr(f"min(__hv{i}) AS h{i}") for i in range(n_hashes)]
+    mins = sh.groupBy("doc_id").agg(
+        *[F.expr(f"min(__hv{i}) AS h{i}") for i in range(N_HASHES)]
     )
     return mins.selectExpr(
-        id_col,
-        "array(" + ", ".join(f"h{i}" for i in range(n_hashes)) + ") AS sig",
+        "doc_id",
+        "array(" + ", ".join(f"h{i}" for i in range(N_HASHES)) + ") AS sig",
     )
 
 
-def minhash_signatures_families(
-    docs: DataFrame,
-    n_hashes: int = 32,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def minhash_signatures_families(docs: DataFrame) -> DataFrame:
     """BOTH hash families' signatures from ONE shingle scan and ONE
-    groupBy: rows (id, family, sig) with family ∈ {"xxhash64", "md5"}.
+    groupBy: rows (doc_id, family, sig) with family ∈ {"xxhash64", "md5"}.
     The md5 family is bit-identical to
     ``minhash_signatures(hash_family="md5")`` (what the DuckDB oracle
     replays); the "xxhash64" family is Kirsch–Mitzenmacher double
@@ -445,67 +422,61 @@ def minhash_signatures_families(
     families separately costs two shingle explodes (or one persisted
     explode read twice) and two min-aggregation shuffles. Here both
     families' hash columns ride the same select, one groupBy takes
-    all 2·n_hashes minima map-side-combined, and the per-family rows
+    all 2·N_HASHES minima map-side-combined, and the per-family rows
     come from a 2-way struct explode of the single aggregated row —
     the dual-family signature table costs one shuffle, the same as a
     single family.
     """
-    sh = (
-        shingles
-        if shingles is not None
-        else exploded_shingles(docs, id_col, text_col, k)
-    )
+    sh = exploded_shingles(docs)
     # the production family is ALSO Kirsch–Mitzenmacher, seeded from
     # two xxhash64 words: 2 string hashes + 32 long-math derivations
     # instead of 32 string hashes (~4× cheaper per shingle, the
     # standard production double-hashing shape; the md5 family
     # provides the independent cross-check)
-    base = _md5_halves(sh, id_col, keep_shingle=True).selectExpr(
+    base = _md5_halves(sh, keep_shingle=True).selectExpr(
         "*",
         *_xx_halves_sql(0, "1x"),
         *_xx_halves_sql(1, "2x"),
     )
     hv = base.selectExpr(
-        id_col,
-        *[f"{_km_sql(i, 'x')} AS __x{i}" for i in range(n_hashes)],
-        *[f"{_km_sql(i)} AS __m{i}" for i in range(n_hashes)],
+        "doc_id",
+        *[f"{_km_sql(i, 'x')} AS __x{i}" for i in range(N_HASHES)],
+        *[f"{_km_sql(i)} AS __m{i}" for i in range(N_HASHES)],
     )
-    mins = hv.groupBy(id_col).agg(
-        *[F.expr(f"min(__x{i}) AS x{i}") for i in range(n_hashes)],
-        *[F.expr(f"min(__m{i}) AS m{i}") for i in range(n_hashes)],
+    mins = hv.groupBy("doc_id").agg(
+        *[F.expr(f"min(__x{i}) AS x{i}") for i in range(N_HASHES)],
+        *[F.expr(f"min(__m{i}) AS m{i}") for i in range(N_HASHES)],
     )
-    xs = ", ".join(f"x{i}" for i in range(n_hashes))
-    ms = ", ".join(f"m{i}" for i in range(n_hashes))
+    xs = ", ".join(f"x{i}" for i in range(N_HASHES))
+    ms = ", ".join(f"m{i}" for i in range(N_HASHES))
     return mins.selectExpr(
-        id_col,
+        "doc_id",
         "explode(array("
         f"named_struct('family', 'xxhash64', 'sig', array({xs})), "
         f"named_struct('family', 'md5', 'sig', array({ms})))) AS fs",
-    ).select(id_col, "fs.family", "fs.sig")
+    ).select("doc_id", "fs.family", "fs.sig")
 
 
 def _banded(
-    signatures: DataFrame,
-    bands: int,
-    n_hashes: int,
-    band_key: str,
-    id_col: str,
-    group_col: str | None = None,
+    signatures: DataFrame, band_key: str, group_col: str | None = None
 ) -> DataFrame:
-    """(id, [group], sig, band_id, band_hash) — one row per signature
-    band. ``band_key="hash"`` buckets on a 32-bit hash of the slice
-    (smallest shuffle payload; collisions only add candidates),
+    """(doc_id, [group], sig, band_id, band_hash) — one row per
+    signature band, ``BANDS`` bands of ``N_HASHES // BANDS``
+    components. ``band_key="hash"`` buckets on a 32-bit hash of the
+    slice (smallest shuffle payload; collisions only add candidates),
     ``"slice"`` on the raw slice array (zero collisions, what the
-    oracle-verified md5-family queries need). ``group_col`` is carried
-    through untouched (it joins into the bucket key downstream)."""
-    rows_per_band = n_hashes // bands
+    oracle-verified md5-family queries need). ``group_col`` (d3's hash
+    family) is carried through untouched: d3 joins it into the bucket
+    key, so several independent LSH runs share one self-join shuffle
+    without ever colliding across groups."""
+    rows_per_band = N_HASHES // BANDS
     if band_key == "hash":
         key_of = lambda sl: F.hash(sl)
     elif band_key == "slice":
         key_of = lambda sl: sl
     else:
         raise ValueError(f"unknown band_key {band_key!r}")
-    keep = [id_col] + ([group_col] if group_col else [])
+    keep = ["doc_id"] + ([group_col] if group_col else [])
     return signatures.select(
         *keep,
         "sig",
@@ -518,21 +489,14 @@ def _banded(
                             F.slice(F.col("sig"), i * rows_per_band + 1, rows_per_band)
                         ).alias("band_hash"),
                     )
-                    for i in range(bands)
+                    for i in range(BANDS)
                 ]
             )
         ).alias("b"),
     ).select(*keep, "sig", "b.band_id", "b.band_hash")
 
 
-def lsh_delta_candidate_pairs(
-    signatures: DataFrame,
-    is_delta,
-    bands: int = 8,
-    id_col: str = "doc_id",
-    n_hashes: int = 32,
-    band_key: str = "hash",
-) -> DataFrame:
+def lsh_delta_candidate_pairs(signatures: DataFrame, is_delta) -> DataFrame:
     """INCREMENTAL LSH candidate generation: pairs that touch the
     delta (new docs), skipping base×base entirely — the daily-ingest
     shape of near-dup dedup. The banded delta side joins against the
@@ -541,7 +505,9 @@ def lsh_delta_candidate_pairs(
     base side's signatures come precomputed from the signature store
     and only the delta pays the shingle+minhash cost.
 
-    ``is_delta`` — a Column-predicate factory applied to the id column.
+    ``is_delta`` — a Column-predicate factory applied to ``doc_id``.
+    Bands bucket on a hash of the slice (``band_key="hash"`` of
+    :func:`lsh_candidate_pairs`).
     Output: (doc_a < doc_b) bare id pairs where at least one side is in
     the delta, deduped (delta×delta pairs arise in both orientations
     and collapse here); feed to :func:`exact_jaccard_for_pairs`.
@@ -549,11 +515,11 @@ def lsh_delta_candidate_pairs(
     from pyspark import StorageLevel
 
     signatures = signatures.persist(StorageLevel.MEMORY_AND_DISK)
-    banded = _banded(signatures, bands, n_hashes, band_key, id_col)
-    d = banded.filter(is_delta(F.col(id_col))).select(
-        F.col(id_col).alias("__doc_d"), "band_id", "band_hash"
+    banded = _banded(signatures, "hash")
+    d = banded.filter(is_delta(F.col("doc_id"))).select(
+        F.col("doc_id").alias("__doc_d"), "band_id", "band_hash"
     )
-    o = banded.select(F.col(id_col).alias("__doc_o"), "band_id", "band_hash")
+    o = banded.select(F.col("doc_id").alias("__doc_o"), "band_id", "band_hash")
     return (
         d.join(o, ["band_id", "band_hash"])
         .filter(F.col("__doc_d") != F.col("__doc_o"))
@@ -566,13 +532,7 @@ def lsh_delta_candidate_pairs(
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 8,
-    id_col: str = "doc_id",
-    n_hashes: int = 32,
-    band_key: str = "hash",
-    include_estimate: bool = True,
-    group_col: str | None = None,
+    signatures: DataFrame, band_key: str = "hash", include_estimate: bool = True
 ) -> DataFrame:
     """Band the signature and self-join on the band bucket.
 
@@ -581,8 +541,8 @@ def lsh_candidate_pairs(
     key is the band bucket, so work scales with bucket occupancy, not
     the corpus square.
 
-    ``n_hashes`` is the signature length and must match what
-    :func:`minhash_signatures` produced — passed as a parameter so plan
+    The bands slice the signature by the module constants ``N_HASHES``
+    and ``BANDS``, which :func:`minhash_signatures` builds to, so plan
     construction never triggers a Spark action (a ``first()`` here
     would execute the whole minhash aggregation once just to learn the
     array length, then recompute it in the main query).
@@ -617,8 +577,7 @@ def lsh_candidate_pairs(
     from pyspark import StorageLevel
 
     signatures = signatures.persist(StorageLevel.MEMORY_AND_DISK)
-    g = [group_col] if group_col else []
-    banded = _banded(signatures, bands, n_hashes, band_key, id_col, group_col)
+    banded = _banded(signatures, band_key)
     # candidate pairs are deduped as BARE id pairs — carrying the
     # signature arrays through the band join + dropDuplicates shuffle
     # multiplies shuffle volume ~30× (measured 17s → 4s at sf0.1).
@@ -626,26 +585,23 @@ def lsh_candidate_pairs(
     # signature table is O(corpus) and would not fit in executor
     # memory at 100 TB — AQE broadcasts it when it is actually small
     # and falls back to a shuffle join when it isn't.
-    # ``group_col`` (d3's hash family) joins INTO the bucket key, so
-    # several independent LSH runs share one self-join shuffle without
-    # ever colliding across groups.
-    a = banded.select(F.col(id_col).alias("doc_a"), *g, "band_id", "band_hash")
-    b = banded.select(F.col(id_col).alias("doc_b"), *g, "band_id", "band_hash")
+    a = banded.select(F.col("doc_id").alias("doc_a"), "band_id", "band_hash")
+    b = banded.select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
     pairs = (
-        a.join(b, g + ["band_id", "band_hash"])
+        a.join(b, ["band_id", "band_hash"])
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(*g, "doc_a", "doc_b")
-        .dropDuplicates(g + ["doc_a", "doc_b"])
+        .select("doc_a", "doc_b")
+        .dropDuplicates(["doc_a", "doc_b"])
     )
     if not include_estimate:
         return pairs
     sig_a = signatures.select(
-        F.col(id_col).alias("doc_a"), *g, F.col("sig").alias("sig_a")
+        F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")
     )
     sig_b = signatures.select(
-        F.col(id_col).alias("doc_b"), *g, F.col("sig").alias("sig_b")
+        F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")
     )
-    pairs = pairs.join(sig_a, ["doc_a"] + g).join(sig_b, ["doc_b"] + g)
+    pairs = pairs.join(sig_a, ["doc_a"]).join(sig_b, ["doc_b"])
     agree = F.size(
         F.filter(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq
@@ -653,13 +609,11 @@ def lsh_candidate_pairs(
     )
     n = F.size(F.col("sig_a"))
     return pairs.select(
-        *g, "doc_a", "doc_b", (agree.cast("double") / n).alias("est_jaccard")
+        "doc_a", "doc_b", (agree.cast("double") / n).alias("est_jaccard")
     )
 
 
-def connected_components(
-    pairs: DataFrame, max_iterations: int = 50
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over an undirected pair list (columns
     ``doc_a``, ``doc_b``) by iterative min-label propagation — the
     stage that turns near-duplicate PAIRS into duplicate CLUSTERS so a
@@ -762,7 +716,7 @@ def connected_components(
     # halves the job-submission overhead that dominates on the small
     # dense graphs near-dup clusters produce. The mid-round result is
     # persisted lazily — it has two consumers inside the same job.
-    for _ in range(max(1, max_iterations // 2)):
+    for _ in range(CC_MAX_ROUNDS // 2):
         mid = one_round(labels).localCheckpoint(eager=False)
         new_labels = one_round(mid).localCheckpoint()
         changed = new_labels.agg(F.max("__ch")).collect()[0][0]
@@ -773,9 +727,7 @@ def connected_components(
     return labels.select("doc_id", "cluster_id")
 
 
-def simhash_fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """One row per doc with its 64-bit SimHash: per-token
     :func:`ce_hash64`, each bit votes ±1, the sign of the per-bit sum
     becomes the fingerprint bit.
@@ -796,18 +748,16 @@ def simhash_fingerprints(
     "matching" every other — out of the pair join.
     """
     th = (
-        spread_if_narrow(docs.select(id_col, text_col))
-        .select(
-            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__tok")
-        )
-        .select(F.col(id_col), ce_hash64(F.col("__tok")).alias("__th"))
+        spread_if_narrow(docs.select("doc_id", "text"))
+        .select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("__tok"))
+        .select(F.col("doc_id"), ce_hash64(F.col("__tok")).alias("__th"))
     )
     # votes as popcounts: ones_i = Σ bit_i(hash); the ±1 vote sum is
     # 2·ones_i − n, so "vote > 0" ⟺ 2·ones_i > n. Built as SQL-string
     # expressions: 64 aggregates + 64 conditional terms composed with
     # the Column API cost ~5s of per-query py4j round-trips on the
     # DRIVER alone — one parsed expr string each is milliseconds.
-    votes = th.groupBy(id_col).agg(
+    votes = th.groupBy("doc_id").agg(
         F.expr("count(*) AS __n"),
         *[
             F.expr(f"sum(shiftrightunsigned(__th, {i}) & 1L) AS o{i}")
@@ -817,15 +767,10 @@ def simhash_fingerprints(
     fp = " + ".join(
         f"IF(2 * o{i} > __n, shiftleft(1L, {i}), 0L)" for i in range(64)
     )
-    return votes.select(F.col(id_col), F.expr(f"{fp} AS simhash"))
+    return votes.select(F.col("doc_id"), F.expr(f"{fp} AS simhash"))
 
 
-def simhash_band_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def simhash_band_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate near-dup pairs by 16-bit SimHash bands (pigeonhole:
     Hamming ≤ 3 over 64 bits ⇒ ≥1 of 4 bands identical), verified with
     the exact Hamming distance.
@@ -836,11 +781,9 @@ def simhash_band_pairs(
     """
     from pyspark import StorageLevel
 
-    sh = simhash_fingerprints(docs, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = simhash_fingerprints(docs).persist(StorageLevel.MEMORY_AND_DISK)
     banded = sh.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.explode(
             F.array(
@@ -855,12 +798,18 @@ def simhash_band_pairs(
                 ]
             )
         ).alias("b"),
-    ).select(id_col, "simhash", "b.band_id", "b.band_val")
+    ).select("doc_id", "simhash", "b.band_id", "b.band_val")
     a = banded.select(
-        F.col(id_col).alias("doc_a"), F.col("simhash").alias("sim_a"), "band_id", "band_val"
+        F.col("doc_id").alias("doc_a"),
+        F.col("simhash").alias("sim_a"),
+        "band_id",
+        "band_val",
     )
     b = banded.select(
-        F.col(id_col).alias("doc_b"), F.col("simhash").alias("sim_b"), "band_id", "band_val"
+        F.col("doc_id").alias("doc_b"),
+        F.col("simhash").alias("sim_b"),
+        "band_id",
+        "band_val",
     )
     pairs = (
         a.join(b, ["band_id", "band_val"])

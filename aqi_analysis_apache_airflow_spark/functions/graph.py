@@ -53,39 +53,41 @@ def _label_side(lab: DataFrame, use_broadcast: bool) -> DataFrame:
     return F.broadcast(lab) if use_broadcast else lab
 
 
-_GATE_CACHE: dict[tuple, bool] = {}
+_GATE_CACHE: dict[str, bool] = {}
+
+#: Runaway backstop of :func:`kcore_peel`'s fixed-point mode.
+KCORE_MAX_ROUNDS = 100
 
 
-def dim_broadcast_gate(spark, sf_dir: str, tables=("customer", "supplier")) -> bool:
+def dim_broadcast_gate(spark, sf_dir: str) -> bool:
     """Memoized broadcast-gate resolution from dimension-table row
-    counts: nodes <= sum of the named tables' counts, compared against
+    counts: nodes <= customer + supplier rows (the node sets of the
+    customer–supplier graphs), compared against
     :data:`BROADCAST_LABEL_MAX_NODES`. The parquet counts are
     metadata-only but still cost ~0.21s of job scheduling each (A/B
-    2026-08-16, sf0.1: two counts = 0.21s/call — a visible tax on a
-    1.3s query measured 3x per bench pass); the bound is a pure
-    function of the input FILES, so one probe per (sf_dir, tables)
-    per process is correct. Stale only if the files are rewritten
-    under the same path mid-process, which the bench/test corpus
-    never does."""
-    key = (sf_dir, tuple(tables))
-    if key not in _GATE_CACHE:
+    2026-08-16, sf0.1: two counts = 0.21s/call — a visible tax on a 1.3s
+    query measured 3x per bench pass); the bound is a pure function of
+    the input FILES, so one probe per sf_dir per process is correct.
+    Stale only if the files are rewritten under the same path
+    mid-process, which the bench/test corpus never does."""
+    if sf_dir not in _GATE_CACHE:
         from ..sources.readers import load_table
 
-        n = sum(load_table(spark, sf_dir, t).count() for t in tables)
-        _GATE_CACHE[key] = n <= BROADCAST_LABEL_MAX_NODES
-    return _GATE_CACHE[key]
+        n = sum(
+            load_table(spark, sf_dir, t).count() for t in ("customer", "supplier")
+        )
+        _GATE_CACHE[sf_dir] = n <= BROADCAST_LABEL_MAX_NODES
+    return _GATE_CACHE[sf_dir]
 
 
 def pagerank(
     edges: DataFrame,
     n_iterations: int | None = 5,
     damping_pct: int = 85,
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_rounds: int = 100,
     unit: int = ONE_E12,
 ) -> DataFrame:
-    """PageRank over a directed edge list.
+    """PageRank over a directed (src, dst) edge list.
 
     Returns (node, rank_e12: bigint) with rank_e12 ≈ rank·1e12. Nodes
     = every id appearing as src or dst; dangling nodes (no out-edges)
@@ -117,7 +119,7 @@ def pagerank(
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     # edge list annotated with its source's out-degree, reused verbatim
     # every round — persist once, HASH-PARTITIONED ON THE JOIN KEY.
     # The degree attaches via an unordered WINDOW over partitionBy(src)
@@ -484,7 +486,6 @@ def kcore_peel(
     edges: DataFrame,
     k: int,
     rounds: int | None = None,
-    max_rounds: int = 100,
 ) -> DataFrame:
     """k-core peeling (Seidman 1983; distributed schedule of Montresor
     et al. 2013) over a DOUBLED undirected edge list (src, dst):
@@ -493,12 +494,12 @@ def kcore_peel(
 
     - ``rounds=N`` peels exactly N synchronous rounds. The result is a
       SUPERSET of the true k-core unless the peel has converged.
-    - ``rounds=None`` peels to the fixed point: peeling is MONOTONE
-      (the edge set only shrinks), so ``|ng| == |g|`` is exact
-      convergence (equal counts of nested sets ⟺ equal sets) — no
-      oscillation cap needed; ``max_rounds`` is a runaway backstop
-      only. ONE action per round: the new edge count doubles as both
-      the convergence scalar and the materializer.
+    - ``rounds=None`` peels to the fixed point: peeling is MONOTONE (the
+      edge set only shrinks), so ``|ng| == |g|`` is exact convergence
+      (equal counts of nested sets ⟺ equal sets) — no oscillation cap
+      needed; :data:`KCORE_MAX_ROUNDS` is a runaway backstop only. ONE
+      action per round: the new edge count doubles as both the
+      convergence scalar and the materializer.
 
     Each round ends in a ``localCheckpoint`` (eager in fixed-point
     mode where the count needs it, lazy otherwise), which does two
@@ -538,7 +539,7 @@ def kcore_peel(
         eager=eager
     )
     prev = g.count() if rounds is None else None
-    n = max_rounds if rounds is None else rounds
+    n = KCORE_MAX_ROUNDS if rounds is None else rounds
     converged = rounds is not None  # rounds=N mode never claims a fixed point
     for _ in range(n):
         drop = (
@@ -566,14 +567,14 @@ def kcore_peel(
             prev = cnt
         g = ng
     if not converged:
-        # mirror pagerank's exhaustion signal: a max_rounds exit hands
+        # mirror pagerank's exhaustion signal: a capped exit hands
         # the caller a SUPERSET of the true core, not a proven one
         logging.getLogger(__name__).warning(
-            "kcore_peel fixed-point: max_rounds=%d exhausted before the "
+            "kcore_peel fixed-point: %d rounds exhausted before the "
             "peel stabilized (last edge count=%s); result is the final "
             "round — a superset of the true %d-core, not a proven "
             "fixed point",
-            max_rounds,
+            KCORE_MAX_ROUNDS,
             prev,
             k,
         )

@@ -27,12 +27,8 @@ from pyspark.sql import functions as F
 FEATURE_SCHEMA = "doc_id bigint, n_bytes int, content_id string"
 
 
-def extract_binary_features(
-    media: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Per-record features from a binary column via mapInPandas.
+def extract_binary_features(media: DataFrame) -> DataFrame:
+    """Per-record features of (doc_id, payload) rows via mapInPandas.
 
     Each Arrow batch arrives as a pandas DataFrame; features are
     computed vectorized per batch. Partition-parallel, no shuffle.
@@ -42,13 +38,13 @@ def extract_binary_features(
         import hashlib
 
         for pdf in batches:
-            payload = pdf[payload_col]
+            payload = pdf["payload"]
             # a NULL payload (e.g. NULL source text) must surface as
             # NULL features, not crash the int cast — mirror SQL's
             # octet_length(NULL)/md5(NULL) semantics
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bytes": payload.str.len().astype("Int32"),
                     "content_id": payload.map(
                         lambda b: None
@@ -58,46 +54,42 @@ def extract_binary_features(
                 }
             )
 
-    return media.select(id_col, payload_col).mapInPandas(_extract, FEATURE_SCHEMA)
+    return media.select("doc_id", "payload").mapInPandas(_extract, FEATURE_SCHEMA)
 
 
-def frame_sample(
-    media: DataFrame,
-    frame_bytes: int = 256,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Frame-sampling plumbing: expand each payload into fixed-stride
-    frames — (doc_id, frame_idx, frame_off, frame) — via posexplode of
-    a computed offset sequence. This is the VIDEO pattern at 100 TB:
-    the expansion is a narrow generate (no shuffle), frames flow to a
-    per-frame decode/feature stage (stubbed here exactly as in
-    :func:`extract_binary_features`), and downstream partitioning is
-    by (doc, frame) for per-frame parallelism.
+def frame_sample(media: DataFrame, frame_bytes: int = 256) -> DataFrame:
+    """Frame-sampling plumbing: expand the payload of each (doc_id,
+    payload) row into fixed-stride frames — (doc_id, frame_idx,
+    frame_off, frame) — via posexplode of a computed offset sequence.
+    This is the VIDEO pattern at 100 TB: the expansion is a narrow
+    generate (no shuffle), frames flow to a per-frame decode/feature
+    stage (stubbed here exactly as in :func:`extract_binary_features`),
+    and downstream partitioning is by (doc, frame) for per-frame
+    parallelism.
 
     Payloads shorter than one frame stride yield no frames (matching a
     video shorter than one sample interval).
     """
-    n_frames = F.floor(F.length(F.col(payload_col)) / F.lit(frame_bytes))
+    n_frames = F.floor(F.length(F.col("payload")) / F.lit(frame_bytes))
     # sequence(0, -1) counts BACKWARDS in Spark — payloads shorter than
     # one stride must map to an empty frame list explicitly
     idx = F.when(
         n_frames >= 1, F.sequence(F.lit(0).cast("long"), n_frames - 1)
     ).otherwise(F.array().cast("array<long>"))
     return (
-        media.select(id_col, payload_col, idx.alias("__idx"))
+        media.select("doc_id", "payload", idx.alias("__idx"))
         .filter(F.size("__idx") > 0)
         .select(
-            id_col,
-            payload_col,
+            "doc_id",
+            "payload",
             F.posexplode("__idx").alias("frame_idx", "__i"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("frame_idx").cast("int").alias("frame_idx"),
             (F.col("frame_idx") * frame_bytes).cast("long").alias("frame_off"),
             F.substring(
-                F.col(payload_col),
+                F.col("payload"),
                 (F.col("frame_idx") * frame_bytes + 1).cast("int"),
                 frame_bytes,
             ).alias("frame"),

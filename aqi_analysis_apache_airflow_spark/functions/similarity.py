@@ -3,8 +3,9 @@
 Exact dot products and cosines (a reproducible decimal form for
 surfaced scores, a double form for internal ranking), brute-force
 exact top-k (the baseline, and the oracle), and the IVF path: a
-deterministic coarse quantizer assigns each vector to a centroid, so a
-probe exact-reranks only the members of its best ``n_probe`` clusters.
+deterministic coarse quantizer assigns each vector to one of
+``N_CENTROIDS`` centroids, so a probe exact-reranks only the members of
+its best ``N_PROBE`` clusters.
 """
 
 from __future__ import annotations
@@ -13,6 +14,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .spread import spread_if_narrow
+
+#: IVF centroids over ``embeddings`` and clusters a probe reranks: the
+#: probe touches ~N_PROBE/N_CENTROIDS of the corpus.
+N_CENTROIDS = 16
+N_PROBE = 4
 
 # Optimization-round r13 note: a fixed-width unrolled element_at form
 # of the two dot folds below (64-/16-wide sums behind a size() CASE,
@@ -109,59 +115,48 @@ def cosine_fast(a: Column, b: Column) -> Column:
     return dot_fast(a, b) / F.nullif(denom, F.lit(0.0))
 
 
-def brute_force_topk(
-    emb: DataFrame,
-    query: DataFrame,
-    k: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
-) -> DataFrame:
-    """Exact top-k against a broadcast 1-row query vector. The only
-    wide operation is the final TakeOrdered (per-partition heap +
-    driver merge) — no shuffle of the corpus."""
+def brute_force_topk(emb: DataFrame, query: DataFrame, k: int = 50) -> DataFrame:
+    """Exact top-k of (vec_id, embedding) rows against a broadcast
+    1-row query vector ``qv``. The only wide operation is the final
+    TakeOrdered (per-partition heap + driver merge) — no shuffle of
+    the corpus."""
     scored = emb.join(F.broadcast(query)).select(
-        id_col, cosine(F.col(vec_col), F.col(query_vec_col)).alias("cosine_sim")
+        "vec_id", cosine(F.col("embedding"), F.col("qv")).alias("cosine_sim")
     )
     # zero-norm vectors score NULL (no direction to rank) and are
     # excluded BEFORE the ordering — engine NULL-ordering conventions
     # must never decide a top-k
     return (
         scored.filter(F.col("cosine_sim").isNotNull())
-        .orderBy(F.col("cosine_sim").desc(), id_col)
+        .orderBy(F.col("cosine_sim").desc(), "vec_id")
         .limit(k)
     )
 
 
-def ivf_assign(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantizer: deterministic centroids — hash each id
-    into one of ``n_centroids`` buckets and take, per bucket, the id
-    that minimizes an independent second hash (``min_by`` on
-    ``xxhash64(id, 1)``). The double hash matters: min over the RAW id
-    would bias every centroid toward globally small ids, while the
-    hash-ordered pick is a uniform random representative. Reproducible
-    without an iterative k-means fit (swap in trained centroids when
-    quality matters), and scale-safe: the selection is one
-    map-side-combined groupBy over bare ids — no global ordering, no
+def ivf_assign(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """IVF coarse quantizer over (vec_id, embedding): deterministic
+    centroids — hash each id into one of ``N_CENTROIDS`` buckets and
+    take, per bucket, the id that minimizes an independent second hash
+    (``min_by`` on ``xxhash64(id, 1)``). The double hash matters: min
+    over the RAW id would bias every centroid toward globally small ids,
+    while the hash-ordered pick is a uniform random representative.
+    Reproducible without an iterative k-means fit (swap in trained
+    centroids when quality matters), and scale-safe: the selection is
+    one map-side-combined groupBy over bare ids — no global ordering, no
     row_number window, no driver-side count. Each vector is then
     assigned to its max-cosine centroid by a PER-ROW argmax over the
-    broadcast centroid array: the n_centroids (centroid_id, cvec,
-    norm) structs are collect_list'ed into one row, broadcast-joined
-    onto the corpus, and ``array_max`` over ``struct(sim, -id)`` picks
-    the winner (ties → smaller centroid_id, deterministically). The
-    corpus is never fanned out ×n_centroids and never shuffled — the
-    assignment is a narrow projection on the embeddings scan.
+    broadcast centroid array: the N_CENTROIDS (centroid_id, cvec, norm)
+    structs are collect_list'ed into one row, broadcast-joined onto the
+    corpus, and ``array_max`` over ``struct(sim, -id)`` picks the winner
+    (ties → smaller centroid_id, deterministically). The corpus is never
+    fanned out ×N_CENTROIDS and never shuffled — the assignment is a
+    narrow projection on the embeddings scan.
 
     Returns (centroids, assigned) where assigned = emb + ``cluster``.
     At scale the assigned table is written partitioned BY cluster, so
     a probe reads only its clusters' files.
     """
-    # the per-row argmax over n_centroids dot products is the CPU-heavy
+    # the per-row argmax over N_CENTROIDS dot products is the CPU-heavy
     # stage, and the corpus often arrives as one split — spread it
     # across cores while the natural splits cannot (size-conditional:
     # at production scale the repartition vanishes — spread_if_narrow)
@@ -172,16 +167,18 @@ def ivf_assign(
     # per-row norm fold, and on a single-split input it would run on
     # one task (r13 optimization; filter/repartition commute row-wise)
     emb = spread_if_narrow(emb).filter(
-        dot_fast(F.col(vec_col), F.col(vec_col)) > 0
+        dot_fast(F.col("embedding"), F.col("embedding")) > 0
     )
     centroid_ids = (
-        emb.select(id_col)
-        .groupBy(F.pmod(F.xxhash64(id_col), F.lit(n_centroids)).alias("__bucket"))
-        .agg(F.min_by(id_col, F.xxhash64(id_col, F.lit(1))).alias(id_col))
-        .select(id_col)
+        emb.select("vec_id")
+        .groupBy(
+            F.pmod(F.xxhash64("vec_id"), F.lit(N_CENTROIDS)).alias("__bucket")
+        )
+        .agg(F.min_by("vec_id", F.xxhash64("vec_id", F.lit(1))).alias("vec_id"))
+        .select("vec_id")
     )
-    centroids = emb.join(F.broadcast(centroid_ids), id_col).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec")
+    centroids = emb.join(F.broadcast(centroid_ids), "vec_id").select(
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
     # one row: [(centroid_id, cvec, ||cvec||), ...] — centroid norms
     # are per-centroid constants, so hoist them out of the per-row loop
@@ -192,15 +189,15 @@ def ivf_assign(
     # of being referenced inside the transform lambda — higher-order
     # functions evaluate interpreted with no common-subexpression
     # elimination, so the closed-over norm fold used to re-run once per
-    # centroid (×n_centroids per row). Same expression, same double,
+    # centroid (×N_CENTROIDS per row). Same expression, same double,
     # evaluated once.
-    vnorm = F.sqrt(dot_fast(F.col(vec_col), F.col(vec_col)))
+    vnorm = F.sqrt(dot_fast(F.col("embedding"), F.col("embedding")))
     best = F.array_max(
         F.transform(
             F.col("__cents"),
             lambda c: F.struct(
                 (
-                    dot_fast(F.col(vec_col), c["cvec"])
+                    dot_fast(F.col("embedding"), c["cvec"])
                     / (F.col("__vnorm") * c["cnorm"])
                 ).alias("sim"),
                 (-c["centroid_id"]).alias("neg_id"),
@@ -210,38 +207,30 @@ def ivf_assign(
     assigned = (
         emb.withColumn("__vnorm", vnorm)
         .join(F.broadcast(cents_row))
-        .select(id_col, vec_col, (-best["neg_id"]).alias("cluster"))
+        .select("vec_id", "embedding", (-best["neg_id"]).alias("cluster"))
     )
     return centroids, assigned
 
 
-def ivf_topk(
-    emb: DataFrame,
-    query: DataFrame,
-    k: int = 50,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec_col: str = "qv",
-) -> DataFrame:
-    """IVF approximate top-k: rank centroids against the query, probe
-    the best ``n_probe`` clusters, exact-rerank only their members —
-    the corpus fraction touched is ~n_probe/n_centroids instead of 1.
-    Recall is tunable via n_probe (== n_centroids ⇒ exact brute force).
+def ivf_topk(emb: DataFrame, query: DataFrame, k: int = 50) -> DataFrame:
+    """IVF approximate top-k of (vec_id, embedding) rows against the
+    1-row ``qv`` query: rank centroids against the query, probe the
+    best ``N_PROBE`` clusters, exact-rerank only their members — the
+    corpus fraction touched is ~N_PROBE/N_CENTROIDS instead of 1
+    (N_PROBE == N_CENTROIDS would be exact brute force).
     """
-    centroids, assigned = ivf_assign(emb, n_centroids, id_col, vec_col)
+    centroids, assigned = ivf_assign(emb)
     probed = (
         centroids.join(F.broadcast(query))
         .select(
             "centroid_id",
-            cosine_fast(F.col("cvec"), F.col(query_vec_col)).alias("__sim"),
+            cosine_fast(F.col("cvec"), F.col("qv")).alias("__sim"),
         )
         .orderBy(F.col("__sim").desc(), "centroid_id")
-        .limit(n_probe)
+        .limit(N_PROBE)
         .select("centroid_id")
     )
     candidates = assigned.join(
         F.broadcast(probed), assigned.cluster == probed.centroid_id
     )
-    return brute_force_topk(candidates, query, k, id_col, vec_col, query_vec_col)
+    return brute_force_topk(candidates, query, k)

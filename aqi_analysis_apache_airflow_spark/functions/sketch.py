@@ -97,10 +97,10 @@ def mg_partition_summaries(keyed: DataFrame, capacity: int) -> DataFrame:
     return keyed.mapInPandas(_mg, MG_SCHEMA)
 
 
-def pca_partial_gram(chunk_rows: int = 1024, scale: float = 1e14):
-    """Factory for pca1's Arrow stage: per ≤``chunk_rows`` chunk of
+def pca_partial_gram():
+    """Factory for pca1's Arrow stage: per ≤1024-row chunk of
     embedding vectors, the exact int64 partial second-moment matrix
-    Σ round(x_i·x_j·scale) as (i, j, partial) rows — 1-based dims,
+    Σ round(x_i·x_j·1e14) as (i, j, partial) rows — 1-based dims,
     matching the oracle's UNNEST(range(1, len+1)).
 
     Factory-produced closure (the ``_make_absorb`` pattern): the
@@ -130,9 +130,9 @@ def pca_partial_gram(chunk_rows: int = 1024, scale: float = 1e14):
                 by_len.setdefault(len(v), []).append(v)
             for d, group in by_len.items():
                 x = np.asarray(group, dtype=np.float64)
-                for s in range(0, x.shape[0], chunk_rows):
-                    c = x[s : s + chunk_rows]
-                    p = (c[:, :, None] * c[:, None, :]) * scale
+                for s in range(0, x.shape[0], 1024):
+                    c = x[s : s + 1024]
+                    p = (c[:, :, None] * c[:, None, :]) * 1e14
                     r = np.where(
                         p >= 0, np.floor(p + 0.5), np.ceil(p - 0.5)
                     ).astype(np.int64)

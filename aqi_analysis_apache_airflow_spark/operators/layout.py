@@ -41,7 +41,7 @@ def z_value(
     a_max: Column,
     b_min: Column,
     b_max: Column,
-    bits: int = 16,
+    bits: int,
 ) -> Column:
     """Scale two numeric columns to ``[0, 2^bits)`` by their global
     bounds (bound columns, e.g. from a broadcast 1-row aggregate) and

@@ -38,7 +38,7 @@ from pyspark.sql.window import Window
 from ..functions.materialize import pin
 from ..functions.dedup import CE_HASH64_SQL, ce_hash64, tokens
 from ..functions.similarity import dot_decimal as _dot
-from .registry import load, load_spread, query
+from .registry import load, load_spread, materialized, query
 
 # sign-safe integral division shift (the mk1 precedent): for den > 0,
 # (num + OFF*den) div den - OFF == floor(num/den) exactly for any sign
@@ -4417,7 +4417,7 @@ s AS (
   FROM flags
 )"""
 
-_FLEISS1_SQL = f"""
+_FLEISS1_SQL = materialized(f"""
 WITH {_RATER_S_CTES}
 SELECT CAST(n AS BIGINT) AS n_docs,
        CAST(nfa AS BIGINT) AS exact_flags,
@@ -4433,7 +4433,7 @@ SELECT CAST(n AS BIGINT) AS n_docs,
                       - 2 * (s1 * s1 + (3 * n - s1) * (3 * n - s1)), 0)
             - {_OFF} AS BIGINT) AS kappa_micro
 FROM s
-"""
+""")
 
 
 def _detector_flag_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4453,10 +4453,10 @@ def _detector_flag_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     ).select("doc_id", F.md5("text").alias("h"))
     hc = base.groupBy("h").agg(F.count("*").alias("c"))
-    sigs = minhash_signatures(docs, n_hashes=32, hash_family="md5")
-    lshp = lsh_candidate_pairs(
-        sigs, bands=8, n_hashes=32, band_key="slice"
-    ).filter(F.col("est_jaccard") >= 0.5)
+    sigs = minhash_signatures(docs, hash_family="md5")
+    lshp = lsh_candidate_pairs(sigs, band_key="slice").filter(
+        F.col("est_jaccard") >= 0.5
+    )
     lshdocs = (
         lshp.select(F.col("doc_a").alias("ld"))
         .union(lshp.select(F.col("doc_b").alias("ld")))
@@ -6296,7 +6296,7 @@ def mcn1_mcnemar_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _COCHQ_CRIT_MICRO = 5_991_465  # chi^2_{0.95, df=2} in micro
 
-_COCHQ1_SQL = f"""
+_COCHQ1_SQL = materialized(f"""
 WITH {_RATER_S_CTES}
 SELECT CAST(n AS BIGINT) AS n_docs,
        CAST(nfa AS BIGINT) AS exact_flags,
@@ -6310,7 +6310,7 @@ SELECT CAST(n AS BIGINT) AS n_docs,
          1000000 * 2 * (3 * (nfa * nfa + nfb * nfb + nfc * nfc) - s1 * s1)
            > {_COCHQ_CRIT_MICRO} * (3 * s1 - s2) END AS rates_differ
 FROM s
-"""
+""")
 
 
 @query("cochq1_cochran_q", oracle=_COCHQ1_SQL)

@@ -16,7 +16,7 @@ from pyspark.sql.window import Window
 from ..functions.dedup import CE_HASH64_SQL as _CEH
 from ..functions.dedup import ce_half_sql as _ce_half
 from ..functions.spread import spread_if_narrow
-from .registry import load, load_spread, query
+from .registry import load, load_spread, materialized, query
 
 # --------------------------------------------------------------------------
 # events: time windows (batch twins of the streaming surface)
@@ -393,7 +393,6 @@ def d2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
         load(spark, sf_dir, "documents"),
         threshold=0.5,
-        k=3,
         max_doc_freq=None,
         allow_quadratic=True,
     )
@@ -450,7 +449,7 @@ def d6_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
-        docs, threshold=0.5, k=3, max_doc_freq=20
+        docs, threshold=0.5, max_doc_freq=20
     ).persist(StorageLevel.MEMORY_AND_DISK)
     comp = connected_components(pairs)
     csize = comp.groupBy("cluster_id").agg(
@@ -522,7 +521,7 @@ def d9_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
-        docs, threshold=0.5, k=3, max_doc_freq=20
+        docs, threshold=0.5, max_doc_freq=20
     ).persist(StorageLevel.MEMORY_AND_DISK)
     comp = connected_components(pairs)
     labeled = (
@@ -584,7 +583,7 @@ def d10_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     inter, sizes = capped_pair_counts(
-        exploded_shingles(docs, "doc_id", "text", 3), max_doc_freq=20
+        exploded_shingles(docs), max_doc_freq=20
     )
     both = inter.select(
         F.explode(
@@ -649,11 +648,9 @@ def d3v_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs, n_hashes=32)
-    cands = lsh_candidate_pairs(
-        sigs, bands=8, n_hashes=32, include_estimate=False
-    )
-    return exact_jaccard_for_pairs(docs, cands, k=3).filter(
+    sigs = minhash_signatures(docs)
+    cands = lsh_candidate_pairs(sigs, include_estimate=False)
+    return exact_jaccard_for_pairs(docs, cands).filter(
         F.col("jaccard") >= 0.5
     )
 
@@ -686,11 +683,9 @@ def d8_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs, n_hashes=32)
-    cands = lsh_delta_candidate_pairs(
-        sigs, lambda c: c % 5 == 0, bands=8, n_hashes=32
-    )
-    return exact_jaccard_for_pairs(docs, cands, k=3).filter(
+    sigs = minhash_signatures(docs)
+    cands = lsh_delta_candidate_pairs(sigs, lambda c: c % 5 == 0)
+    return exact_jaccard_for_pairs(docs, cands).filter(
         F.col("jaccard") >= 0.5
     )
 
@@ -762,12 +757,10 @@ def d3m_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     production fast path."""
     from ..functions.dedup import lsh_candidate_pairs, minhash_signatures
 
-    sigs = minhash_signatures(
-        load(spark, sf_dir, "documents"), n_hashes=32, hash_family="md5"
+    sigs = minhash_signatures(load(spark, sf_dir, "documents"), hash_family="md5")
+    return lsh_candidate_pairs(sigs, band_key="slice").filter(
+        F.col("est_jaccard") >= 0.5
     )
-    return lsh_candidate_pairs(
-        sigs, bands=8, n_hashes=32, band_key="slice"
-    ).filter(F.col("est_jaccard") >= 0.5)
 
 
 @query(
@@ -820,13 +813,13 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     from pyspark import StorageLevel
 
-    sigs = minhash_signatures_families(docs, n_hashes=32).persist(
+    sigs = minhash_signatures_families(docs).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # band_key="slice" for BOTH families: the md5 family needs
     # zero-collision banding for oracle parity, and sharing the key
     # shape is what lets one self-join serve both families.
-    banded = _banded(sigs, 8, 32, "slice", "doc_id", "family")
+    banded = _banded(sigs, "slice", "family")
     a = banded.select(
         F.col("doc_id").alias("doc_a"), "family", "band_id", "band_hash"
     )
@@ -1938,7 +1931,7 @@ def d2b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(
-        load(spark, sf_dir, "documents"), threshold=0.5, k=3, max_doc_freq=20
+        load(spark, sf_dir, "documents"), threshold=0.5, max_doc_freq=20
     )
 
 
@@ -2496,7 +2489,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = brute_force_topk(corpus, qvec, k=50).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    ivf = ivf_topk(corpus, qvec, k=50, n_centroids=16, n_probe=4).persist(
+    ivf = ivf_topk(corpus, qvec, k=50).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # rank windows run AFTER each limit(50): single-partition over 50
@@ -3087,7 +3080,7 @@ def snm1_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    verified = exact_jaccard_for_pairs(docs, cand, k=3).filter(
+    verified = exact_jaccard_for_pairs(docs, cand).filter(
         F.col("jaccard") >= 0.5
     )
     return verified.join(cand, ["doc_a", "doc_b"]).select(
@@ -3254,7 +3247,7 @@ def d4v_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     cands = simhash_band_pairs(docs, max_hamming=3)
-    verified = exact_jaccard_for_pairs(docs, cands, k=3).filter(
+    verified = exact_jaccard_for_pairs(docs, cands).filter(
         F.col("jaccard") >= 0.5
     )
     return verified.join(cands, ["doc_a", "doc_b"]).select(
@@ -3686,7 +3679,7 @@ def aniso1_embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # da1 — dedup-detector agreement audit (round 10)
 # --------------------------------------------------------------------------
 
-_DA1_SQL = f"""
+_DA1_SQL = materialized(f"""
 WITH {_D4_FP_CTES},
 lshp AS (SELECT doc_a, doc_b FROM ({_D3M_SQL}) t),
 shp AS (SELECT doc_a, doc_b FROM simcand),
@@ -3703,7 +3696,7 @@ SELECT CAST(count(*) FILTER (in_lsh) AS BIGINT) AS n_lsh_pairs,
             // NULLIF(CAST(count(*) AS BIGINT), 0) AS BIGINT)
          AS agreement_ppm
 FROM u
-"""
+""")
 
 
 @query("da1_detector_agreement", oracle=_DA1_SQL)
@@ -3740,9 +3733,9 @@ def da1_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs, n_hashes=32, hash_family="md5")
+    sigs = minhash_signatures(docs, hash_family="md5")
     lshp = (
-        lsh_candidate_pairs(sigs, bands=8, n_hashes=32, band_key="slice")
+        lsh_candidate_pairs(sigs, band_key="slice")
         .filter(F.col("est_jaccard") >= 0.5)
         .select("doc_a", "doc_b", F.lit(1).alias("in_lsh"))
     )
@@ -4431,7 +4424,7 @@ def snm2_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     exact = (
-        ngram_jaccard_pairs(docs, threshold=0.5, k=3, max_doc_freq=20)
+        ngram_jaccard_pairs(docs, threshold=0.5, max_doc_freq=20)
         .select("doc_a", "doc_b")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

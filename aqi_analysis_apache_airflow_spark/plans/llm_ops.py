@@ -338,7 +338,7 @@ def split2_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
-        docs, threshold=0.5, k=3, max_doc_freq=20
+        docs, threshold=0.5, max_doc_freq=20
     ).persist(StorageLevel.MEMORY_AND_DISK)
     comp = connected_components(pairs)
     group = F.coalesce(F.col("cluster_id"), F.col("doc_id"))

@@ -40,7 +40,7 @@ from pyspark.sql.window import Window
 
 from ..functions.materialize import pin
 from ..functions.dedup import CE_HASH64_SQL, ce_hash64, tokens
-from .registry import EVENTS_US_CTE, load, load_spread, query
+from .registry import EVENTS_US_CTE, load, load_spread, materialized, query
 
 # --------------------------------------------------------------------------
 # bpe1 — one BPE-training merge step (char-pair counting)
@@ -2130,7 +2130,7 @@ def _bpe3_oracle() -> str:
     union = "\n      UNION ALL ".join(
         f"SELECT * FROM st{i}" for i in range(_BPE2_ROUNDS + 1)
     )
-    return (
+    return materialized(
         _bpe2_sql_ctes()
         + ",\n    "
         + ",\n    ".join(sts)

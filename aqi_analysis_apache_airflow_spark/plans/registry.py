@@ -20,6 +20,7 @@ value-hash comparison is exact, not approximate:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -45,6 +46,15 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+def materialized(sql: str) -> str:
+    """``sql`` with every CTE marked ``AS MATERIALIZED``. DuckDB inlines
+    a CTE at each reference, so an oracle whose rounds each read the
+    previous round twice grows its query tree about 3x per round; the
+    mmr1 oracle needed ~4 GB at sf0.001 that way, and ~130 MB
+    materialized, with the same rows."""
+    return re.sub(r"\b(\w+) AS \(", r"\1 AS MATERIALIZED (", sql)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

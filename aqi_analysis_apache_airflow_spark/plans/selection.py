@@ -35,7 +35,7 @@ from ..functions.graph import (
 )
 from ..functions.similarity import cosine
 from ..functions.spread import spread_if_narrow
-from .registry import load, load_spread, query
+from .registry import load, load_spread, materialized, query
 from .retrieval import _BM25_CTES, bm25_doc_scores
 
 # --------------------------------------------------------------------------
@@ -841,7 +841,6 @@ def wv1_winnowing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ngram_jaccard_pairs(
             load(spark, sf_dir, "documents"),
             threshold=0.5,
-            k=3,
             max_doc_freq=20,
         )
         .select("doc_a", "doc_b")
@@ -1113,7 +1112,7 @@ def _mmr1_oracle() -> str:
     ),
     sel{i} AS (SELECT * FROM {prev} UNION ALL SELECT * FROM win{i})"""
         )
-    return (
+    return materialized(
         "WITH "
         + ",\n    ".join(ctes)
         + f"""

@@ -68,9 +68,7 @@ def st1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, sf_dir)
-    deduped = dedup_within_watermark(
-        stream, keys=["user_id", "event_type"], watermark="2 hours"
-    )
+    deduped = dedup_within_watermark(stream, keys=["user_id", "event_type"])
     out = run_to_memory(deduped, "st1_stream_dedup_sink", mode="append")
     return out.select("user_id", "event_type")
 
@@ -97,7 +95,7 @@ def st2_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ops import read_events_stream, run_to_memory, windowed_counts
 
     stream = read_events_stream(spark, sf_dir)
-    wc = windowed_counts(stream, window="1 hour", watermark="2 hours")
+    wc = windowed_counts(stream)
     out = run_to_memory(wc, "st2_stream_windowed_sink", mode="complete")
     return out.select(
         F.col("window_start").cast("timestamp_ntz").alias("window_start"),
@@ -138,7 +136,7 @@ def st3_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stream = read_events_stream(spark, sf_dir)
-    joined = stream_stream_attribution_join(stream, within="30 minutes")
+    joined = stream_stream_attribution_join(stream)
     out = run_to_memory(joined, "st3_join_sink", mode="append")
     return out.select(
         "user_id",
@@ -545,7 +543,7 @@ def st8_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = read_events_stream(spark, sf_dir)
     joined = stream_stream_attribution_join(
-        stream, within="30 minutes", watermark="0 seconds", how="left_outer"
+        stream, watermark="0 seconds", how="left_outer"
     )
     out = run_to_memory(joined, "st8_outer_sink", mode="append")
     wm = (

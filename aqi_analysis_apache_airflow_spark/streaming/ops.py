@@ -31,6 +31,13 @@ from pyspark.sql import types as T
 
 from ..sources.readers import footer_schema
 
+#: Tumbling window of :func:`windowed_counts`.
+WINDOW = "1 hour"
+#: Event-time lateness every stateful operator here tolerates.
+WATERMARK = "2 hours"
+#: How long after a view a click is still attributed to it.
+ATTRIBUTION_WITHIN = "30 minutes"
+
 
 def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
     """File-source stream over events parquet (swap for Kafka in prod;
@@ -60,18 +67,17 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def windowed_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked tumbling aggregation — the streaming twin of
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Watermarked tumbling aggregation (``WINDOW`` windows,
+    ``WATERMARK`` lateness) — the streaming twin of
     e1_tumbling_window. Late rows inside the watermark still update
     their window; rows later than the watermark are dropped WITH
     accounting (observable via
     ``query.lastProgress['stateOperators'][0]['numRowsDroppedByWatermark']``)
     — unlike the reference's silent CDC drop."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,6)"))
@@ -88,16 +94,12 @@ def windowed_counts(
     )
 
 
-def dedup_within_watermark(
-    events: DataFrame, keys: list[str] | None = None, watermark: str = "2 hours"
-) -> DataFrame:
-    """Exactly-once-per-key within the watermark horizon: state is
+def dedup_within_watermark(events: DataFrame, keys: list[str]) -> DataFrame:
+    """Exactly-once-per-key within the ``WATERMARK`` horizon: state is
     bounded (old keys age out with the watermark), unlike a global
     ``dropDuplicates`` whose state grows forever on an unbounded
     stream."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
-    )
+    return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
 @contextmanager
@@ -171,25 +173,22 @@ def run_to_memory(
 
 
 def stream_stream_attribution_join(
-    events: DataFrame,
-    within: str = "30 minutes",
-    watermark: str = "2 hours",
-    how: str = "inner",
+    events: DataFrame, watermark: str = WATERMARK, how: str = "inner"
 ) -> DataFrame:
-    """Watermarked stream-stream join: attribute each ``click`` to
-    every ``view`` by the same user in the preceding ``within``
+    """Watermarked stream-stream join: attribute each ``click`` to every
+    ``view`` by the same user in the preceding ``ATTRIBUTION_WITHIN``
     interval — the ad-attribution shape. Both sides carry a watermark
     AND the join condition bounds event time on both sides, which is
     what lets Spark expire join state (without the time bound, both
-    sides' state grows forever — the unbounded-state trap this
-    operator exists to avoid). Append-mode output: a match is emitted
-    once both inputs pass the watermark.
+    sides' state grows forever — the unbounded-state trap this operator
+    exists to avoid). Append-mode output: a match is emitted once both
+    inputs pass the watermark.
 
     ``how="left_outer"`` additionally emits every UNMATCHED view with
     null click columns — but only once the watermark proves no
-    in-window click can still arrive (view_ts + within < watermark);
-    the no-data final micro-batch (SPARK-24156, on by default) is what
-    flushes those rows when a bounded replay ends."""
+    in-window click can still arrive (view_ts + ATTRIBUTION_WITHIN <
+    watermark); the no-data final micro-batch (SPARK-24156, on by
+    default) is what flushes those rows when a bounded replay ends."""
     v = events.filter(F.col("event_type") == "view").select(
         F.col("user_id"),
         F.col("event_id").alias("view_id"),
@@ -204,6 +203,9 @@ def stream_stream_attribution_join(
         c,
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("click_ts") >= F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {within}")),
+        & (
+            F.col("click_ts")
+            <= F.col("view_ts") + F.expr(f"INTERVAL {ATTRIBUTION_WITHIN}")
+        ),
         how,
     ).select("user_id", "view_id", "view_ts", "click_id", "click_ts")

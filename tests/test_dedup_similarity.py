@@ -60,10 +60,10 @@ def test_uncapped_jaccard_requires_explicit_opt_in(docs):
 
 
 def test_minhash_lsh_agrees_with_exact(docs):
-    sigs = minhash_signatures(docs, n_hashes=32)
+    sigs = minhash_signatures(docs)
     est = {
         (r["doc_a"], r["doc_b"]): r["est_jaccard"]
-        for r in lsh_candidate_pairs(sigs, bands=8).collect()
+        for r in lsh_candidate_pairs(sigs).collect()
     }
     assert est[(1, 2)] == 1.0          # identical docs always collide
     assert (1, 3) in est               # near-dups land in ≥1 shared band
@@ -76,12 +76,12 @@ def test_lsh_plan_construction_is_lazy(spark, docs):
     ran the whole minhash aggregation via ``first()`` just to learn
     the signature length) — so it also works on an empty corpus."""
     empty = docs.filter(F.lit(False))
-    sigs = minhash_signatures(empty, n_hashes=32)
-    out = lsh_candidate_pairs(sigs, bands=8, n_hashes=32)  # no action, no crash
+    sigs = minhash_signatures(empty)
+    out = lsh_candidate_pairs(sigs)  # no action, no crash
     assert out.count() == 0
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
-    lsh_candidate_pairs(minhash_signatures(docs, n_hashes=32), bands=8, n_hashes=32)
+    lsh_candidate_pairs(minhash_signatures(docs))
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "plan construction launched a Spark job"
 
@@ -148,7 +148,7 @@ def test_ivf_topk_recall(spark):
     exact = {r["vec_id"] for r in brute_force_topk(corpus, q, k=20).collect()}
     approx = {
         r["vec_id"]
-        for r in ivf_topk(corpus, q, k=20, n_centroids=16, n_probe=4).collect()
+        for r in ivf_topk(corpus, q, k=20).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, f"recall {recall}"
@@ -226,7 +226,7 @@ def test_cluster_split_no_leakage(spark):
     assert split.select("doc_id").distinct().count() == docs.count()
 
     pairs = ngram_jaccard_pairs(
-        docs, threshold=0.5, k=3, max_doc_freq=None, allow_quadratic=True
+        docs, threshold=0.5, max_doc_freq=None, allow_quadratic=True
     )
     a = split.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")

@@ -279,3 +279,38 @@ def test_emd1_spine_window_is_bounded_and_source_grid_broadcasts(spark):
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p, p
     assert "SortMergeJoin" not in p, p
     assert re.search(r"windowspecdefinition\(source", p), p
+
+
+#: Address-space cap for the mmr1 oracle child (``RLIMIT_AS``).
+_ORACLE_AS_LIMIT = 2 << 30
+
+_ORACLE_CHILD = """
+import resource, sys
+resource.setrlimit(resource.RLIMIT_AS, ({limit}, {limit}))
+import duckdb
+con = duckdb.connect()
+con.execute("CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
+print(len(con.execute(sys.stdin.read()).fetchall()))
+"""
+
+
+def test_mmr1_oracle_runs_in_two_gib():
+    """Each greedy round of the mmr1 oracle reads the previous round's
+    selection twice. Without ``AS MATERIALIZED`` DuckDB inlines every
+    ``sel{i}`` CTE and the query tree grows about 3x per round, so the
+    oracle needed ~4 GB at sf0.001; materialized, it runs in ~130 MB."""
+    import subprocess
+    import sys
+
+    from aqi_analysis_apache_airflow_spark.plans.selection import _mmr1_oracle
+
+    child = _ORACLE_CHILD.format(limit=_ORACLE_AS_LIMIT, sf_dir=SF_DIR)
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        input=_mmr1_oracle(),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["5"]

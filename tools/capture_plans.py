@@ -11,12 +11,13 @@ that differ between two runs of one commit, so they are written as
 fixed tokens: two captures of the same code compare equal under a
 plain ``diff -r``.
 
-Checked at sf0.01: the 63 queries whose plans hold a lambda, captured
-alone, match a full capture of the same commit except d2b, snm2 and
-wv1. In the full capture those three read an ``InMemoryRelation``: an
-earlier query persisted a frame with the same subplan and left it in
-the session. ``oov1_vocab_coverage`` also differs between a full and a
-single-query capture, because its Expand order follows expression ids.
+The session's cache is cleared before each query is built, as
+``bench.py`` does: registry queries persist intermediates and leave
+them cached, and a later query with the same subplan would plan over
+that ``InMemoryRelation``, so its plan would depend on which queries
+ran before it. ``oov1_vocab_coverage`` still differs between a full
+and a single-query capture, because its Expand order follows
+expression ids.
 
 Usage: python tools/capture_plans.py OUTDIR [SF_DIR] [name ...]
 """
@@ -52,6 +53,7 @@ def main() -> None:
     # streaming queries need a running stream to explain — skip
     names = [n for n in names if not n.startswith("st")]
     for name in names:
+        spark.catalog.clearCache()
         try:
             df = REGISTRY[name].fn(spark, sf_dir)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
