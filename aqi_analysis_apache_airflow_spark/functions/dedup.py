@@ -39,6 +39,10 @@ N_HASHES = 32
 BANDS = 8
 #: Most label-propagation rounds of :func:`connected_components`.
 CC_MAX_ROUNDS = 50
+#: Least shingle-set Jaccard :func:`ngram_jaccard_pairs` reports.
+JACCARD_THRESHOLD = 0.5
+#: Largest SimHash Hamming distance :func:`simhash_band_pairs` reports.
+SIMHASH_MAX_HAMMING = 3
 
 
 def tokens(text: Column) -> Column:
@@ -171,12 +175,11 @@ def capped_pair_counts(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    threshold: float = 0.5,
     max_doc_freq: int | None = None,
     allow_quadratic: bool = False,
 ) -> DataFrame:
     """Exact Jaccard over ``SHINGLE_K``-word shingle sets for every
-    candidate pair.
+    candidate pair scoring at least :data:`JACCARD_THRESHOLD`.
 
     ``max_doc_freq`` drops shingles shared by more than that many docs
     (stop-shingles): they contribute little discrimination but dominate
@@ -227,7 +230,7 @@ def ngram_jaccard_pairs(
                 / (F.col("size_a") + F.col("size_b") - F.col("inter"))
             ).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
@@ -770,10 +773,13 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     return votes.select(F.col("doc_id"), F.expr(f"{fp} AS simhash"))
 
 
-def simhash_band_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Candidate near-dup pairs by 16-bit SimHash bands (pigeonhole:
-    Hamming ≤ 3 over 64 bits ⇒ ≥1 of 4 bands identical), verified with
-    the exact Hamming distance.
+def simhash_band_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs within :data:`SIMHASH_MAX_HAMMING` bits: candidate
+    pairs share one of four 16-bit SimHash bands, verified with the
+    exact Hamming distance. The bound is 3 because four bands
+    guarantee no more: by pigeonhole, 3 differing bits over 64 leave
+    at least one band identical, while 4 can hit every band, and a
+    pair that shares no band is never compared.
 
     Fingerprints are persisted for the same diamond-plan reason as
     :func:`lsh_candidate_pairs` — both sides of the band self-join
@@ -819,5 +825,5 @@ def simhash_band_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
     return pairs.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+        F.col("hamming") <= SIMHASH_MAX_HAMMING
     )

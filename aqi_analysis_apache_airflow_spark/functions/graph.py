@@ -31,53 +31,16 @@ from pyspark.sql import functions as F
 #: fixed-point scale: ranks are integer multiples of 1e-12
 ONE_E12 = 10**12
 
-#: Broadcast gate for the per-round label/score tables (verdict r10
-#: task 3). One (node, lbl) row is two longs (~50 B serialized with
-#: row overhead), so 5M nodes ≈ 250 MB on the driver and on every
-#: executor — the last size a forced broadcast is comfortable at; a
-#: billion-node graph would OOM the driver outright. At or under the
-#: threshold the label table broadcasts and the persisted edge list is
-#: never reshuffled (the fast path at every measured SF). Above it the
-#: loops drop the hint and run a plain co-partitioned SHUFFLE join:
-#: labels and edges both hash-exchange on the join key (dst) — the
-#: per-round edge exchange is the honest, unavoidable cost of a label
-#: table that no longer fits an executor, and AQE still picks a
-#: broadcast back up if runtime stats allow. Callers can force either
-#: path with ``broadcast_labels=True/False``; ``None`` resolves the
-#: gate with one control-plane node count.
-BROADCAST_LABEL_MAX_NODES = 5_000_000
-
-
-def _label_side(lab: DataFrame, use_broadcast: bool) -> DataFrame:
-    """The label side of a per-round join: hinted or plain (gated)."""
-    return F.broadcast(lab) if use_broadcast else lab
-
-
-_GATE_CACHE: dict[str, bool] = {}
-
 #: Runaway backstop of :func:`kcore_peel`'s fixed-point mode.
 KCORE_MAX_ROUNDS = 100
 
+#: Synchronous rounds :func:`lpa_propagate` replays (lpa1 and its
+#: oracle's unrolled CTEs).
+LPA_ROUNDS = 3
 
-def dim_broadcast_gate(spark, sf_dir: str) -> bool:
-    """Memoized broadcast-gate resolution from dimension-table row
-    counts: nodes <= customer + supplier rows (the node sets of the
-    customer–supplier graphs), compared against
-    :data:`BROADCAST_LABEL_MAX_NODES`. The parquet counts are
-    metadata-only but still cost ~0.21s of job scheduling each (A/B
-    2026-08-16, sf0.1: two counts = 0.21s/call — a visible tax on a 1.3s
-    query measured 3x per bench pass); the bound is a pure function of
-    the input FILES, so one probe per sf_dir per process is correct.
-    Stale only if the files are rewritten under the same path
-    mid-process, which the bench/test corpus never does."""
-    if sf_dir not in _GATE_CACHE:
-        from ..sources.readers import load_table
-
-        n = sum(
-            load_table(spark, sf_dir, t).count() for t in ("customer", "supplier")
-        )
-        _GATE_CACHE[sf_dir] = n <= BROADCAST_LABEL_MAX_NODES
-    return _GATE_CACHE[sf_dir]
+#: Backstop of :func:`lpa_semisync`'s convergence loop (lpa2 and its
+#: oracle's recursion guard).
+LPA_MAX_ROUNDS = 40
 
 
 def pagerank(
@@ -100,9 +63,9 @@ def pagerank(
 
     ``n_iterations=N`` replays exactly N rounds as one lazy plan (the
     gr1 registry/oracle mode). ``n_iterations=None`` iterates to the
-    INTEGER fixed point (the lpa_propagate/kcore_peel convergence-twin
-    contract): per-round persist, one max|Δrank_e12| aggregate per
-    round, stop at Δ = 0. The damped integer recurrence is a
+    INTEGER fixed point (the kcore_peel convergence-twin contract):
+    per-round persist, one max|Δrank_e12| aggregate per round, stop at
+    Δ = 0. The damped integer recurrence is a
     contraction down to the last integer unit, where floor-division
     rounding can in principle sustain a ±1 flicker — ``max_rounds``
     backstops that; on reaching Δ = 0 the result is a true fixed
@@ -222,7 +185,7 @@ def pagerank(
     delta = None
     for _ in range(max_rounds):
         # fold the Δ against the previous round INTO the checkpointed
-        # row (the lpa_propagate flagged shape): ONE materialization
+        # row (the lpa_semisync flagged shape): ONE materialization
         # job per round, then the max|Δ| aggregate runs over the fresh
         # in-memory checkpoint
         flagged = (
@@ -259,120 +222,45 @@ def pagerank(
     return ranks
 
 
-def lpa_propagate(
-    edges: DataFrame,
-    rounds: int | None = None,
-    max_rounds: int = 50,
-    broadcast_labels: bool | None = None,
-) -> DataFrame:
+def lpa_propagate(edges: DataFrame) -> DataFrame:
     """Synchronous label propagation (Raghavan, Albert & Kumara 2007)
     over a DOUBLED undirected edge list (src, dst): every node adopts
     the most frequent label among its neighbors, ties to the smallest
     label. Returns (node, lbl). Labels init to node ids.
 
-    Two modes (the verdict-r7 convergence-twin contract):
+    Replays exactly :data:`LPA_ROUNDS` unrolled synchronous rounds as
+    ONE lazy plan with broadcast label joins — the lpa1 registry
+    query's DuckDB oracle unrolls the identical recurrence as chained
+    CTEs. Synchronous LPA 2-cycles on bipartite structures, so it has
+    no fixed-point mode here: :func:`lpa_semisync` is the schedule that
+    converges.
 
-    - ``rounds=N`` replays exactly N unrolled synchronous rounds as
-      ONE lazy plan with broadcast label joins — the oracle-parity
-      mode the lpa1 registry query uses (its DuckDB oracle unrolls
-      the identical recurrence as chained CTEs).
-    - ``rounds=None`` iterates to the synchronous fixed point using
-      the d6 control-plane convergence scalar: per-round eager
-      ``localCheckpoint`` (each round references the label table
-      twice, so persist-only rounds would grow the logical tree 2^R —
-      the lpa_semisync lesson), one changed-flag aggregate per round.
-      Capped at ``max_rounds`` because synchronous LPA can
-      2-cycle on bipartite structures (the classic oscillation — the
-      cap is the published remedy short of async updates, which would
-      break determinism).
-
-    Both modes run the identical per-round recurrence, so once the
-    label table reaches a round with zero changes the fixed point
-    equals any unrolled result of ≥ that many rounds (pytest-proven
-    on small fixtures in tests/test_graph_convergence.py).
-
-    Scale shape: labels are one row per node (≪ edges); broadcasting
-    them keeps the 2|E|-row edge list un-shuffled every round. Each
-    round is ONE edge⋈label join + a (node, lbl) count + a (node)
-    argmin, all map-side combinable. Callers in rounds=N mode should
-    persist the edge list HASH-PARTITIONED ON src: that one layout
-    satisfies the clustering of both per-round aggregates, making
-    every round exchange-free (lpa1 measured 4.91s → 2.10s at sf0.1);
-    the fixed-point mode applies the same repartition itself.
-
-    ``broadcast_labels`` gates the per-round label join (verdict r10
-    task 3): True forces the broadcast hint (correct while nodes ≤
-    :data:`BROADCAST_LABEL_MAX_NODES`), False runs a co-partitioned
-    shuffle join (the billion-node-safe path — labels and edges
-    hash-exchange on dst each round), and None (default) resolves the
-    gate with one control-plane node count. Both paths run the
-    identical recurrence and produce identical labels
-    (tests/test_graph_convergence.py proves it on a fixture).
+    Scale shape: labels are one row per node (≪ edges; ≤ 16k
+    customers + suppliers at sf0.1); broadcasting them keeps the
+    2|E|-row edge list un-shuffled every round. Each round is ONE
+    edge⋈label join + a (node, lbl) count + a (node) argmin, all
+    map-side combinable. Callers should persist the edge list
+    HASH-PARTITIONED ON src: that one layout satisfies the clustering
+    of both per-round aggregates, making every round exchange-free
+    (lpa1 measured 4.91s → 2.10s at sf0.1).
     """
-    from pyspark import StorageLevel
-
     e = edges.select("src", "dst")
-
-    def one_round(lab: DataFrame, bc: bool) -> DataFrame:
+    lab = e.select(F.col("src").alias("node"), F.col("src").alias("lbl")).distinct()
+    for _ in range(LPA_ROUNDS):
         cnt = (
-            e.join(_label_side(lab.withColumnRenamed("node", "dst"), bc), "dst")
+            e.join(F.broadcast(lab.withColumnRenamed("node", "dst")), "dst")
             .groupBy(F.col("src").alias("node"), "lbl")
             .agg(F.count("*").alias("c"))
         )
-        return (
+        lab = (
             cnt.groupBy("node")
             .agg(F.min(F.struct((-F.col("c")).alias("nc"), "lbl")).alias("b"))
             .select("node", F.col("b.lbl").alias("lbl"))
         )
-
-    lab = e.select(F.col("src").alias("node"), F.col("src").alias("lbl")).distinct()
-    if rounds is not None:
-        # gate resolution in the lazy rounds=N mode costs one extra
-        # count job — pass an explicit bool to keep the plan zero-job
-        bc = (
-            broadcast_labels
-            if broadcast_labels is not None
-            else lab.count() <= BROADCAST_LABEL_MAX_NODES
-        )
-        for _ in range(rounds):
-            lab = one_round(lab, bc)
-        return lab
-
-    e = e.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-    # localCheckpoint, not persist, for the per-round label table: each
-    # round references lab TWICE (the contribution join + the old-label
-    # flag join), so persist-only rounds grow the logical tree 2^R and
-    # Catalyst's re-analysis dies past ~15 rounds (the lpa_semisync /
-    # gr2 lesson) — the checkpoint truncates lineage to a leaf
-    lab = lab.localCheckpoint()
-    bc = (
-        broadcast_labels
-        if broadcast_labels is not None
-        else lab.count() <= BROADCAST_LABEL_MAX_NODES  # cheap: checkpointed
-    )
-    for _ in range(max_rounds):
-        new = one_round(lab, bc)
-        # fold the convergence flag in BEFORE materializing so the
-        # driver check is one aggregate over the fresh checkpoint (the
-        # d6 shape)
-        flagged = (
-            new.join(lab.select("node", F.col("lbl").alias("__old")), "node")
-            .select("node", "lbl", (F.col("lbl") != F.col("__old")).alias("__ch"))
-            .localCheckpoint()
-        )
-        changed = flagged.agg(F.max("__ch")).collect()[0][0]
-        lab = flagged.select("node", "lbl")
-        if not changed:
-            break
-    e.unpersist()
-    return lab.select("node", "lbl")
+    return lab
 
 
-def lpa_semisync(
-    edges: DataFrame,
-    max_rounds: int = 50,
-    broadcast_labels: bool | None = None,
-) -> DataFrame:
+def lpa_semisync(edges: DataFrame) -> DataFrame:
     """Semi-synchronous label propagation (Cordasco & Gargano 2011,
     "Community detection via semi-synchronous label propagation
     algorithms") over a DOUBLED undirected edge list whose node ids
@@ -392,25 +280,22 @@ def lpa_semisync(
     any SF; this reaches the fixed point in 4-7 full rounds).
 
     Convergence machinery: ONE changed-flag aggregate per full round
-    over an eagerly ``localCheckpoint``-ed label table, ``max_rounds``
-    backstop with the kcore_peel/pagerank exhaustion warning. The
-    checkpoint (not persist) is load-bearing here: each half-step
-    references the incoming label table TWICE (keep-side filter +
-    update-side join), so a full round multiplies the logical tree by
-    4 — with persist-only rounds Catalyst re-analyzes a 4^R-node tree
-    and the driver dies building the explain string (observed live at
-    sf0.001); the checkpoint truncates lineage to a LogicalRDD leaf
-    every round, the kcore_peel lesson.
+    over an eagerly ``localCheckpoint``-ed label table, an
+    :data:`LPA_MAX_ROUNDS` backstop with the kcore_peel/pagerank
+    exhaustion warning. The checkpoint (not persist) is load-bearing
+    here: each half-step references the incoming label table TWICE
+    (keep-side filter + update-side join), so a full round multiplies
+    the logical tree by 4 — with persist-only rounds Catalyst
+    re-analyzes a 4^R-node tree and the driver dies building the
+    explain string (observed live at sf0.001); the checkpoint
+    truncates lineage to a LogicalRDD leaf every round, the kcore_peel
+    lesson.
 
     Scale shape: labels broadcast (one row per node ≪ edges), so the
     2|E|-row edge list — persisted hash-partitioned on src — is never
     reshuffled; each half-step is one edge⋈label join + a (node, lbl)
     count + a (node) argmin restricted to half the srcs, all map-side
-    combinable. ``broadcast_labels`` gates the label join exactly as
-    in :func:`lpa_propagate` (None = auto via one node count against
-    :data:`BROADCAST_LABEL_MAX_NODES`; False = co-partitioned shuffle
-    join, the billion-node-safe path — both paths proven identical in
-    tests/test_graph_convergence.py).
+    combinable.
     """
     from pyspark import StorageLevel
 
@@ -428,10 +313,10 @@ def lpa_semisync(
     # the table is node-sized.
     n_part = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    def half(lab: DataFrame, parity: int, bc: bool) -> DataFrame:
+    def half(lab: DataFrame, parity: int) -> DataFrame:
         upd = (
             e.filter(F.col("src") % 2 == parity)
-            .join(_label_side(lab.withColumnRenamed("node", "dst"), bc), "dst")
+            .join(F.broadcast(lab.withColumnRenamed("node", "dst")), "dst")
             .groupBy(F.col("src").alias("node"), "lbl")
             .agg(F.count("*").alias("c"))
             .groupBy("node")
@@ -449,14 +334,9 @@ def lpa_semisync(
         .distinct()
         .localCheckpoint()
     )
-    bc = (
-        broadcast_labels
-        if broadcast_labels is not None
-        else lab.count() <= BROADCAST_LABEL_MAX_NODES  # cheap: checkpointed
-    )
     converged = False
-    for _ in range(max_rounds):
-        new = half(half(lab, 0, bc), 1, bc)
+    for _ in range(LPA_MAX_ROUNDS):
+        new = half(half(lab, 0), 1)
         flagged = (
             new.join(lab.select("node", F.col("lbl").alias("__old")), "node")
             .select(
@@ -473,10 +353,10 @@ def lpa_semisync(
             break
     if not converged:
         logging.getLogger(__name__).warning(
-            "lpa_semisync: max_rounds=%d exhausted before the labels "
+            "lpa_semisync: %d rounds exhausted before the labels "
             "stabilized; result is the final round, not a proven fixed "
             "point",
-            max_rounds,
+            LPA_MAX_ROUNDS,
         )
     e.unpersist()
     return lab.select("node", "lbl")

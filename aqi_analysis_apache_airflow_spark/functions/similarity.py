@@ -19,6 +19,8 @@ from .spread import spread_if_narrow
 #: probe touches ~N_PROBE/N_CENTROIDS of the corpus.
 N_CENTROIDS = 16
 N_PROBE = 4
+#: Neighbours :func:`ivf_topk` returns.
+IVF_K = 50
 
 # Optimization-round r13 note: a fixed-width unrolled element_at form
 # of the two dot folds below (64-/16-wide sums behind a size() CASE,
@@ -212,12 +214,12 @@ def ivf_assign(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     return centroids, assigned
 
 
-def ivf_topk(emb: DataFrame, query: DataFrame, k: int = 50) -> DataFrame:
-    """IVF approximate top-k of (vec_id, embedding) rows against the
-    1-row ``qv`` query: rank centroids against the query, probe the
-    best ``N_PROBE`` clusters, exact-rerank only their members — the
-    corpus fraction touched is ~N_PROBE/N_CENTROIDS instead of 1
-    (N_PROBE == N_CENTROIDS would be exact brute force).
+def ivf_topk(emb: DataFrame, query: DataFrame) -> DataFrame:
+    """IVF approximate top-:data:`IVF_K` of (vec_id, embedding) rows
+    against the 1-row ``qv`` query: rank centroids against the query,
+    probe the best ``N_PROBE`` clusters, exact-rerank only their
+    members — the corpus fraction touched is ~N_PROBE/N_CENTROIDS
+    instead of 1 (N_PROBE == N_CENTROIDS would be exact brute force).
     """
     centroids, assigned = ivf_assign(emb)
     probed = (
@@ -233,4 +235,4 @@ def ivf_topk(emb: DataFrame, query: DataFrame, k: int = 50) -> DataFrame:
     candidates = assigned.join(
         F.broadcast(probed), assigned.cluster == probed.centroid_id
     )
-    return brute_force_topk(candidates, query, k)
+    return brute_force_topk(candidates, query, IVF_K)

@@ -31,20 +31,18 @@ def asof_join(
     keys: list[str],
     left_ts: str,
     right_ts: str,
-    value_cols: list[str] | None = None,
+    value_cols: list[str],
 ) -> DataFrame:
-    """Backward as-of join. ``value_cols`` defaults to every right
-    column not in ``keys`` + ``right_ts``. A value_col that collides
-    with a non-key left column would silently produce a duplicate
-    output column name (ambiguous downstream) — refused up front."""
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in {*keys, right_ts}]
+    """Backward as-of join that attaches the right columns
+    ``value_cols``. A value_col that collides with a non-key left
+    column would silently produce a duplicate output column name
+    (ambiguous downstream) — refused up front."""
     collisions = {c for c in value_cols if c in left.columns and c not in keys}
     if collisions:
         raise ValueError(
             f"asof_join: right value_cols {sorted(collisions)} collide with "
             "left column names — rename one side (e.g. "
-            "right.withColumnRenamed) or pass an explicit value_cols list"
+            "right.withColumnRenamed)"
         )
 
     l_tagged = left.select(
@@ -101,7 +99,7 @@ def asof_join_cogrouped(
     keys: list[str],
     left_ts: str,
     right_ts: str,
-    value_cols: list[str] | None = None,
+    value_cols: list[str],
 ) -> DataFrame:
     """The cogrouped-pandas twin of :func:`asof_join`:
     ``left.groupBy(keys).cogroup(right.groupBy(keys))`` hands each
@@ -114,8 +112,6 @@ def asof_join_cogrouped(
     nearest); for the plain backward join the union-tag form above is
     the faster JVM-only path.
     """
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in {*keys, right_ts}]
     collisions = {c for c in value_cols if c in left.columns and c not in keys}
     if collisions:
         raise ValueError(

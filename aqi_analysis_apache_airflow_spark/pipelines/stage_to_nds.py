@@ -55,7 +55,7 @@ time for an eager max.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -65,16 +65,13 @@ from ..operators.dedupe import keep_first
 from ..operators.merge import merge_upsert
 from ..operators.surrogate import assign_missing_keys
 from ..schemas import NDS_NATURAL_KEYS, TABLE_SCHEMAS
+from .metadata import _now
 from .source_to_stage import AQI_STAGE, COUNTIES_STAGE
 from .warehouse import Warehouse
 
 STATE_NDS = "state_nds"
 COUNTY_NDS = "county_nds"
 MEASUREMENT_NDS = "measurement_nds"
-
-
-def _now() -> datetime:
-    return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
 def _read(wh: Warehouse, table: str) -> DataFrame:

@@ -4463,7 +4463,7 @@ def _detector_flag_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("in_lsh", F.lit(1))
     )
-    shp = simhash_band_pairs(docs, max_hamming=3)
+    shp = simhash_band_pairs(docs)
     shdocs = (
         shp.select(F.col("doc_a").alias("sd"))
         .union(shp.select(F.col("doc_b").alias("sd")))

@@ -392,7 +392,6 @@ def d2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ngram_jaccard_pairs(
         load(spark, sf_dir, "documents"),
-        threshold=0.5,
         max_doc_freq=None,
         allow_quadratic=True,
     )
@@ -448,9 +447,9 @@ def d6_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     docs = load(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, threshold=0.5, max_doc_freq=20
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = ngram_jaccard_pairs(docs, max_doc_freq=20).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     comp = connected_components(pairs)
     csize = comp.groupBy("cluster_id").agg(
         F.count("*").alias("cluster_size")
@@ -520,9 +519,9 @@ def d9_canonical_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     docs = load(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, threshold=0.5, max_doc_freq=20
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = ngram_jaccard_pairs(docs, max_doc_freq=20).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     comp = connected_components(pairs)
     labeled = (
         docs.select("doc_id", "n_chars")
@@ -926,7 +925,7 @@ def d4_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops a pair)."""
     from ..functions.dedup import simhash_band_pairs
 
-    return simhash_band_pairs(load(spark, sf_dir, "documents"), max_hamming=3)
+    return simhash_band_pairs(load(spark, sf_dir, "documents"))
 
 
 @query(
@@ -1930,9 +1929,7 @@ def d2b_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap so the result is still exact for the surviving pairs."""
     from ..functions.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(
-        load(spark, sf_dir, "documents"), threshold=0.5, max_doc_freq=20
-    )
+    return ngram_jaccard_pairs(load(spark, sf_dir, "documents"), max_doc_freq=20)
 
 
 #: GPT-2-style pretokenizer regex, reduced to constructs whose
@@ -2479,19 +2476,17 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact md5-family oracle, sim_cosine the exact baseline."""
     from pyspark import StorageLevel
 
-    from ..functions.similarity import brute_force_topk, ivf_topk
+    from ..functions.similarity import IVF_K, brute_force_topk, ivf_topk
 
     emb = load(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     corpus = emb.filter(F.col("vec_id") != 0)
     # each 50-row top-k feeds two consumers (rank join + recall agg):
     # persist the tiny results so the corpus-level pipelines run once
-    exact = brute_force_topk(corpus, qvec, k=50).persist(
+    exact = brute_force_topk(corpus, qvec, k=IVF_K).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    ivf = ivf_topk(corpus, qvec, k=50).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    ivf = ivf_topk(corpus, qvec).persist(StorageLevel.MEMORY_AND_DISK)
     # rank windows run AFTER each limit(50): single-partition over 50
     # rows, not a global sort of the corpus
     w = Window.orderBy(F.col("cosine_sim").desc(), "vec_id")
@@ -3246,7 +3241,7 @@ def d4v_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import exact_jaccard_for_pairs, simhash_band_pairs
 
     docs = load(spark, sf_dir, "documents")
-    cands = simhash_band_pairs(docs, max_hamming=3)
+    cands = simhash_band_pairs(docs)
     verified = exact_jaccard_for_pairs(docs, cands).filter(
         F.col("jaccard") >= 0.5
     )
@@ -3739,7 +3734,7 @@ def da1_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("est_jaccard") >= 0.5)
         .select("doc_a", "doc_b", F.lit(1).alias("in_lsh"))
     )
-    shp = simhash_band_pairs(docs, max_hamming=3).select(
+    shp = simhash_band_pairs(docs).select(
         "doc_a", "doc_b", F.lit(1).alias("in_sh")
     )
     u = lshp.join(shp, ["doc_a", "doc_b"], "full_outer")
@@ -4424,7 +4419,7 @@ def snm2_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     exact = (
-        ngram_jaccard_pairs(docs, threshold=0.5, max_doc_freq=20)
+        ngram_jaccard_pairs(docs, max_doc_freq=20)
         .select("doc_a", "doc_b")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )

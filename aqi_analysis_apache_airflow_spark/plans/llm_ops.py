@@ -337,9 +337,9 @@ def split2_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     docs = load(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, threshold=0.5, max_doc_freq=20
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = ngram_jaccard_pairs(docs, max_doc_freq=20).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     comp = connected_components(pairs)
     group = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     return (
@@ -1611,25 +1611,11 @@ def hits1_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity encoding, decoded on the way out); each half-step is one
     edge⋈score join where the score table (one row per node ≪ edges)
     broadcasts, one map-side-combinable SUM, and a 1-row total
-    broadcast back — the whole 3-round chain is one lazy plan. The
-    score-table broadcast is SIZE-GATED like the graph fixed-point
-    loops (verdict r10 task 3): nodes ≤ customers + suppliers, a
-    parquet-metadata-cheap upper bound, and past
-    BROADCAST_LABEL_MAX_NODES the hint drops so the half-step joins
-    run as co-partitioned shuffles instead of OOMing the driver."""
+    broadcast back — the whole 3-round chain is one lazy plan."""
     from pyspark import StorageLevel
-
-    from aqi_analysis_apache_airflow_spark.functions.graph import (
-        _label_side,
-        dim_broadcast_gate,
-    )
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # node-count UPPER BOUND from the dimension tables, MEMOIZED per
-    # sf_dir (the bare metadata counts still cost 0.21s of job
-    # scheduling per call — A/B 2026-08-16)
-    bc = dim_broadcast_gate(spark, sf_dir)
     e = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(
@@ -1663,7 +1649,7 @@ def hits1_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     auth = None
     for r in range(_HITS_ROUNDS):
         araw = (
-            e.join(_label_side(hub.withColumnRenamed("node", "c"), bc), "c")
+            e.join(F.broadcast(hub.withColumnRenamed("node", "c")), "c")
             .groupBy(F.col("s").alias("node"))
             .agg(dec(F.sum("score")).alias("raw"))
         )
@@ -1674,7 +1660,7 @@ def hits1_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the shared 5-half-step subtree at runtime (2x otherwise)
             auth = auth.localCheckpoint(eager=False)
         hraw = (
-            e.join(_label_side(auth.withColumnRenamed("node", "s"), bc), "s")
+            e.join(F.broadcast(auth.withColumnRenamed("node", "s")), "s")
             .groupBy(F.col("c").alias("node"))
             .agg(dec(F.sum("score")).alias("raw"))
         )

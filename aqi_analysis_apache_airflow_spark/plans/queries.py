@@ -791,7 +791,7 @@ def j11_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
     )
     return (
-        salted_join(li, orders, ["l_orderkey"], n_salts=8)
+        salted_join(li, orders, ["l_orderkey"])
         .groupBy("o_orderpriority")
         .agg(
             F.sum(F.col("l_quantity").cast("decimal(18,2)"))

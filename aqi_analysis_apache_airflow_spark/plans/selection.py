@@ -27,7 +27,8 @@ from pyspark.sql.window import Window
 from ..functions.materialize import pin
 from ..functions.dedup import CE_HASH64_SQL, ce_hash64, tokens
 from ..functions.graph import (
-    dim_broadcast_gate,
+    LPA_MAX_ROUNDS,
+    LPA_ROUNDS,
     kcore_peel,
     lpa_propagate,
     lpa_semisync,
@@ -840,7 +841,6 @@ def wv1_winnowing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         ngram_jaccard_pairs(
             load(spark, sf_dir, "documents"),
-            threshold=0.5,
             max_doc_freq=20,
         )
         .select("doc_a", "doc_b")
@@ -2383,9 +2383,6 @@ def kmv1_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lpa1 — synchronous label propagation community detection
 # --------------------------------------------------------------------------
 
-_LPA_ITERS = 3
-
-
 def _lpa1_oracle() -> str:
     """Unrolled-CTE replay of the synchronous rounds (gr1/km1
     precedent): labels are node ids (exact BIGINTs), each round's new
@@ -2400,7 +2397,7 @@ def _lpa1_oracle() -> str:
     e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
     lab0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e)""",
     ]
-    for i in range(1, _LPA_ITERS + 1):
+    for i in range(1, LPA_ROUNDS + 1):
         ctes.append(
             f"""cnt{i} AS (
       SELECT e.src AS node, l.lbl, CAST(count(*) AS BIGINT) AS c
@@ -2423,7 +2420,7 @@ def _lpa1_oracle() -> str:
                 ELSE 's' || CAST(node // 2 AS VARCHAR) END AS node,
            CASE WHEN lbl % 2 = 0 THEN 'c' || CAST(lbl // 2 AS VARCHAR)
                 ELSE 's' || CAST(lbl // 2 AS VARCHAR) END AS community
-    FROM lab{_LPA_ITERS}"""
+    FROM lab{LPA_ROUNDS}"""
     )
 
 
@@ -2481,17 +2478,8 @@ def lpa1_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # labels are one row per NODE (≪ edges); broadcasting them keeps
     # the 2|E|-row edge list un-shuffled all three rounds (measured
-    # 6.7s → 4.1s at sf0.1) — see functions/graph.py::lpa_propagate,
-    # whose rounds=None twin iterates the same recurrence to the
-    # synchronous fixed point (pytest-proven equal once converged).
-    # The broadcast is size-gated via the MEMOIZED metadata-cheap
-    # dimension bound (nodes <= customers + suppliers; one probe per
-    # sf_dir per process — the bare counts cost 0.21s/call, A/B'd) so
-    # the lazy rounds=N plan stays zero-extra-jobs — past
-    # BROADCAST_LABEL_MAX_NODES the rounds run co-partitioned shuffle
-    # joins instead.
-    bc = dim_broadcast_gate(spark, sf_dir)
-    lab = lpa_propagate(e, rounds=_LPA_ITERS, broadcast_labels=bc)
+    # 6.7s → 4.1s at sf0.1) — see functions/graph.py::lpa_propagate
+    lab = lpa_propagate(e)
 
     decode = lambda col: F.when(  # noqa: E731
         F.col(col) % 2 == 0,
@@ -5682,7 +5670,6 @@ def kn1_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the lpa1 convergence twin, kcore2 pattern)
 # --------------------------------------------------------------------------
 
-_LPA2_CAP = 40
 _LPA2_PRED_SQL = "l.l_quantity <= 2"
 #: integer argmin key for the neighbor-label mode (count desc, label
 #: asc) — evaluated in HUGEINT/DECIMAL(38,0) like cov1's tiebreak so
@@ -5699,7 +5686,7 @@ def _lpa2_oracle() -> str:
     and re-emits only when the full round actually changed a label,
     so the recursion halts exactly at the fixed point and
     ``max(iter)`` selects it. An ``iter < cap`` guard mirrors the
-    Spark loop's max_rounds backstop bit-for-bit, so even a
+    Spark loop's LPA_MAX_ROUNDS backstop bit-for-bit, so even a
     hypothetically oscillating fixture hash-matches. No NULL marker
     is needed (unlike kcore2): the node set is constant, so no round
     ever emits zero rows while changing."""
@@ -5737,7 +5724,7 @@ def _lpa2_oracle() -> str:
         FROM h1
         WHERE EXISTS (SELECT 1 FROM h1 x JOIN lab o ON x.node = o.node
                       WHERE x.lbl <> o.lbl)
-          AND (SELECT max(iter) FROM lab) < {_LPA2_CAP}
+          AND (SELECT max(iter) FROM lab) < {LPA_MAX_ROUNDS}
       ) t
     )
     SELECT {_KCORE_DECODE.format(c="node")} AS node,
@@ -5769,7 +5756,7 @@ def lpa2_fixed_point_communities(
 
     The hash match certifies the convergence machinery itself: Spark's
     control-plane loop (one changed-count aggregate per round,
-    per-round persist with eager release, max_rounds backstop) and
+    per-round persist with eager release, LPA_MAX_ROUNDS backstop) and
     the oracle's recursive-CTE replay (iter-tagged working table,
     recursion halts when a full round stops changing, identical cap
     guard) MUST agree on both the round count and every label.
@@ -5795,7 +5782,7 @@ def lpa2_fixed_point_communities(
     e = e0.unionAll(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    lab = lpa_semisync(e, max_rounds=_LPA2_CAP)
+    lab = lpa_semisync(e)
 
     decode = lambda col: F.when(  # noqa: E731
         F.col(col) % 2 == 0,

@@ -121,22 +121,10 @@ def test_every_name_outside_plans_has_a_non_test_caller():
 
 
 #: Options kept with one value among the non-test callers, each with
-#: its reason.
+#: its reason. A test that sets another value is no reason: an option
+#: whose other values only a test takes guards a path nothing ships.
 ALLOWED_OPTIONS = {
-    # a test runs each at another value to check behaviour the shipped
-    # code has: a fixed round count, convergence within a cap, and
-    # both sides of the label broadcast gate
-    "lpa_propagate(rounds)": "tests unroll 4 and 7 rounds and the fixed point",
-    "lpa_propagate(max_rounds)": "a test caps a 2-cycle at 4 rounds",
-    "lpa_propagate(broadcast_labels)": "tests force both join paths",
-    "lpa_semisync(max_rounds)": "tests converge random graphs under 30",
-    "lpa_semisync(broadcast_labels)": "tests force both join paths",
-    "ngram_jaccard_pairs(threshold)": "a test finds pairs below 0.5",
-    "simhash_band_pairs(max_hamming)": "a test widens the Hamming bound",
-    "ivf_topk(k)": "a test checks recall at k=20",
-    "salted_join(n_salts)": "a test salts with another count",
-    "salted_join(how)": "tests check the left and anti joins",
-    "asof_join(value_cols)": "tests carry every right column (None)",
+    # an input check: the shipped callers trust their sources
     "merge_upsert(assert_unique_source)": "a test rejects duplicate keys",
     # the DAG calls both through getattr, without ``at``
     "set_cet(at)": "the DAG stamps the current time",

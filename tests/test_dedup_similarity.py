@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from aqi_analysis_apache_airflow_spark.functions.dedup import (
+    JACCARD_THRESHOLD,
+    SIMHASH_MAX_HAMMING,
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -41,12 +43,10 @@ def docs(spark):
 def test_exact_jaccard_finds_planted_pairs(docs):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.3, allow_quadratic=True
-        ).collect()
+        for r in ngram_jaccard_pairs(docs, allow_quadratic=True).collect()
     }
     assert pairs[(1, 2)] == 1.0
-    assert 0.3 <= pairs[(1, 3)] < 1.0
+    assert JACCARD_THRESHOLD <= pairs[(1, 3)] < 1.0
     assert (1, 4) not in pairs
 
 
@@ -56,7 +56,7 @@ def test_uncapped_jaccard_requires_explicit_opt_in(docs):
     import pytest
 
     with pytest.raises(ValueError, match="quadratic"):
-        ngram_jaccard_pairs(docs, threshold=0.3)
+        ngram_jaccard_pairs(docs)
 
 
 def test_minhash_lsh_agrees_with_exact(docs):
@@ -89,11 +89,13 @@ def test_lsh_plan_construction_is_lazy(spark, docs):
 def test_simhash_bands(docs):
     got = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_band_pairs(docs, max_hamming=10).collect()
+        for r in simhash_band_pairs(docs).collect()
     }
     assert got[(1, 2)] == 0
-    assert 0 < got[(1, 3)] <= 10
+    # the near duplicate differs in 5 bits, past the bound
+    assert (1, 3) not in got
     assert (1, 4) not in got
+    assert max(got.values()) <= SIMHASH_MAX_HAMMING
 
 
 def test_embedding_topk_and_lsh(spark):
@@ -141,15 +143,13 @@ def test_ivf_topk_recall(spark):
     corpus = emb.filter(F.col("vec_id") != 0)
 
     from aqi_analysis_apache_airflow_spark.functions.similarity import (
+        IVF_K,
         brute_force_topk,
         ivf_topk,
     )
 
-    exact = {r["vec_id"] for r in brute_force_topk(corpus, q, k=20).collect()}
-    approx = {
-        r["vec_id"]
-        for r in ivf_topk(corpus, q, k=20).collect()
-    }
+    exact = {r["vec_id"] for r in brute_force_topk(corpus, q, k=IVF_K).collect()}
+    approx = {r["vec_id"] for r in ivf_topk(corpus, q).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, f"recall {recall}"
 
@@ -225,9 +225,7 @@ def test_cluster_split_no_leakage(spark):
     assert split.count() == docs.count()
     assert split.select("doc_id").distinct().count() == docs.count()
 
-    pairs = ngram_jaccard_pairs(
-        docs, threshold=0.5, max_doc_freq=None, allow_quadratic=True
-    )
+    pairs = ngram_jaccard_pairs(docs, max_doc_freq=None, allow_quadratic=True)
     a = split.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
     )

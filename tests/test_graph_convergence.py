@@ -1,18 +1,22 @@
-"""Convergence-mode twins for the unrolled graph registry queries
-(verdict r7 task 6): ``lpa_propagate`` / ``kcore_peel`` with
-``rounds=None`` iterate the IDENTICAL synchronous recurrence the
-unrolled lpa1/kcore1 registry plans replay for oracle parity, stopping
-at the fixed point via d6's control-plane convergence scalar. These
-fixtures prove the contract: once the recurrence converges, the fixed
-point equals any sufficiently long unrolled run — and where the
-registry's bounded unrolling has NOT converged, the fixed point keeps
-going and lands on the exact published result (the true k-core)."""
+"""Convergence twins for the unrolled graph registry queries
+(verdict r7 task 6): ``kcore_peel`` with ``rounds=None`` iterates the
+IDENTICAL recurrence the unrolled kcore1 registry plan replays for
+oracle parity, stopping at the fixed point via d6's control-plane
+convergence scalar. These fixtures prove the contract: once the
+recurrence converges, the fixed point equals any sufficiently long
+unrolled run — and where the registry's bounded unrolling has NOT
+converged, the fixed point keeps going and lands on the exact
+published result (the true k-core). Synchronous LPA has no fixed-point
+mode (it 2-cycles on bipartite graphs): ``lpa_propagate`` replays
+lpa1's ``LPA_ROUNDS`` rounds, and ``lpa_semisync`` is lpa2's
+convergent schedule."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from aqi_analysis_apache_airflow_spark.functions.graph import (
+    LPA_MAX_ROUNDS,
     kcore_peel,
     lpa_propagate,
 )
@@ -37,31 +41,36 @@ def _edges(df):
 # --------------------------------------------------------------------------
 
 
+def _sync_round(pairs, lab):
+    """One synchronous LPA round replayed in Python: every node takes
+    its neighbours' most frequent label, ties to the smallest."""
+    adj: dict[int, list[int]] = {}
+    for u, v in pairs:
+        adj.setdefault(u, []).append(v)
+        adj.setdefault(v, []).append(u)
+    out = {}
+    for n, nbrs in adj.items():
+        cnt: dict[int, int] = {}
+        for m in nbrs:
+            cnt[lab[m]] = cnt.get(lab[m], 0) + 1
+        out[n] = min(cnt, key=lambda l: (-cnt[l], l))
+    return out
+
+
 def test_lpa_fixed_point_matches_unrolled_once_converged(spark):
     # triangle {1,2,3}: r1 -> {1:2, 2:1, 3:1}, r2 -> {1:1, 2:1, 3:1},
-    # r3 -> no change. Fixed point == unrolled-3 == unrolled-7.
-    e = _doubled(spark, [(1, 2), (2, 3), (1, 3)])
-    fixed = _lab(lpa_propagate(e, rounds=None))
-    assert fixed == _lab(lpa_propagate(e, rounds=3))
-    assert fixed == _lab(lpa_propagate(e, rounds=7))
-    assert fixed == {1: 1, 2: 1, 3: 1}
+    # r3 -> no change. The LPA_ROUNDS unrolled rounds reach the fixed
+    # point: one more hand-replayed round leaves the labels unchanged.
+    pairs = [(1, 2), (2, 3), (1, 3)]
+    got = _lab(lpa_propagate(_doubled(spark, pairs)))
+    assert got == {1: 1, 2: 1, 3: 1}
+    assert _sync_round(pairs, got) == got
 
 
 def test_lpa_two_components_converge_to_two_labels(spark):
     # two disjoint triangles -> each floods to its own min label
     e = _doubled(spark, [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)])
-    fixed = _lab(lpa_propagate(e, rounds=None))
-    assert fixed == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
-
-
-def test_lpa_bipartite_oscillation_respects_round_cap(spark):
-    # single edge {1,2}: synchronous LPA 2-cycles (1<->2 swap labels
-    # forever) — the documented bipartite oscillation. The cap must
-    # terminate the loop; with an EVEN cap the swap count is even and
-    # the result equals the unrolled-even run.
-    e = _doubled(spark, [(1, 2)])
-    capped = _lab(lpa_propagate(e, rounds=None, max_rounds=4))
-    assert capped == _lab(lpa_propagate(e, rounds=4))
+    assert _lab(lpa_propagate(e)) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10}
 
 
 # --------------------------------------------------------------------------
@@ -210,12 +219,13 @@ def test_lpa_semisync_two_components(spark):
     assert set(fixed) == {2, 3, 4, 5, 10, 11, 12}
 
 
-def test_lpa_semisync_random_bipartite_property(spark):
+def test_lpa_semisync_random_bipartite_property(spark, caplog):
     """Property sweep (bounded hypothesis-style, seeded): on random
     small bipartite graphs the colored schedule must (1) terminate
-    within the cap and (2) return a labeling that is a FIXED POINT of
-    one more hand-replayed full round — the Cordasco-Gargano
+    within LPA_MAX_ROUNDS and (2) return a labeling that is a FIXED
+    POINT of one more hand-replayed full round — the Cordasco-Gargano
     guarantee the lpa2 oracle certifies on the big fixture."""
+    import logging
     import random
 
     from aqi_analysis_apache_airflow_spark.functions.graph import lpa_semisync
@@ -233,7 +243,9 @@ def test_lpa_semisync_random_bipartite_property(spark):
             }
         )
         e = _doubled(spark, pairs)
-        fixed = _lab(lpa_semisync(e, max_rounds=30))
+        with caplog.at_level(logging.WARNING):
+            fixed = _lab(lpa_semisync(e))
+        assert f"{LPA_MAX_ROUNDS} rounds exhausted" not in caplog.text, pairs
 
         adj: dict[int, list[int]] = {}
         for u, v in pairs:
@@ -265,55 +277,6 @@ def test_lpa_semisync_label_partitions_stay_bounded(spark):
     from aqi_analysis_apache_airflow_spark.functions.graph import lpa_semisync
 
     pairs = [(2, 3), (2, 5), (4, 3), (4, 5), (6, 7), (8, 7), (6, 9)]
-    lab = lpa_semisync(_doubled(spark, pairs), max_rounds=30)
+    lab = lpa_semisync(_doubled(spark, pairs))
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert lab.rdd.getNumPartitions() <= n_part, lab.rdd.getNumPartitions()
-
-
-# --------------------------------------------------------------------------
-# broadcast-label size gate (verdict r10 task 3)
-# --------------------------------------------------------------------------
-
-
-def test_lpa_broadcast_and_shuffle_paths_identical(spark):
-    """The size-gated label join (functions/graph.py::
-    BROADCAST_LABEL_MAX_NODES): broadcast-hinted and plain
-    co-partitioned shuffle-join rounds must produce IDENTICAL labels
-    in every mode — the gate may only change the physical join
-    strategy, never the recurrence."""
-    pairs = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)]
-    e = _doubled(spark, pairs)
-    for rounds in (3, None):
-        bc = _lab(lpa_propagate(e, rounds=rounds, broadcast_labels=True))
-        sh = _lab(lpa_propagate(e, rounds=rounds, broadcast_labels=False))
-        auto = _lab(lpa_propagate(e, rounds=rounds))
-        assert bc == sh == auto, (rounds, bc, sh, auto)
-
-
-def test_lpa_semisync_broadcast_and_shuffle_paths_identical(spark):
-    from aqi_analysis_apache_airflow_spark.functions.graph import lpa_semisync
-
-    pairs = [(2, 3), (2, 5), (4, 3), (4, 5), (6, 7), (8, 7), (6, 9)]
-    e = _doubled(spark, pairs)
-    bc = _lab(lpa_semisync(e, broadcast_labels=True))
-    sh = _lab(lpa_semisync(e, broadcast_labels=False))
-    auto = _lab(lpa_semisync(e))
-    assert bc == sh == auto, (bc, sh, auto)
-
-
-def test_label_side_gate_respects_threshold(spark):
-    """The auto gate resolves against BROADCAST_LABEL_MAX_NODES: a
-    monkeypatched threshold of 0 must route the same call through the
-    shuffle path and still converge to the identical labeling."""
-    import aqi_analysis_apache_airflow_spark.functions.graph as g
-
-    pairs = [(1, 2), (2, 3), (1, 3)]
-    e = _doubled(spark, pairs)
-    want = _lab(lpa_propagate(e, rounds=None, broadcast_labels=True))
-    orig = g.BROADCAST_LABEL_MAX_NODES
-    try:
-        g.BROADCAST_LABEL_MAX_NODES = 0  # force the shuffle path via auto
-        got = _lab(g.lpa_propagate(e, rounds=None))
-    finally:
-        g.BROADCAST_LABEL_MAX_NODES = orig
-    assert got == want

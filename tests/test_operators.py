@@ -145,7 +145,7 @@ def test_asof_join_semantics(spark):
     got = {
         (r["k"], r["tag"]): r["price"]
         for r in asof_join(
-            left, right, keys=["k"], left_ts="ts", right_ts="rts"
+            left, right, keys=["k"], left_ts="ts", right_ts="rts", value_cols=["price"]
         ).collect()
     }
     assert got[("u1", "a")] == 1.0   # tie: right row at same ts IS visible
@@ -235,7 +235,9 @@ def test_asof_join_name_collision_raises(spark):
     left = spark.createDataFrame([("k", 1, 9.0)], "k string, ts int, price double")
     right = spark.createDataFrame([("k", 1, 5.0)], "k string, rts int, price double")
     with pytest.raises(ValueError, match="collide"):
-        asof_join(left, right, keys=["k"], left_ts="ts", right_ts="rts")
+        asof_join(
+            left, right, keys=["k"], left_ts="ts", right_ts="rts", value_cols=["price"]
+        )
     # explicit rename resolves it
     ok = asof_join(
         left,
@@ -243,6 +245,7 @@ def test_asof_join_name_collision_raises(spark):
         keys=["k"],
         left_ts="ts",
         right_ts="rts",
+        value_cols=["r_price"],
     )
     assert ok.columns.count("price") == 1 and "r_price" in ok.columns
 
@@ -322,8 +325,8 @@ def test_asof_cogrouped_equals_union_tag(spark):
         .select("user_id", F.col("ts").alias("rts"), F.col("value").alias("price"))
         .dropDuplicates(["user_id", "rts"])
     )
-    a = asof_join(left, right, ["user_id"], "ts", "rts")
-    b = asof_join_cogrouped(left, right, ["user_id"], "ts", "rts")
+    a = asof_join(left, right, ["user_id"], "ts", "rts", ["price"])
+    b = asof_join_cogrouped(left, right, ["user_id"], "ts", "rts", ["price"])
     canon = lambda df: sorted(
         tuple(map(str, r))
         for r in df.select("user_id", "ts", "event_id", "price").collect()

@@ -451,7 +451,7 @@ def test_cluster_ops_use_capped_pair_graph(spark, name):
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    pair_df = ngram_jaccard_pairs(docs, threshold=0.5, max_doc_freq=20)
+    pair_df = ngram_jaccard_pairs(docs, max_doc_freq=20)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         pair_df.explain("formatted")

@@ -91,20 +91,30 @@ BUILD_JOBS = {
 }
 
 
+def _session_state(spark):
+    """The session conf and temp-view names a query could leave behind."""
+    views = sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+    return spark.conf.getAll, views
+
+
 def test_no_duplicate_output_columns(spark):
     """The driver sorts columns by name before hashing values — a
     duplicate column name would silently corrupt the comparison.
 
     Building a plan starts no Spark job unless the query is listed in
     ``BUILD_JOBS``: a corpus read that infers its schema would start
-    one per table, every time the query is built."""
+    one per table, every time the query is built. Nor does it change
+    the caller's session: its conf and temp views read the same after
+    every build."""
     sf = "/root/testdata/sf0.001"
     started = {}
+    before = _session_state(spark)
     for name, q in sorted(REGISTRY.items()):
         with jobs_started(spark.sparkContext) as ids:
             cols = q.fn(spark, sf).columns
         assert len(cols) == len(set(cols)), f"{name}: duplicate columns {cols}"
         started[name] = len(ids)
+        assert _session_state(spark) == before, f"{name} changed the session"
     unlisted = {n: k for n, k in started.items() if k and n not in BUILD_JOBS}
     assert not unlisted, f"jobs started while building: {unlisted}"
     stale = sorted(n for n in BUILD_JOBS if not started[n])

@@ -9,7 +9,11 @@ Expression ids (``#12``), plan ids (``plan_id=3``), RDD ids
 common-subexpression aliases (``_common_expr_3``) are session counters
 that differ between two runs of one commit, so they are written as
 fixed tokens: two captures of the same code compare equal under a
-plain ``diff -r``.
+plain ``diff -r``. So is the call site that a scanned RDD's name
+records (``RDD[7] at localCheckpoint at NativeMethodAccessorImpl.java:0``):
+for a checkpointed RDD it reads a JVM frame or ``<unknown>:0``
+depending on which queries the JVM ran before, so a query captured
+alone would otherwise differ from the same query in a full capture.
 
 The session's cache is cleared before each query is built, as
 ``bench.py`` does: registry queries persist intermediates and leave
@@ -37,6 +41,13 @@ if _HERE not in sys.path:
 _COUNTER = re.compile(r"(#|plan_id=|RDD\[|_common_expr_)\d+")
 #: The counter a lambda variable's name ends in (``lambda x_370#12``).
 _LAMBDA = re.compile(r"(lambda \w+?_)\d+(?=#)")
+#: The call site of an RDD named in a scan (``RDD[N] at op at F.java:0``).
+_CALL_SITE = re.compile(r"(RDD\[N\] at \w+ at )\S+:\d+")
+
+
+def _normalize(txt: str) -> str:
+    """Plan text with its session counters and RDD call sites fixed."""
+    return _CALL_SITE.sub(r"\1<site>", _COUNTER.sub(r"\1N", _LAMBDA.sub(r"\1N", txt)))
 
 
 def main() -> None:
@@ -62,7 +73,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — capture the failure text
             txt = f"EXPLAIN FAILED: {e}\n"
         with open(os.path.join(outdir, f"{name}.txt"), "w") as fh:
-            fh.write(_COUNTER.sub(r"\1N", _LAMBDA.sub(r"\1N", txt)))
+            fh.write(_normalize(txt))
     spark.stop()
     print(f"captured {len(names)} plans -> {outdir}")
 
