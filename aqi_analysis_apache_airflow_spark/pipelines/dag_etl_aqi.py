@@ -13,10 +13,11 @@ groups and dependency chain:
                                     → process_counties_file → set_lset
     >> stage_to_nds: states → counties → measurements
 
-The graph lives in the declarative :data:`TOPOLOGY` /
-:func:`edges` below so it is testable WITHOUT a scheduler (Airflow is
-not installed in this image; the DAG block degrades to a no-op and the
-topology test asserts :func:`edges` against the reference graph).
+The graph lives in the declarative :data:`TOPOLOGY` below so it is
+testable WITHOUT a scheduler (Airflow is not installed in this image;
+the DAG block degrades to a no-op and the topology test expands
+:data:`TOPOLOGY` into edges and checks them against the reference
+graph).
 """
 
 from __future__ import annotations
@@ -60,35 +61,6 @@ TOPOLOGY: dict[str, dict[str, list[str]] | list[str]] = {
     ],
 }
 GROUP_ORDER = ["source_to_stage", "stage_to_nds"]
-
-
-def _chains() -> list[list[str]]:
-    out = []
-    for group in GROUP_ORDER:
-        body = TOPOLOGY[group]
-        if isinstance(body, dict):
-            out.extend(body.values())
-        else:
-            out.append(body)
-    return out
-
-
-def edges() -> set[tuple[str, str]]:
-    """The task graph as (upstream, downstream) pairs: every within-
-    chain edge, plus the group-sequencing edges (each terminal task of
-    ``source_to_stage``'s sub-chains feeds every root task of
-    ``stage_to_nds`` — exactly what Airflow's ``group >> group``
-    expands to)."""
-    es: set[tuple[str, str]] = set()
-    for chain in _chains():
-        es.update(zip(chain, chain[1:]))
-    stage = TOPOLOGY["source_to_stage"]
-    assert isinstance(stage, dict)
-    nds = TOPOLOGY["stage_to_nds"]
-    assert isinstance(nds, list)
-    for chain in stage.values():
-        es.add((chain[-1], nds[0]))
-    return es
 
 
 def _wh():

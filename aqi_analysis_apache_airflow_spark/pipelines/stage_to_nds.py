@@ -278,11 +278,3 @@ def upsert_measurements(wh: Warehouse, now: datetime | None = None) -> None:
         update_cols=["aqi_value", "aqi_category"],
         set_on_match={"last_updated": now},
     )
-
-
-def run_stage_to_nds(wh: Warehouse, now: datetime | None = None) -> None:
-    """The stage_to_nds task chain (``dags/etl/main.py:68-84``):
-    states → counties (+ dp1 + dp2) → measurements."""
-    upsert_states(wh, now)
-    upsert_counties(wh, now)
-    upsert_measurements(wh, now)

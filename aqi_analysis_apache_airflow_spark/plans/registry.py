@@ -21,9 +21,11 @@ value-hash comparison is exact, not approximate:
 from __future__ import annotations
 
 import re
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -55,6 +57,14 @@ def materialized(sql: str) -> str:
     mmr1 oracle needed ~4 GB at sf0.001 that way, and ~130 MB
     materialized, with the same rows."""
     return re.sub(r"\b(\w+) AS \(", r"\1 AS MATERIALIZED (", sql)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory for the files one query call writes, in
+    the driver's Spark temp directory under ``spark.local.dir``: Spark
+    deletes it when the context stops, so the files live exactly as
+    long as the frames that read them can run."""
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -39,7 +39,7 @@ from pyspark.sql.window import Window
 
 from ..functions.dedup import CE_HASH64_SQL, ce_hash64, tokens
 from ..functions.spread import spread_if_narrow
-from .registry import load, load_spread, query
+from .registry import load, load_spread, query, scratch_dir
 
 # --------------------------------------------------------------------------
 # ret1 — BM25 ranked retrieval
@@ -460,7 +460,10 @@ def fmt1_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips losslessly: the content hash covers ids + full text +
     categorical columns, and the CSV value sum proves doubles survive
     the text encoding bit-exactly (Spark writes shortest-round-trip
-    decimal strings).
+    decimal strings). The three copies go to a new
+    :func:`.registry.scratch_dir` per call, so a second call never
+    deletes files an earlier call's frame still reads, and they last
+    as long as the Spark session.
 
     Scale shape: writes are partitioned (whatever parallelism the
     upstream had), reads are splittable scans; the audits are 1-row
@@ -472,24 +475,20 @@ def fmt1_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 == 0)
 
-    base = os.path.join(
-        "/tmp/spark_graft_fmt", os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = scratch_dir("fmt1_")
     orc_path = os.path.join(base, "documents_orc")
     json_path = os.path.join(base, "documents_json")
     csv_path = os.path.join(base, "lineitem_csv")
 
-    docs.write.mode("overwrite").orc(orc_path)
-    docs.write.mode("overwrite").json(json_path)
+    docs.write.orc(orc_path)
+    docs.write.json(json_path)
     li_cols = [
         "l_orderkey",
         "l_linenumber",
         "l_quantity",
         "l_extendedprice",
     ]
-    li.select(*li_cols).write.mode("overwrite").option("header", True).csv(
-        csv_path
-    )
+    li.select(*li_cols).write.option("header", True).csv(csv_path)
 
     doc_schema = (
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -793,7 +792,8 @@ def sch1_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns. The audit groups by column presence and checksums both
     cohorts; the oracle replays the split from the original table, so
     equality proves no row was dropped, duplicated, or mis-defaulted
-    by the merge.
+    by the merge. Both batches go to a new :func:`.registry.scratch_dir`
+    per call and last as long as the Spark session.
 
     Scale shape: ``mergeSchema`` reconciles footers only (no data
     read) — at 100 TB you pin the merged schema from the catalog
@@ -801,17 +801,15 @@ def sch1_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read path this op proves is identical. The audit itself is one
     map-side-combined groupBy over a two-column projection."""
     orders = load(spark, sf_dir, "orders")
-    base = os.path.join(
-        "/tmp/spark_graft_schema_ev", os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = scratch_dir("sch1_")
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     v2 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    v1.write.mode("overwrite").parquet(os.path.join(base, "batch=1"))
-    v2.write.mode("overwrite").parquet(os.path.join(base, "batch=2"))
+    v1.write.parquet(os.path.join(base, "batch=1"))
+    v2.write.parquet(os.path.join(base, "batch=2"))
 
     merged = spark.read.option("mergeSchema", True).parquet(
         os.path.join(base, "batch=1"), os.path.join(base, "batch=2")

@@ -14,9 +14,10 @@ Determinism notes (why these can hash-match a batch oracle):
   sink: WHICH duplicate row survives is first-arrival
   (partition-order) nondeterministic, but the keys themselves are not.
 - Streaming event time must be TIMESTAMP (watermarks reject NTZ), so
-  each query pins the session time zone to UTC for its call
-  (``_utc_query``) and casts results back to NTZ to line up with the
-  batch loader / DuckDB wall times.
+  the stream reader turns each NTZ ``ts`` into the instant whose UTC
+  wall time it is, and :func:`...streaming.ops.wall_time` turns results
+  back into NTZ wall times: the batch loader's and DuckDB's values
+  under any session time zone, with no session conf set for it.
 
 At 100 TB these same plans run unbounded (Kafka source, real
 watermarks); the bounded replay here is the correctness harness,
@@ -25,33 +26,14 @@ mirroring `tests/test_streaming.py`'s batch-twin strategy.
 
 from __future__ import annotations
 
-import functools
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.ops import session_conf
-from .registry import QueryFn, query
-
-def _utc_query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
-    """``@query`` that runs the function under a UTC session time zone
-    and hands the caller's zone back afterwards. The returned frame
-    keeps UTC semantics: Spark binds the zone into its casts when the
-    frame is analyzed, which happens inside the call."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        @functools.wraps(fn)
-        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-            with session_conf(spark, "spark.sql.session.timeZone", "UTC"):
-                return fn(spark, sf_dir)
-
-        return query(name, oracle)(pinned)
-
-    return deco
+from ..streaming.ops import session_conf, wall_time
+from .registry import query
 
 
-@_utc_query(
+@query(
     "st1_stream_dedup",
     oracle="SELECT DISTINCT user_id, event_type FROM events",
 )
@@ -73,7 +55,7 @@ def st1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "event_type")
 
 
-@_utc_query(
+@query(
     "st2_stream_windowed",
     oracle="""
     WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events)
@@ -98,15 +80,15 @@ def st2_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = windowed_counts(stream)
     out = run_to_memory(wc, "st2_stream_windowed_sink", mode="complete")
     return out.select(
-        F.col("window_start").cast("timestamp_ntz").alias("window_start"),
-        F.col("window_end").cast("timestamp_ntz").alias("window_end"),
+        wall_time("window_start").alias("window_start"),
+        wall_time("window_end").alias("window_end"),
         "event_type",
         "n_events",
         "total_value",
     )
 
 
-@_utc_query(
+@query(
     "st3_stream_stream_join",
     oracle="""
     WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
@@ -141,13 +123,13 @@ def st3_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "user_id",
         "view_id",
-        F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
+        wall_time("view_ts").alias("view_ts"),
         "click_id",
-        F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
+        wall_time("click_ts").alias("click_ts"),
     )
 
 
-@_utc_query(
+@query(
     "st4_stream_session_window",
     oracle="""
     WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id, value FROM events),
@@ -201,15 +183,15 @@ def st4_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_to_memory(sessions, "st4_session_sink", mode="complete")
     return out.select(
-        F.col("session_window.start").cast("timestamp_ntz").alias("session_start"),
-        F.col("session_window.end").cast("timestamp_ntz").alias("session_end"),
+        wall_time("session_window.start").alias("session_start"),
+        wall_time("session_window.end").alias("session_end"),
         "user_id",
         "n_events",
         "total_value",
     )
 
 
-@_utc_query(
+@query(
     "st5_stream_static_join",
     oracle="""
     SELECT event_id, user_id, c_mktsegment
@@ -241,7 +223,7 @@ def st5_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@_utc_query(
+@query(
     "st6_stream_merge_upsert",
     oracle="""
     WITH ev AS (
@@ -299,7 +281,7 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("__rn") == 1)
             .select(
                 "user_id",
-                F.col("ts").cast("timestamp_ntz").alias("last_ts"),
+                wall_time("ts").alias("last_ts"),
                 F.col("event_type").alias("last_event_type"),
                 F.col("value").alias("last_value"),
             )
@@ -315,7 +297,7 @@ def st6_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .select(
             "user_id",
-            F.col("ts").cast("timestamp_ntz").alias("last_ts"),
+            F.col("ts").alias("last_ts"),
             F.col("event_type").alias("last_event_type"),
             F.col("value").alias("last_value"),
         )
@@ -368,7 +350,7 @@ def _ensure_protobuf(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(zip_path)
 
 
-@_utc_query(
+@query(
     "st7_stream_tws_user_stats",
     oracle="""
     SELECT user_id,
@@ -492,7 +474,7 @@ def st7_stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_utc_query(
+@query(
     "st8_stream_outer_join",
     oracle="""
     WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
@@ -556,17 +538,18 @@ def st8_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        out.crossJoin(F.broadcast(wm))
+        out.select(
+            "user_id",
+            "view_id",
+            wall_time("view_ts").alias("view_ts"),
+            "click_id",
+            wall_time("click_ts").alias("click_ts"),
+        )
+        .crossJoin(F.broadcast(wm))
         .filter(
             F.col("view_ts") + F.expr("INTERVAL 30 MINUTE")
             + F.expr("INTERVAL 1 SECOND")
             < F.col("wm")
         )
-        .select(
-            "user_id",
-            "view_id",
-            F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
-            "click_id",
-            F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
-        )
+        .drop("wm")
     )

@@ -51,7 +51,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # the generated-class cache defaults to 100 entries; a
-        # 263-query registry run compiles far more distinct stages
+        # 371-query registry run compiles far more distinct stages
         # than that, so every bench pass recompiles almost every
         # stage (shared-JVM pressure, measured in BENCH_PRESSURE.json)
         .config("spark.sql.codegen.cache.maxEntries", "5000")

@@ -25,7 +25,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -37,6 +37,8 @@ WINDOW = "1 hour"
 WATERMARK = "2 hours"
 #: How long after a view a click is still attributed to it.
 ATTRIBUTION_WITHIN = "30 minutes"
+#: The epoch as a wall time: a stream instant's micros count from it.
+_EPOCH = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
 
 
 def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
@@ -51,9 +53,9 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
     actually found, exactly like the batch loader. A remote or
     unreadable footer falls back to a batch schema scan of the same
     file; no session conf is set, so a remote nanos file raises
-    [PARQUET_TYPE_ILLEGAL]. The stream's TIMESTAMP wall times equal the
-    batch loader's NTZ values under a UTC session zone, which every st*
-    query pins for its call."""
+    [PARQUET_TYPE_ILLEGAL]. Either way ``ts`` becomes the instant whose
+    UTC wall time is the stored value, computed without the session
+    zone; :func:`wall_time` turns it back."""
     path = f"{path_dir}/events.parquet"
     schema = footer_schema(path) or spark.read.parquet(path).schema
     raw = (
@@ -62,9 +64,28 @@ def read_events_stream(spark: SparkSession, path_dir: str) -> DataFrame:
         .parquet(path_dir)
     )
     # TIMESTAMP (not NTZ): EventTimeWatermark only accepts TIMESTAMP.
-    if isinstance(schema["ts"].dataType, T.LongType):  # raw nanos
+    ts = schema["ts"].dataType
+    if isinstance(ts, T.LongType):  # raw nanos
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    if isinstance(ts, T.TimestampNTZType):
+        # built from the wall-time fields in UTC: a cast, or timestampdiff,
+        # would go through the session zone, and shift a wall time that
+        # falls in one of its daylight-saving gaps
+        return raw.withColumn(
+            "ts",
+            F.expr(
+                "make_timestamp_ltz(year(ts), month(ts), day(ts), hour(ts), "
+                "minute(ts), extract(SECOND FROM ts), 'UTC')"
+            ),
+        )
+    return raw  # INT96: a TIMESTAMP already
+
+
+def wall_time(col: Column | str) -> Column:
+    """The TIMESTAMP_NTZ wall time of a stream instant: the inverse of
+    :func:`read_events_stream`'s conversion, so results line up with
+    the batch loader and DuckDB under any session zone."""
+    return F.timestamp_add("MICROSECOND", F.unix_micros(col), F.expr(_EPOCH))
 
 
 def windowed_counts(events: DataFrame) -> DataFrame:

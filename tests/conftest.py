@@ -65,3 +65,14 @@ def session_time_zone(spark, zone):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, before)
+
+
+def run_stage_to_nds(wh, now):
+    """The stage_to_nds task chain (``dags/etl/main.py:68-84``), as the
+    DAG runs it: states, then counties (with dp1 and dp2), then
+    measurements."""
+    from aqi_analysis_apache_airflow_spark.pipelines import stage_to_nds as s2n
+
+    s2n.upsert_states(wh, now)
+    s2n.upsert_counties(wh, now)
+    s2n.upsert_measurements(wh, now)

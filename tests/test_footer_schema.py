@@ -19,6 +19,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aqi_analysis_apache_airflow_spark.sources.readers import footer_schema, load_table
+from aqi_analysis_apache_airflow_spark.streaming.ops import (
+    read_events_stream,
+    run_to_memory,
+    wall_time,
+)
 from tests.test_adversarial_corpus import adversarial_dir  # noqa: F401
 from tests.test_adversarial_embeddings import adversarial_emb_dir  # noqa: F401
 from tests.test_adversarial_events import adversarial_ev_dir  # noqa: F401
@@ -105,6 +110,14 @@ def test_int96_reads_as_timestamp(spark, tmp_path):
         wall = F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS")
         got = sorted(r[0] for r in df.select(wall).collect())
     assert got == _WALL
+    # the stream keeps the instants and wall_time reads their UTC wall
+    # times, whatever the session zone
+    with session_time_zone(spark, "Asia/Kolkata"):
+        stream = read_events_stream(spark, str(tmp_path)).select(
+            F.date_format(wall_time("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
+        )
+        out = run_to_memory(stream, "int96_stream", mode="append")
+        assert sorted(r[0] for r in out.collect()) == _WALL
 
 
 def test_nanos_maps_to_long_without_conf(tmp_path):

@@ -28,6 +28,7 @@ _ROWS = [
     (1, "2024-01-01 10:00:00.000001", 500),  # sub-us precision truncates
     (2, "2024-01-01 10:00:00.999999", 999),
     (3, "2024-06-15 23:59:59.123456", 0),
+    (4, "2024-03-10 02:30:00.000001", 0),  # in New York's spring-forward gap
 ]
 
 
@@ -42,10 +43,10 @@ def nanos_dir(tmp_path_factory):
         {
             "event_id": pa.array([r[0] for r in _ROWS], pa.int64()),
             "ts": pa.array(ts, pa.timestamp("ns")),
-            "user_id": pa.array([7, 7, 8], pa.int64()),
-            "event_type": pa.array(["click", "view", "buy"]),
-            "value": pa.array([1.0, 2.0, 3.0], pa.float64()),
-            "props": pa.array(['{"k": 1}', None, "{}"]),
+            "user_id": pa.array([7, 7, 8, 8], pa.int64()),
+            "event_type": pa.array(["click", "view", "buy", "view"]),
+            "value": pa.array([1.0, 2.0, 3.0, 4.0], pa.float64()),
+            "props": pa.array(['{"k": 1}', None, "{}", None]),
         }
     )
     # version 2.6 + no coercion stores the physical TIMESTAMP(NANOS)
@@ -53,6 +54,18 @@ def nanos_dir(tmp_path_factory):
     pq.write_table(
         table, os.path.join(d, "events.parquet"),
         coerce_timestamps=None, version="2.6",
+    )
+    return str(d)
+
+
+@pytest.fixture(scope="module")
+def micros_dir(tmp_path_factory, nanos_dir):
+    """The same rows as the corpus stores them: microsecond NTZ."""
+    d = tmp_path_factory.mktemp("micros_ev")
+    table = pq.read_table(os.path.join(nanos_dir, "events.parquet"))
+    pq.write_table(
+        table, os.path.join(d, "events.parquet"),
+        coerce_timestamps="us", allow_truncated_timestamps=True,
     )
     return str(d)
 
@@ -75,23 +88,26 @@ def test_batch_loader_truncates_nanos_exactly(spark, nanos_dir, zone):
     assert got == want  # nanos remainder truncated, never rounded up
 
 
-def test_stream_reader_handles_nanos(spark, nanos_dir):
+def test_stream_reader_handles_nanos(spark, nanos_dir, micros_dir):
+    """The stream's wall times, nanos or micros file, are the file's,
+    whatever the session zone: also one that New York's clocks skip."""
     from aqi_analysis_apache_airflow_spark.streaming.ops import (
         read_events_stream,
         run_to_memory,
+        wall_time,
     )
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.unset(NANOS_CONF)
-    out = run_to_memory(
-        read_events_stream(spark, nanos_dir).select("event_id", "ts"),
-        "nanos_probe_sink",
-        mode="append",
-    )
-    got = {
-        r["event_id"]: r["ts"].replace(tzinfo=None).isoformat(sep=" ")
-        for r in out.collect()
-    }
     want = {eid: iso for eid, iso, _ in _ROWS}
-    assert got == want
+    for path in (nanos_dir, micros_dir):
+        for zone in ("UTC", "America/New_York"):
+            with session_time_zone(spark, zone):
+                events = read_events_stream(spark, path)
+                out = run_to_memory(
+                    events.select("event_id", wall_time("ts").alias("ts")),
+                    "nanos_probe_sink",
+                    mode="append",
+                )
+                got = {r["event_id"]: r["ts"].isoformat(sep=" ") for r in out.collect()}
+            assert got == want, (path, zone)
     assert spark.conf.get(NANOS_CONF, None) is None

@@ -22,7 +22,7 @@ import os
 from datetime import date, datetime
 
 import pytest
-from conftest import jobs_started
+from conftest import jobs_started, run_stage_to_nds
 
 from aqi_analysis_apache_airflow_spark.pipelines import stage_to_nds as s2n
 from aqi_analysis_apache_airflow_spark.pipelines.metadata import set_cet, set_lset
@@ -132,7 +132,7 @@ def load(wh: Warehouse, src: str, master, window) -> None:
     set_lset(wh, AQI_STAGE, lset)
     process_aqi_files(wh, os.path.join(src, "aqi"))
     process_counties_file(wh, os.path.join(src, "uscounties.csv"))
-    s2n.run_stage_to_nds(wh, now=now)
+    run_stage_to_nds(wh, now)
 
 
 def snapshot(wh: Warehouse) -> dict:
@@ -305,7 +305,7 @@ def test_transforms_produce_declared_stage_schemas(spark, src):
 
 def test_upserts_produce_declared_nds_schemas(captured):
     wh, frames = captured
-    s2n.run_stage_to_nds(wh, datetime(2023, 3, 2))
+    run_stage_to_nds(wh, datetime(2023, 3, 2))
     declared = {
         s2n.STATE_NDS: STATE_NDS_SCHEMA,
         s2n.COUNTY_NDS: COUNTY_NDS_SCHEMA,

@@ -13,6 +13,7 @@ import os
 from datetime import datetime
 
 import pytest
+from conftest import run_stage_to_nds
 from pyspark.sql import functions as F
 
 from aqi_analysis_apache_airflow_spark.pipelines.metadata import (
@@ -30,7 +31,6 @@ from aqi_analysis_apache_airflow_spark.pipelines.stage_to_nds import (
     COUNTY_NDS,
     MEASUREMENT_NDS,
     STATE_NDS,
-    run_stage_to_nds,
 )
 from aqi_analysis_apache_airflow_spark.pipelines.warehouse import Warehouse
 from aqi_analysis_apache_airflow_spark.schemas import (

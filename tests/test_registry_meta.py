@@ -50,7 +50,7 @@ def test_every_oracle_query_in_some_adversarial_suite():
 
 _LOOP = "iterates to convergence; each round runs jobs"
 _PIN = "pins an intermediate with a local checkpoint"
-_WRITE = "writes files that the returned plan reads"
+_WRITE = "writes files that the returned plan reads, in a per-call scratch_dir"
 
 #: Queries that start Spark jobs while their plan is built, and why.
 #: Every other query must build with none: corpus reads take their
@@ -82,12 +82,12 @@ BUILD_JOBS = {
     "ppmi1_sppmi_pairs": _PIN,
     "sch1_schema_evolution": _WRITE,
     "sil1_cluster_silhouette": _LOOP + " (the km1 fit)",
-    "sim_ivfd_topk": _WRITE + " (the on-disk IVF index)",
+    "sim_ivfd_topk": _WRITE + " (its IVF index, built on every call)",
     "snm1_sorted_neighborhood": "collects per-partition counts for the rank offsets",
     "snm2_blocking_recall": "collects per-partition counts for the rank offsets",
     "sp1_shortest_path": _LOOP + " (one round per hop)",
     "split2_cluster_split": _LOOP + " (connected components)",
-    "st6_stream_merge_upsert": _WRITE + " (the seeded warehouse table)",
+    "st6_stream_merge_upsert": "writes and collects its seeded warehouse table",
 }
 
 

@@ -74,18 +74,42 @@ def test_late_rows_accounted_not_silently_dropped(spark, events_stream):
     assert ops[0]["numRowsDroppedByWatermark"] == 0
 
 
-@pytest.mark.parametrize("zone", ["America/New_York", None])
-@pytest.mark.parametrize("name", ["st1_stream_dedup", "st2_stream_windowed"])
-def test_stream_query_restores_session_zone(spark, name, zone):
-    """An st* query pins UTC only for its own call: the caller's zone
-    (or its absence) is back afterwards, and the rows, collected after
-    that, equal a run on a UTC session."""
+#: Every registry query over a live stream.
+STREAM_QUERIES = sorted(n for n in REGISTRY if n.startswith("st"))
+#: name -> canonical rows of the query on the UTC test session.
+_UTC_ROWS: dict[str, list[tuple]] = {}
+
+
+@pytest.mark.parametrize("zone", ["America/New_York", "Asia/Kolkata", None])
+@pytest.mark.parametrize("name", STREAM_QUERIES)
+def test_stream_query_restores_session_zone(spark, monkeypatch, name, zone):
+    """An st* query neither sets nor unsets the session time zone, and
+    its rows, collected under the caller's zone (or none), equal a run
+    on a UTC session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    touched = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def spy_set(self, key, value):
+        touched.append(key)
+        return real_set(self, key, value)
+
+    def spy_unset(self, key):
+        touched.append(key)
+        return real_unset(self, key)
+
     q = REGISTRY[name].fn
-    want = _canon(q(spark, SF_DIR), ["*"])
+    if name not in _UTC_ROWS:
+        _UTC_ROWS[name] = _canon(q(spark, SF_DIR), ["*"])
     with session_time_zone(spark, zone):
-        got = _canon(q(spark, SF_DIR), ["*"])
-        assert spark.conf.get("spark.sql.session.timeZone", None) == zone
-    assert got == want
+        with monkeypatch.context() as m:
+            m.setattr(RuntimeConfig, "set", spy_set)
+            m.setattr(RuntimeConfig, "unset", spy_unset)
+            out = q(spark, SF_DIR)
+        got = _canon(out, ["*"])
+    assert "spark.sql.session.timeZone" not in touched
+    assert got == _UTC_ROWS[name]
 
 
 @pytest.mark.parametrize(

@@ -14,6 +14,9 @@ records (``RDD[7] at localCheckpoint at NativeMethodAccessorImpl.java:0``):
 for a checkpointed RDD it reads a JVM frame or ``<unknown>:0``
 depending on which queries the JVM ran before, so a query captured
 alone would otherwise differ from the same query in a full capture.
+And so is the per-call scratch directory that sim_ivfd, fmt1 and sch1
+write to and read back: its path holds the session's temp directory
+and random characters, and is written as ``<scratch>/<prefix>``.
 
 The session's cache is cleared before each query is built, as
 ``bench.py`` does: registry queries persist intermediates and leave
@@ -43,11 +46,17 @@ _COUNTER = re.compile(r"(#|plan_id=|RDD\[|_common_expr_)\d+")
 _LAMBDA = re.compile(r"(lambda \w+?_)\d+(?=#)")
 #: The call site of an RDD named in a scan (``RDD[N] at op at F.java:0``).
 _CALL_SITE = re.compile(r"(RDD\[N\] at \w+ at )\S+:\d+")
+#: A query's scratch directory (``plans/registry.scratch_dir``): the
+#: session's ``.../userFiles-<uuid>/`` plus the prefix and eight random
+#: characters of ``tempfile.mkdtemp``.
+_SCRATCH = re.compile(r"[^\s\[,]*/userFiles-[0-9a-f-]+/(\w*?)[a-z0-9_]{8}(?![a-z0-9_])")
 
 
 def _normalize(txt: str) -> str:
-    """Plan text with its session counters and RDD call sites fixed."""
-    return _CALL_SITE.sub(r"\1<site>", _COUNTER.sub(r"\1N", _LAMBDA.sub(r"\1N", txt)))
+    """Plan text with its session counters, RDD call sites and scratch
+    directories fixed."""
+    txt = _COUNTER.sub(r"\1N", _LAMBDA.sub(r"\1N", txt))
+    return _SCRATCH.sub(r"<scratch>/\1", _CALL_SITE.sub(r"\1<site>", txt))
 
 
 def main() -> None:
