@@ -67,7 +67,7 @@ def test_sim_ivfd_reads_the_current_embeddings(spark, tmp_path):
     sf = tmp_path / "corpus"
     shutil.copytree(SF_DIR, sf)
     q = REGISTRY["sim_ivfd_topk"].fn
-    for src in (SF_DIR, "/root/testdata/sf0.01"):
+    for src in (SF_DIR, os.path.join(os.path.dirname(SF_DIR), "sf0.01")):
         shutil.copyfile(f"{src}/embeddings.parquet", sf / "embeddings.parquet")
         got = [(v, round(c, 6)) for v, c in _rows(q(spark, str(sf)))]
         want = _oracle_rows("sim_ivfd_topk", "embeddings", str(sf))
