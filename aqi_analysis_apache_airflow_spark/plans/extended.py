@@ -2271,17 +2271,19 @@ def sim_ivfd_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     other 12 directories before a single file opens (plan-asserted in
     tests/test_plans.py). At 100 TB this is the difference between an
     ANN probe touching ~n_probe/n_centroids of the index bytes and
-    re-deriving the full assignment per query. Here each call builds
-    its index in a new :func:`.registry.scratch_dir`, which lasts as
-    long as the Spark session: an index kept across calls would have
-    to be keyed to the embeddings it was built from, and building it
-    per call needs no key."""
+    re-deriving the full assignment per query. The index is built once
+    per session and embeddings file, in a :func:`.registry.scratch_dir`
+    keyed to that file, so later calls measure the probe alone and a
+    changed file gets a new index."""
     from ..functions.similarity import brute_force_topk, cosine
 
     cents, assigned, qvec = _md5_ivf_parts(spark, sf_dir)
-    path = scratch_dir("sim_ivfd_")
-    assigned.write.partitionBy("cluster").parquet(f"{path}/assigned")
-    cents.write.parquet(f"{path}/centroids")
+
+    def build(path: str) -> None:
+        assigned.write.partitionBy("cluster").parquet(f"{path}/assigned")
+        cents.write.parquet(f"{path}/centroids")
+
+    path = scratch_dir("sim_ivfd_", sf_dir, ["embeddings"], build)
     probed = [
         r["centroid_id"]
         for r in (

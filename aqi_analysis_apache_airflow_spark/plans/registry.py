@@ -20,8 +20,12 @@ value-hash comparison is exact, not approximate:
 
 from __future__ import annotations
 
+import hashlib
+import os
 import re
+import shutil
 import tempfile
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -59,12 +63,42 @@ def materialized(sql: str) -> str:
     return re.sub(r"\b(\w+) AS \(", r"\1 AS MATERIALIZED (", sql)
 
 
-def scratch_dir(prefix: str) -> str:
-    """A new empty directory for the files one query call writes, in
-    the driver's Spark temp directory under ``spark.local.dir``: Spark
-    deletes it when the context stops, so the files live exactly as
-    long as the frames that read them can run."""
-    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
+def scratch_dir(
+    prefix: str, sf_dir: str, tables: list[str], write: Callable[[str], None]
+) -> str:
+    """The directory holding what ``write(path)`` writes from the
+    corpus ``tables`` in ``sf_dir``, in the driver's Spark temp
+    directory under ``spark.local.dir``: Spark deletes it when the
+    context stops, so the files live as long as the frames that read
+    them can run. Its name is keyed to each table file's absolute path,
+    size and mtime_ns, so a session writes one copy per input and a
+    changed input gets a new directory. ``write`` fills a temporary
+    directory that is then renamed, and a written directory is never
+    rewritten, so no call deletes files an earlier call's frame still
+    reads. A table with no local file cannot be keyed and is written
+    afresh on every call."""
+    stamps = []
+    for t in tables:
+        src = os.path.abspath(f"{sf_dir}/{t}.parquet")
+        files = [src] if os.path.isfile(src) else sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(src) for f in fs
+        )
+        stats = [os.stat(f) for f in files]
+        stamps.append([(f, st.st_size, st.st_mtime_ns) for f, st in zip(files, stats)])
+    key = repr(stamps) if all(stamps) else uuid.uuid4().hex
+    root = SparkFiles.getRootDirectory()
+    path = os.path.join(root, prefix + hashlib.sha1(key.encode()).hexdigest()[:16])
+    if not os.path.isdir(path):
+        tmp = tempfile.mkdtemp(prefix=f"tmp_{prefix}", dir=root)
+        try:
+            write(tmp)
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.isdir(path):  # not a lost race with another call
+                raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

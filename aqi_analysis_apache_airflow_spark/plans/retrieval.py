@@ -460,10 +460,9 @@ def fmt1_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips losslessly: the content hash covers ids + full text +
     categorical columns, and the CSV value sum proves doubles survive
     the text encoding bit-exactly (Spark writes shortest-round-trip
-    decimal strings). The three copies go to a new
-    :func:`.registry.scratch_dir` per call, so a second call never
-    deletes files an earlier call's frame still reads, and they last
-    as long as the Spark session.
+    decimal strings). The three copies are written once per session
+    and input, to a :func:`.registry.scratch_dir` keyed to the two
+    source files, and last as long as the Spark session.
 
     Scale shape: writes are partitioned (whatever parallelism the
     upstream had), reads are splittable scans; the audits are 1-row
@@ -475,20 +474,24 @@ def fmt1_multiformat_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 == 0)
 
-    base = scratch_dir("fmt1_")
-    orc_path = os.path.join(base, "documents_orc")
-    json_path = os.path.join(base, "documents_json")
-    csv_path = os.path.join(base, "lineitem_csv")
-
-    docs.write.orc(orc_path)
-    docs.write.json(json_path)
     li_cols = [
         "l_orderkey",
         "l_linenumber",
         "l_quantity",
         "l_extendedprice",
     ]
-    li.select(*li_cols).write.option("header", True).csv(csv_path)
+
+    def write(base: str) -> None:
+        docs.write.orc(os.path.join(base, "documents_orc"))
+        docs.write.json(os.path.join(base, "documents_json"))
+        li.select(*li_cols).write.option("header", True).csv(
+            os.path.join(base, "lineitem_csv")
+        )
+
+    base = scratch_dir("fmt1_", sf_dir, ["documents", "lineitem"], write)
+    orc_path = os.path.join(base, "documents_orc")
+    json_path = os.path.join(base, "documents_json")
+    csv_path = os.path.join(base, "lineitem_csv")
 
     doc_schema = (
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -792,8 +795,9 @@ def sch1_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns. The audit groups by column presence and checksums both
     cohorts; the oracle replays the split from the original table, so
     equality proves no row was dropped, duplicated, or mis-defaulted
-    by the merge. Both batches go to a new :func:`.registry.scratch_dir`
-    per call and last as long as the Spark session.
+    by the merge. Both batches are written once per session and orders
+    file, to a :func:`.registry.scratch_dir` keyed to that file, and
+    last as long as the Spark session.
 
     Scale shape: ``mergeSchema`` reconciles footers only (no data
     read) — at 100 TB you pin the merged schema from the catalog
@@ -801,15 +805,18 @@ def sch1_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read path this op proves is identical. The audit itself is one
     map-side-combined groupBy over a two-column projection."""
     orders = load(spark, sf_dir, "orders")
-    base = scratch_dir("sch1_")
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     v2 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
     )
-    v1.write.parquet(os.path.join(base, "batch=1"))
-    v2.write.parquet(os.path.join(base, "batch=2"))
+
+    def write(base: str) -> None:
+        v1.write.parquet(os.path.join(base, "batch=1"))
+        v2.write.parquet(os.path.join(base, "batch=2"))
+
+    base = scratch_dir("sch1_", sf_dir, ["orders"], write)
 
     merged = spark.read.option("mergeSchema", True).parquet(
         os.path.join(base, "batch=1"), os.path.join(base, "batch=2")

@@ -2,10 +2,11 @@
 disk: no temp view (rc1 once registered a fixed one) and no temp
 directory (st6 once left its warehouse and checkpoint), while the
 returned frame still reads its rows. A query that writes files reads
-back only what its own call wrote (sim_ivfd once probed an index
-built from older embeddings; fmt1 and sch1 once shared one directory
-per corpus name across calls), and the files go when the Spark
-session stops."""
+back only what was written from its current input (sim_ivfd once
+probed an index built from older embeddings), never rewrites what an
+earlier call's frame reads (fmt1 and sch1 once overwrote one
+directory per corpus name), and the files go when the Spark session
+stops."""
 
 from __future__ import annotations
 
@@ -76,11 +77,16 @@ def test_sim_ivfd_reads_the_current_embeddings(spark, tmp_path):
 
 @pytest.mark.parametrize("name", WRITERS)
 def test_second_call_keeps_first_frame(spark, name):
-    """A second call writes its own files: the first call's frame
-    still reads its rows afterwards."""
+    """A second call over the same input reuses the first call's files
+    and adds none: the first call's frame still reads its rows
+    afterwards."""
+    from pyspark import SparkFiles
+
     q = REGISTRY[name].fn
     first = q(spark, SF_DIR)
+    written = sorted(os.listdir(SparkFiles.getRootDirectory()))
     second = q(spark, SF_DIR)
+    assert sorted(os.listdir(SparkFiles.getRootDirectory())) == written
     assert _rows(first) == _rows(second)
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import shutil
+
 from conftest import jobs_started
 
 from aqi_analysis_apache_airflow_spark.plans import REGISTRY
@@ -50,7 +52,7 @@ def test_every_oracle_query_in_some_adversarial_suite():
 
 _LOOP = "iterates to convergence; each round runs jobs"
 _PIN = "pins an intermediate with a local checkpoint"
-_WRITE = "writes files that the returned plan reads, in a per-call scratch_dir"
+_WRITE = "writes files that the returned plan reads, once per session and input"
 
 #: Queries that start Spark jobs while their plan is built, and why.
 #: Every other query must build with none: corpus reads take their
@@ -82,7 +84,7 @@ BUILD_JOBS = {
     "ppmi1_sppmi_pairs": _PIN,
     "sch1_schema_evolution": _WRITE,
     "sil1_cluster_silhouette": _LOOP + " (the km1 fit)",
-    "sim_ivfd_topk": _WRITE + " (its IVF index, built on every call)",
+    "sim_ivfd_topk": "collects the ids of the clusters it probes",
     "snm1_sorted_neighborhood": "collects per-partition counts for the rank offsets",
     "snm2_blocking_recall": "collects per-partition counts for the rank offsets",
     "sp1_shortest_path": _LOOP + " (one round per hop)",
@@ -97,7 +99,7 @@ def _session_state(spark):
     return spark.conf.getAll, views
 
 
-def test_no_duplicate_output_columns(spark):
+def test_no_duplicate_output_columns(spark, tmp_path):
     """The driver sorts columns by name before hashing values — a
     duplicate column name would silently corrupt the comparison.
 
@@ -105,8 +107,11 @@ def test_no_duplicate_output_columns(spark):
     ``BUILD_JOBS``: a corpus read that infers its schema would start
     one per table, every time the query is built. Nor does it change
     the caller's session: its conf and temp views read the same after
-    every build."""
-    sf = "/root/testdata/sf0.001"
+    every build. The corpus is a fresh copy, so each build is the
+    first of its query over that input in the session, and the writers
+    write."""
+    sf = str(tmp_path / "corpus")
+    shutil.copytree("/root/testdata/sf0.001", sf)
     started = {}
     before = _session_state(spark)
     for name, q in sorted(REGISTRY.items()):

@@ -83,9 +83,10 @@ _UTC_ROWS: dict[str, list[tuple]] = {}
 @pytest.mark.parametrize("zone", ["America/New_York", "Asia/Kolkata", None])
 @pytest.mark.parametrize("name", STREAM_QUERIES)
 def test_stream_query_restores_session_zone(spark, monkeypatch, name, zone):
-    """An st* query neither sets nor unsets the session time zone, and
-    its rows, collected under the caller's zone (or none), equal a run
-    on a UTC session."""
+    """An st* query neither sets nor unsets the session time zone, the
+    caller's zone (or its absence) reads the same after the query ran,
+    and its rows, collected under that zone, equal a run on a UTC
+    session."""
     from pyspark.sql.conf import RuntimeConfig
 
     touched = []
@@ -108,6 +109,7 @@ def test_stream_query_restores_session_zone(spark, monkeypatch, name, zone):
             m.setattr(RuntimeConfig, "unset", spy_unset)
             out = q(spark, SF_DIR)
         got = _canon(out, ["*"])
+        assert spark.conf.get("spark.sql.session.timeZone", None) == zone
     assert "spark.sql.session.timeZone" not in touched
     assert got == _UTC_ROWS[name]
 

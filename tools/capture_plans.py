@@ -14,9 +14,10 @@ records (``RDD[7] at localCheckpoint at NativeMethodAccessorImpl.java:0``):
 for a checkpointed RDD it reads a JVM frame or ``<unknown>:0``
 depending on which queries the JVM ran before, so a query captured
 alone would otherwise differ from the same query in a full capture.
-And so is the per-call scratch directory that sim_ivfd, fmt1 and sch1
-write to and read back: its path holds the session's temp directory
-and random characters, and is written as ``<scratch>/<prefix>``.
+And so is the scratch directory that sim_ivfd, fmt1 and sch1 write
+to and read back: its path holds the session's temp directory and a
+hash of the input files' stamps, and is written as
+``<scratch>/<prefix>``.
 
 The session's cache is cleared before each query is built, as
 ``bench.py`` does: registry queries persist intermediates and leave
@@ -47,9 +48,9 @@ _LAMBDA = re.compile(r"(lambda \w+?_)\d+(?=#)")
 #: The call site of an RDD named in a scan (``RDD[N] at op at F.java:0``).
 _CALL_SITE = re.compile(r"(RDD\[N\] at \w+ at )\S+:\d+")
 #: A query's scratch directory (``plans/registry.scratch_dir``): the
-#: session's ``.../userFiles-<uuid>/`` plus the prefix and eight random
-#: characters of ``tempfile.mkdtemp``.
-_SCRATCH = re.compile(r"[^\s\[,]*/userFiles-[0-9a-f-]+/(\w*?)[a-z0-9_]{8}(?![a-z0-9_])")
+#: session's ``.../userFiles-<uuid>/`` plus the prefix and the 16 hex
+#: digits of its input key.
+_SCRATCH = re.compile(r"[^\s\[,]*/userFiles-[0-9a-f-]+/(\w*?)[0-9a-f]{16}(?![0-9a-f])")
 
 
 def _normalize(txt: str) -> str:
